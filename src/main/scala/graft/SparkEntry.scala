@@ -2248,21 +2248,12 @@ object SparkEntry {
         .select(d, col("text").cast("binary").as("payload"))
       val mixed = (familyLanes :+ textLane).reduce(_.unionAll(_))
         .repartition(s.sparkContext.defaultParallelism)
-      // localCheckpoint, not persist (r16): the triage chain creates
-      // ~200 Datasets (19 family parses × ~10 withColumns), and every
-      // creation re-runs analysis/CheckAnalysis over the WHOLE
-      // accumulated plan — with the 18-lane synth union under it, the
-      // row spent more driver time CONSTRUCTING the frame than
-      // executing it (measured: 7.4 s construct / 2.2 s of Spark
-      // executions warm; the checkpoint truncates the corpus to a
-      // leaf: 3.9 s construct, serve 3.8 → 1.2 s). Same eager
-      // materialization the persist+count gave, so the synth lanes
-      // still run exactly once.
-      val corpus = mixed.localCheckpoint(true)
-      graft.ops.Caching.materialized(
-        Binary.triage(corpus).orderBy(d)) {
-        graft.ops.Caching.releaseCheckpoint(corpus)
-      }
+      // no corpus cut: triage is one projection, so building it over
+      // the whole union plan is one analysis, and the repartition
+      // exchange already runs the synth lanes exactly once. The
+      // materialized result is the row's only cache scope; its lineage
+      // stays recomputable.
+      graft.ops.Caching.materialized(Binary.triage(mixed).orderBy(d)) {}
     }),
     // Avro OCF container triage — the FIFTEENTH family (r15): varint
     // metadata-map walk, schema-JSON signature, sync-framed block

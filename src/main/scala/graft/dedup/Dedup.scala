@@ -10,6 +10,7 @@ import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
 import graft.GraftFunctions.{hex64, tokens}
+import graft.ops.Caching.releaseCheckpoint
 
 /** Deduplication suite for training-data pipelines.
   *
@@ -280,18 +281,6 @@ object Dedup {
         (col("n_int") / (col("za.n") + col("zb.n") - col("n_int"))).as("jaccard"))
     (out, shc)
   }
-
-  /** Release the materialized blocks behind a `localCheckpoint`ed
-    * DataFrame. After this the DataFrame is NOT recomputable (the
-    * checkpoint truncated its lineage) — only call once nothing will
-    * read it again.
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** (count, xor-of-row-hashes) signature of an edge set — an O(1)-state
     * full pass used as the contraction convergence test. `bit_xor` over

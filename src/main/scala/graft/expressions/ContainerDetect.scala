@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ContainerDetectKernel {
   private val Unknown = UTF8String.fromString("unknown")
-  private val Names: Map[String, UTF8String] =
+  private[graft] val Names: Map[String, UTF8String] =
     Seq("webp", "wav", "png", "jpeg", "bmp", "gif", "pdf", "heif", "mp4",
       "zip", "tiff", "mp3", "flac", "ogg", "mkv", "avro", "parquet", "orc",
       "gzip", "zstd", "ico").map(s => s -> UTF8String.fromString(s)).toMap

@@ -27,6 +27,27 @@ object Binary {
       lit("text/plain").as("media_type"),
       length(col("text").cast("binary")).cast("long").as("n_bytes"))
 
+  /** Add a family's parse columns in ONE projection — one Dataset and
+    * one analysis, however many fields the family has. A column whose
+    * name `media` already carries is replaced in place (`withColumn`
+    * semantics); the rest append in list order.
+    */
+  private def withParsed(media: DataFrame, columns: Seq[(String, Column)]): DataFrame =
+    media.withColumns(scala.collection.immutable.ListMap(columns: _*))
+
+  /** `name -> m.name` for each named field of a kernel's struct. */
+  private def fields(m: Column, names: String*): Seq[(String, Column)] =
+    names.map(n => n -> m(n))
+
+  /** A kernel struct's boolean verdict, false where the kernel
+    * returned null (payloads it refused outright).
+    */
+  private def flag(m: Column, name: String): (String, Column) =
+    name -> coalesce(m(name), lit(false))
+
+  /** SQL integral division (`a div b`). */
+  private def div(a: Column, b: Column): Column = call_function("div", a, b)
+
   /** WAV (RIFF/PCM) container header codec, entirely in Catalyst
     * expressions. The canonical 44-byte PCM layout (RIFF chunk, `fmt `
     * subchunk of size 16, `data` subchunk immediately after — the
@@ -67,8 +88,10 @@ object Binary {
       * channels·bits, riff size and data size match the payload).
       * A pure projection — zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       val valid = (length(p) >= 44) && magic(p, 1, "RIFF") && magic(p, 9, "WAVE") &&
         magic(p, 13, "fmt ") && (leUint(p, 17, 4) === 16) && (leUint(p, 21, 2) === 1) &&
         magic(p, 37, "data")
@@ -76,18 +99,17 @@ object Binary {
         (leUint(p, 33, 2) * 8 === leUint(p, 23, 2) * leUint(p, 35, 2)) &&
         (leUint(p, 5, 4) === leUint(p, 41, 4) + 36) &&
         (leUint(p, 41, 4) === length(p) - 44)
-      media
-        .withColumn("wav_valid", valid)
-        .withColumn("channels", when(valid, leUint(p, 23, 2)))
-        .withColumn("sample_rate", when(valid, leUint(p, 25, 4)))
-        .withColumn("byte_rate", when(valid, leUint(p, 29, 4)))
-        .withColumn("block_align", when(valid, leUint(p, 33, 2)))
-        .withColumn("bits_per_sample", when(valid, leUint(p, 35, 2)))
-        .withColumn("data_bytes", when(valid, leUint(p, 41, 4)))
-        .withColumn("duration_ms",
-          when(valid && leUint(p, 29, 4) > 0,
-            expr("(data_bytes * 1000) div byte_rate")))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "wav_valid" -> valid,
+        "channels" -> when(valid, leUint(p, 23, 2)),
+        "sample_rate" -> when(valid, leUint(p, 25, 4)),
+        "byte_rate" -> when(valid, leUint(p, 29, 4)),
+        "block_align" -> when(valid, leUint(p, 33, 2)),
+        "bits_per_sample" -> when(valid, leUint(p, 35, 2)),
+        "data_bytes" -> when(valid, leUint(p, 41, 4)),
+        "duration_ms" -> when(valid && leUint(p, 29, 4) > 0,
+          div(leUint(p, 41, 4) * 1000, leUint(p, 29, 4))),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Sample-level PCM feature extraction — the DECODE step past the
@@ -262,8 +284,10 @@ object Binary {
       * length accounts for sig + IHDR + IDAT + IEND). A pure
       * projection — zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       val valid = (length(p) >= 45) && (substring(p, 1, 8) === lit(Signature)) &&
         (beUint(p, 9, 4) === 13) && magic(p, 13, "IHDR") &&
         (beUint(p, 17, 4) > 0) && (beUint(p, 21, 4) > 0)
@@ -273,19 +297,18 @@ object Binary {
       val consistent = (beUint(p, 27, 1) === 0) && (beUint(p, 28, 1) === 0) &&
         (beUint(p, 29, 1) <= 1) && depthLegal(depth, ct) &&
         (idat.isNotNull && length(p) === idat + 57)
-      media
-        .withColumn("png_valid", valid)
-        .withColumn("width", when(valid, beUint(p, 17, 4)))
-        .withColumn("height", when(valid, beUint(p, 21, 4)))
-        .withColumn("bit_depth", when(valid, depth))
-        .withColumn("color_type", when(valid, ct))
-        .withColumn("interlace", when(valid, beUint(p, 29, 1)))
-        .withColumn("channels", when(valid, channelsOf(ct)))
-        .withColumn("n_pixels", when(valid, beUint(p, 17, 4) * beUint(p, 21, 4)))
-        .withColumn("idat_bytes", when(valid, idat))
-        .withColumn("ihdr_crc_ok",
-          when(valid, beUint(p, 30, 4) === crc32(substring(p, 13, 17))))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "png_valid" -> valid,
+        "width" -> when(valid, beUint(p, 17, 4)),
+        "height" -> when(valid, beUint(p, 21, 4)),
+        "bit_depth" -> when(valid, depth),
+        "color_type" -> when(valid, ct),
+        "interlace" -> when(valid, beUint(p, 29, 1)),
+        "channels" -> when(valid, channelsOf(ct)),
+        "n_pixels" -> when(valid, beUint(p, 17, 4) * beUint(p, 21, 4)),
+        "idat_bytes" -> when(valid, idat),
+        "ihdr_crc_ok" -> when(valid, beUint(p, 30, 4) === crc32(substring(p, 13, 17))),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic PNG corpus from the documents table: IHDR fields
@@ -500,8 +523,10 @@ object Binary {
       * count, positive dimensions, frame header fits the payload).
       * A pure projection — zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       val off = GraftFunctions.jpeg_sof_offset(p)
       val valid = off.isNotNull
       val marker = beUintAt(p, off + 1, 1)
@@ -515,17 +540,17 @@ object Binary {
       val consistent = (sofLen === ncomp * 3 + 8) && precision.isin(8L, 12L) &&
         ncomp.isin(1L, 3L, 4L) && (width > 0) && (height > 0) &&
         (off + 1 + sofLen <= length(p))
-      media
-        .withColumn("jpeg_valid", valid)
-        .withColumn("sof_offset", when(valid, off))
-        .withColumn("progressive", when(valid, marker === lit(0xC2L)))
-        .withColumn("jfif_present", when(valid, jfif))
-        .withColumn("precision_bits", when(valid, precision))
-        .withColumn("height", when(valid, height))
-        .withColumn("width", when(valid, width))
-        .withColumn("n_components", when(valid, ncomp))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "jpeg_valid" -> valid,
+        "sof_offset" -> when(valid, off),
+        "progressive" -> when(valid, marker === lit(0xC2L)),
+        "jfif_present" -> when(valid, jfif),
+        "precision_bits" -> when(valid, precision),
+        "height" -> when(valid, height),
+        "width" -> when(valid, width),
+        "n_components" -> when(valid, ncomp),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic JPEG corpus from the documents table: SOI, a
@@ -877,15 +902,6 @@ object Binary {
     private[multimodal] def isBmp(p: Column): Column =
       length(p) >= 54 && substring(p, 1, 2) === lit("BM".getBytes("US-ASCII"))
 
-    /** Parse the canonical BITMAPINFOHEADER layout from `payloadCol`.
-      * Adds: `bmp_valid` (magic, DIB size 40, one plane, positive
-      * dimensions), `width`/`height`/`bits_per_pixel`/`compression`/
-      * `data_offset`/`image_bytes`/`row_stride`/`n_pixels` (null
-      * unless valid), and `header_consistent` (uncompressed BI_RGB,
-      * a true-color bpp, data at offset 54, image size = aligned
-      * stride × height, declared file size = 54 + image size = the
-      * physical payload length). A pure projection — zero shuffles.
-      */
     /** Sign-extended little-endian int32 read: real-world BMPs encode
       * top-down row order as a NEGATIVE height, which an unsigned read
       * would misreport as a ~4e9 "valid" height.
@@ -895,8 +911,19 @@ object Binary {
       when(u >= (1L << 31), u - (1L << 32)).otherwise(u)
     }
 
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    /** Parse the canonical BITMAPINFOHEADER layout from `payloadCol`.
+      * Adds: `bmp_valid` (magic, DIB size 40, one plane, positive
+      * dimensions), `width`/`height`/`bits_per_pixel`/`compression`/
+      * `data_offset`/`image_bytes`/`row_stride`/`n_pixels` (null
+      * unless valid), and `header_consistent` (uncompressed BI_RGB,
+      * a true-color bpp, data at offset 54, image size = aligned
+      * stride × height, declared file size = 54 + image size = the
+      * physical payload length). A pure projection — zero shuffles.
+      */
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       import Wav.leUint
       val widthS = leSint32(p, 19)
       val heightS = leSint32(p, 23)
@@ -914,18 +941,18 @@ object Binary {
         (leUint(p, 35, 4) === stride.cast("long") * height) &&
         (leUint(p, 3, 4) === leUint(p, 35, 4) + 54) &&
         (length(p) === leUint(p, 3, 4))
-      media
-        .withColumn("bmp_valid", valid)
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("bmp_top_down", when(valid, heightS < 0))
-        .withColumn("bits_per_pixel", when(valid, bpp))
-        .withColumn("compression", when(valid, leUint(p, 31, 4)))
-        .withColumn("data_offset", when(valid, leUint(p, 11, 4)))
-        .withColumn("image_bytes", when(valid, leUint(p, 35, 4)))
-        .withColumn("row_stride", when(valid, stride.cast("long")))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "bmp_valid" -> valid,
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "bmp_top_down" -> when(valid, heightS < 0),
+        "bits_per_pixel" -> when(valid, bpp),
+        "compression" -> when(valid, leUint(p, 31, 4)),
+        "data_offset" -> when(valid, leUint(p, 11, 4)),
+        "image_bytes" -> when(valid, leUint(p, 35, 4)),
+        "row_stride" -> when(valid, stride.cast("long")),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Pixel-level decode for uncompressed 24-bpp BMPs — the image
@@ -1032,34 +1059,33 @@ object Binary {
       * the physical length is exactly header + GCT + trailer — the
       * minimal-stream layout the synth writes). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       import Wav.leUint
       val width = leUint(p, 7, 2)
       val height = leUint(p, 9, 2)
       val packed = leUint(p, 11, 1)
       val hasGct = packed >= 128
-      val gctEntries = expr("shiftleft(1L, cast(pmod(__gif_packed, 8) + 1 as int))")
+      val gctEntries =
+        call_function("shiftleft", lit(1L), (pmod(packed, lit(8)) + 1).cast("int"))
       val valid = isGif(p) && width > 0 && height > 0
-      val staged = media.withColumn("__gif_packed", packed)
       val gctBytes = when(hasGct, gctEntries * 3L).otherwise(0L)
       val consistent =
         substring(p, -1, 1) === lit(Array(0x3B.toByte)) &&
           length(p).cast("long") === lit(13L) + gctBytes + 1L
-      staged
-        .withColumn("gif_valid", valid)
-        .withColumn("version",
-          when(valid, concat(lit("8"),
-            substring(p, 5, 2).cast("string"))))
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("has_gct", when(valid, hasGct))
-        .withColumn("gct_entries", when(valid && hasGct, gctEntries))
-        .withColumn("gct_bytes", when(valid && hasGct, gctEntries * 3L))
-        .withColumn("bg_index", when(valid, leUint(p, 12, 1)))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
-        .drop("__gif_packed")
+      Seq(
+        "gif_valid" -> valid,
+        "version" -> when(valid, concat(lit("8"), substring(p, 5, 2).cast("string"))),
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "has_gct" -> when(valid, hasGct),
+        "gct_entries" -> when(valid && hasGct, gctEntries),
+        "gct_bytes" -> when(valid && hasGct, gctEntries * 3L),
+        "bg_index" -> when(valid, leUint(p, 12, 1)),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Channel statistics via a REAL LZW decode of the first image —
@@ -1260,8 +1286,10 @@ object Binary {
       * real multi-chunk files stay valid but inconsistent, same as
       * the other families' strict lanes). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       val fourcc = substring(p, 13, 4)
       val riffSize = leUint(p, 5, 4)
       val chunk = leUint(p, 17, 4)
@@ -1281,22 +1309,19 @@ object Binary {
       // VP8L: signature byte then the packed u32le dimension word
       val lBits = leUint(p, 22, 4)
       val vp8lW = pmod(lBits, lit(16384L)) + 1
-      val vp8lH = pmod(expr("__webp_lbits div 16384"), lit(16384L)) + 1
-      val vp8lAlpha = expr("(__webp_lbits div 268435456) % 2") === 1
-      val vp8lVersion = expr("__webp_lbits div 536870912")
+      val vp8lH = pmod(div(lBits, lit(16384)), lit(16384L)) + 1
+      val vp8lAlpha = div(lBits, lit(268435456)) % 2 === 1
+      val vp8lVersion = div(lBits, lit(536870912))
       val vp8lOk = length(p) >= 26 && chunk >= 5 &&
         substring(p, 21, 1) === lit(Array[Byte](0x2F.toByte)) &&
         vp8lVersion === 0
       // VP8X: feature flags byte + 3 reserved + u24le canvas dims
       val xFlags = leUint(p, 21, 1)
-      val xAlpha = expr("(__webp_xflags div 16) % 2") === 1
-      val xAnim = expr("(__webp_xflags div 2) % 2") === 1
+      val xAlpha = div(xFlags, lit(16)) % 2 === 1
+      val xAnim = div(xFlags, lit(2)) % 2 === 1
       val xW = leUint(p, 25, 3) + 1
       val xH = leUint(p, 28, 3) + 1
       val vp8xOk = length(p) >= 30 && chunk === 10
-      val staged = media
-        .withColumn("__webp_lbits", lBits)
-        .withColumn("__webp_xflags", xFlags)
       val valid = isWebp(p) && length(p) >= 20 &&
         ((isVp8 && vp8Ok) || (isVp8l && vp8lOk) || (isVp8x && vp8xOk))
       val width = when(isVp8, vp8W).when(isVp8l, vp8lW).otherwise(xW)
@@ -1304,27 +1329,21 @@ object Binary {
       val consistent =
         riffSize === length(p).cast("long") - 8 &&
           riffSize === lit(12L) + chunk + pmod(chunk, lit(2L))
-      staged
-        .withColumn("webp_valid", valid)
-        .withColumn("format",
-          when(valid && isVp8, "VP8").when(valid && isVp8l, "VP8L")
-            .when(valid && isVp8x, "VP8X"))
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("has_alpha",
-          when(valid, when(isVp8l, vp8lAlpha).when(isVp8x, xAlpha)
-            .otherwise(lit(false))))
-        .withColumn("has_animation",
-          when(valid, isVp8x && xAnim))
-        .withColumn("x_scale",
-          when(valid && isVp8, ((wCode - vp8W) / 16384).cast("long")))
-        .withColumn("y_scale",
-          when(valid && isVp8, ((hCode - vp8H) / 16384).cast("long")))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("riff_size", when(valid, riffSize))
-        .withColumn("chunk_bytes", when(valid, chunk))
-        .withColumn("header_consistent", when(valid, consistent))
-        .drop("__webp_lbits", "__webp_xflags")
+      Seq(
+        "webp_valid" -> valid,
+        "format" -> when(valid && isVp8, "VP8").when(valid && isVp8l, "VP8L")
+          .when(valid && isVp8x, "VP8X"),
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "has_alpha" -> when(valid, when(isVp8l, vp8lAlpha).when(isVp8x, xAlpha)
+          .otherwise(lit(false))),
+        "has_animation" -> when(valid, isVp8x && xAnim),
+        "x_scale" -> when(valid && isVp8, ((wCode - vp8W) / 16384).cast("long")),
+        "y_scale" -> when(valid && isVp8, ((hCode - vp8H) / 16384).cast("long")),
+        "n_pixels" -> when(valid, width * height),
+        "riff_size" -> when(valid, riffSize),
+        "chunk_bytes" -> when(valid, chunk),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic WebP streams over the docs table, one of the
@@ -1479,30 +1498,17 @@ object Binary {
       * (strip | tile | none) with unit count and geometry, `n_pixels`,
       * and a bounds-consistency verdict over every referenced offset.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.TiffMeta(gexpr(col(payloadCol))))
-      val valid = coalesce(col("__t.tiff_valid"), lit(false))
-      media
-        .withColumn("__t", m)
-        .withColumn("tiff_valid", valid)
-        .withColumn("byte_order", col("__t.byte_order"))
-        .withColumn("n_ifds", col("__t.n_ifds"))
-        .withColumn("n_ifd0_entries", col("__t.n_ifd0_entries"))
-        .withColumn("width", col("__t.width"))
-        .withColumn("height", col("__t.height"))
-        .withColumn("bits_per_sample", col("__t.bits_per_sample"))
-        .withColumn("samples_per_pixel", col("__t.samples_per_pixel"))
-        .withColumn("compression", col("__t.compression"))
-        .withColumn("photometric", col("__t.photometric"))
-        .withColumn("layout", col("__t.layout"))
-        .withColumn("n_units", col("__t.n_units"))
-        .withColumn("rows_per_strip", col("__t.rows_per_strip"))
-        .withColumn("tile_w", col("__t.tile_w"))
-        .withColumn("tile_h", col("__t.tile_h"))
-        .withColumn("n_pixels",
-          when(col("tiff_valid"), col("__t.width") * col("__t.height")))
-        .withColumn("header_consistent", col("__t.header_consistent"))
-        .drop("__t")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.TiffMeta(gexpr(p)))
+      val valid = coalesce(m("tiff_valid"), lit(false))
+      Seq("tiff_valid" -> valid) ++ fields(m, "byte_order", "n_ifds", "n_ifd0_entries",
+        "width", "height", "bits_per_sample", "samples_per_pixel", "compression",
+        "photometric", "layout", "n_units", "rows_per_strip", "tile_w", "tile_h") ++ Seq(
+        "n_pixels" -> when(valid, m("width") * m("height")),
+        "header_consistent" -> m("header_consistent"))
     }
 
     /** Deterministic TIFF payloads over the docs table (see
@@ -1602,24 +1608,14 @@ object Binary {
       * VBR flag, and the wall-to-wall `consistent` verdict. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.Mp3Meta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__m", m)
-        .withColumn("mp3_valid", coalesce(col("__m.mp3_valid"), lit(false)))
-        .withColumn("has_id3v2", col("__m.has_id3v2"))
-        .withColumn("id3v2_bytes", col("__m.id3v2_bytes"))
-        .withColumn("mpeg_version", col("__m.mpeg_version"))
-        .withColumn("layer", col("__m.layer"))
-        .withColumn("bitrate_kbps", col("__m.bitrate_kbps"))
-        .withColumn("sample_rate", col("__m.sample_rate"))
-        .withColumn("channel_mode", col("__m.channel_mode"))
-        .withColumn("n_frames", col("__m.n_frames"))
-        .withColumn("duration_ms", col("__m.duration_ms"))
-        .withColumn("has_id3v1", col("__m.has_id3v1"))
-        .withColumn("is_vbr", col("__m.is_vbr"))
-        .withColumn("header_consistent", col("__m.consistent"))
-        .drop("__m")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.Mp3Meta(gexpr(p)))
+      flag(m, "mp3_valid") +: fields(m, "has_id3v2", "id3v2_bytes", "mpeg_version",
+        "layer", "bitrate_kbps", "sample_rate", "channel_mode", "n_frames", "duration_ms",
+        "has_id3v1", "is_vbr") :+ ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic MP3 payloads over the docs table (see
@@ -1662,22 +1658,14 @@ object Binary {
       * bounds, and the chain-in-bounds `consistent` verdict. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.FlacMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__f", m)
-        .withColumn("flac_valid", coalesce(col("__f.flac_valid"), lit(false)))
-        .withColumn("sample_rate", col("__f.sample_rate"))
-        .withColumn("channels", col("__f.channels"))
-        .withColumn("bits_per_sample", col("__f.bits_per_sample"))
-        .withColumn("total_samples", col("__f.total_samples"))
-        .withColumn("duration_ms", col("__f.duration_ms"))
-        .withColumn("n_blocks", col("__f.n_blocks"))
-        .withColumn("has_vorbis_comment", col("__f.has_vorbis_comment"))
-        .withColumn("min_block_size", col("__f.min_block_size"))
-        .withColumn("max_block_size", col("__f.max_block_size"))
-        .withColumn("header_consistent", col("__f.consistent"))
-        .drop("__f")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.FlacMeta(gexpr(p)))
+      flag(m, "flac_valid") +: fields(m, "sample_rate", "channels", "bits_per_sample",
+        "total_samples", "duration_ms", "n_blocks", "has_vorbis_comment",
+        "min_block_size", "max_block_size") :+ ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic FLAC payloads over the docs table (see
@@ -1704,20 +1692,9 @@ object Binary {
       */
     def sampleStats(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
       val m = gcol(graft.expressions.FlacAudioStats(gexpr(col(payloadCol))))
-      media
-        .withColumn("__f", m)
-        .withColumn("flac_valid", coalesce(col("__f.flac_valid"), lit(false)))
-        .withColumn("decode_ok", coalesce(col("__f.decode_ok"), lit(false)))
-        .withColumn("channels", col("__f.channels"))
-        .withColumn("bits_per_sample", col("__f.bits_per_sample"))
-        .withColumn("n_frames", col("__f.n_frames"))
-        .withColumn("n_samples", col("__f.n_samples"))
-        .withColumn("sample_sum", col("__f.sample_sum"))
-        .withColumn("sample_sum_sq", col("__f.sample_sum_sq"))
-        .withColumn("peak_abs", col("__f.peak_abs"))
-        .withColumn("crc_ok", col("__f.crc_ok"))
-        .withColumn("matches_streaminfo", col("__f.matches_streaminfo"))
-        .drop("__f")
+      withParsed(media, Seq(flag(m, "flac_valid"), flag(m, "decode_ok")) ++
+        fields(m, "channels", "bits_per_sample", "n_frames", "n_samples", "sample_sum",
+          "sample_sum_sq", "peak_abs", "crc_ok", "matches_streaminfo"))
     }
 
     /** Deterministic FLAC AUDIO payloads — real encoded frames whose
@@ -1779,22 +1756,14 @@ object Binary {
       * single-stream structural `consistent` verdict. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.OggMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__o", m)
-        .withColumn("ogg_valid", coalesce(col("__o.ogg_valid"), lit(false)))
-        .withColumn("codec", col("__o.codec"))
-        .withColumn("sample_rate", col("__o.sample_rate"))
-        .withColumn("channels", col("__o.channels"))
-        .withColumn("pre_skip", col("__o.pre_skip"))
-        .withColumn("n_pages", col("__o.n_pages"))
-        .withColumn("n_packets", col("__o.n_packets"))
-        .withColumn("last_granule", col("__o.last_granule"))
-        .withColumn("duration_ms", col("__o.duration_ms"))
-        .withColumn("crc_ok", col("__o.crc_ok"))
-        .withColumn("header_consistent", col("__o.consistent"))
-        .drop("__o")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.OggMeta(gexpr(p)))
+      flag(m, "ogg_valid") +: fields(m, "codec", "sample_rate", "channels", "pre_skip",
+        "n_pages", "n_packets", "last_granule", "duration_ms", "crc_ok") :+
+        ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic OGG payloads over the docs table (see
@@ -1822,22 +1791,10 @@ object Binary {
       */
     def sampleStats(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
       val m = gcol(graft.expressions.OggFlacStats(gexpr(col(payloadCol))))
-      media
-        .withColumn("__o", m)
-        .withColumn("oggflac_valid", coalesce(col("__o.oggflac_valid"), lit(false)))
-        .withColumn("n_pages", col("__o.n_pages"))
-        .withColumn("pages_crc_ok", col("__o.pages_crc_ok"))
-        .withColumn("decode_ok", coalesce(col("__o.decode_ok"), lit(false)))
-        .withColumn("channels", col("__o.channels"))
-        .withColumn("bits_per_sample", col("__o.bits_per_sample"))
-        .withColumn("n_frames", col("__o.n_frames"))
-        .withColumn("n_samples", col("__o.n_samples"))
-        .withColumn("sample_sum", col("__o.sample_sum"))
-        .withColumn("sample_sum_sq", col("__o.sample_sum_sq"))
-        .withColumn("peak_abs", col("__o.peak_abs"))
-        .withColumn("frame_crc_ok", col("__o.frame_crc_ok"))
-        .withColumn("matches_streaminfo", col("__o.matches_streaminfo"))
-        .drop("__o")
+      withParsed(media, Seq(flag(m, "oggflac_valid")) ++ fields(m, "n_pages", "pages_crc_ok") ++
+        Seq(flag(m, "decode_ok")) ++ fields(m, "channels", "bits_per_sample", "n_frames",
+          "n_samples", "sample_sum", "sample_sum_sq", "peak_abs", "frame_crc_ok",
+          "matches_streaminfo"))
     }
 
     /** Deterministic Ogg-FLAC AUDIO payloads — real CRC'd pages
@@ -1898,25 +1855,15 @@ object Binary {
       * track's codec/channels/rate, cluster count, and the
       * every-element-in-bounds `consistent` verdict. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.MkvMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__m", m)
-        .withColumn("mkv_valid", coalesce(col("__m.mkv_valid"), lit(false)))
-        .withColumn("doctype", col("__m.doctype"))
-        .withColumn("doctype_version", col("__m.doctype_version"))
-        .withColumn("timecode_scale", col("__m.timecode_scale"))
-        .withColumn("duration_ms", col("__m.duration_ms"))
-        .withColumn("n_tracks", col("__m.n_tracks"))
-        .withColumn("video_codec", col("__m.video_codec"))
-        .withColumn("pixel_width", col("__m.pixel_width"))
-        .withColumn("pixel_height", col("__m.pixel_height"))
-        .withColumn("audio_codec", col("__m.audio_codec"))
-        .withColumn("audio_channels", col("__m.audio_channels"))
-        .withColumn("audio_sample_rate", col("__m.audio_sample_rate"))
-        .withColumn("n_clusters", col("__m.n_clusters"))
-        .withColumn("header_consistent", col("__m.consistent"))
-        .drop("__m")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.MkvMeta(gexpr(p)))
+      flag(m, "mkv_valid") +: fields(m, "doctype", "doctype_version", "timecode_scale",
+        "duration_ms", "n_tracks", "video_codec", "pixel_width", "pixel_height",
+        "audio_codec", "audio_channels", "audio_sample_rate", "n_clusters") :+
+        ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic Matroska/WebM payloads over the docs table (see
@@ -1961,22 +1908,14 @@ object Binary {
       * integrity verdict, and the wall-to-wall `consistent` verdict.
       * Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.AvroMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__a", m)
-        .withColumn("avro_valid", coalesce(col("__a.avro_valid"), lit(false)))
-        .withColumn("codec", col("__a.codec"))
-        .withColumn("schema_type", col("__a.schema_type"))
-        .withColumn("schema_name", col("__a.schema_name"))
-        .withColumn("schema_bytes", col("__a.schema_bytes"))
-        .withColumn("n_meta_entries", col("__a.n_meta_entries"))
-        .withColumn("n_blocks", col("__a.n_blocks"))
-        .withColumn("n_records", col("__a.n_records"))
-        .withColumn("data_bytes", col("__a.data_bytes"))
-        .withColumn("sync_ok", col("__a.sync_ok"))
-        .withColumn("header_consistent", col("__a.consistent"))
-        .drop("__a")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.AvroMeta(gexpr(p)))
+      flag(m, "avro_valid") +: fields(m, "codec", "schema_type", "schema_name",
+        "schema_bytes", "n_meta_entries", "n_blocks", "n_records", "data_bytes",
+        "sync_ok") :+ ("header_consistent" -> m("consistent"))
     }
 
     /** Flat-record decode tier: every record of a primitives-only
@@ -1988,17 +1927,9 @@ object Binary {
       */
     def recordStats(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
       val m = gcol(graft.expressions.AvroRecordStats(gexpr(col(payloadCol))))
-      media
-        .withColumn("__a", m)
-        .withColumn("avro_valid", coalesce(col("__a.avro_valid"), lit(false)))
-        .withColumn("decode_ok", coalesce(col("__a.decode_ok"), lit(false)))
-        .withColumn("n_fields", col("__a.n_fields"))
-        .withColumn("n_records", col("__a.n_records"))
-        .withColumn("int_sum", col("__a.int_sum"))
-        .withColumn("string_bytes", col("__a.string_bytes"))
-        .withColumn("bool_trues", col("__a.bool_trues"))
-        .withColumn("double_sum", col("__a.double_sum"))
-        .drop("__a")
+      withParsed(media, Seq(flag(m, "avro_valid"), flag(m, "decode_ok")) ++
+        fields(m, "n_fields", "n_records", "int_sum", "string_bytes", "bool_trues",
+          "double_sum"))
     }
 
     /** Deterministic Avro payloads over the docs table (see
@@ -2043,21 +1974,14 @@ object Binary {
       * integrity verdict, and the footer byte length. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.ParquetMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__p", m)
-        .withColumn("parquet_valid", coalesce(col("__p.parquet_valid"), lit(false)))
-        .withColumn("version", col("__p.version"))
-        .withColumn("num_rows", col("__p.num_rows"))
-        .withColumn("n_row_groups", col("__p.n_row_groups"))
-        .withColumn("n_columns", col("__p.n_columns"))
-        .withColumn("n_schema_elements", col("__p.n_schema_elements"))
-        .withColumn("total_byte_size", col("__p.total_byte_size"))
-        .withColumn("created_by", col("__p.created_by"))
-        .withColumn("rows_match", col("__p.rows_match"))
-        .withColumn("footer_bytes", col("__p.footer_bytes"))
-        .drop("__p")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.ParquetMeta(gexpr(p)))
+      flag(m, "parquet_valid") +: fields(m, "version", "num_rows", "n_row_groups",
+        "n_columns", "n_schema_elements", "total_byte_size", "created_by", "rows_match",
+        "footer_bytes")
     }
 
     /** Deterministic Parquet payloads over the docs table (see
@@ -2087,21 +2011,9 @@ object Binary {
       */
     def pageStats(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
       val m = gcol(graft.expressions.ParquetPages(gexpr(col(payloadCol))))
-      media
-        .withColumn("__q", m)
-        .withColumn("pages_valid", coalesce(col("__q.pages_valid"), lit(false)))
-        .withColumn("n_chunks", col("__q.n_chunks"))
-        .withColumn("codec", col("__q.codec"))
-        .withColumn("n_pages", col("__q.n_pages"))
-        .withColumn("n_data_pages", col("__q.n_data_pages"))
-        .withColumn("n_dict_pages", col("__q.n_dict_pages"))
-        .withColumn("page_values", col("__q.page_values"))
-        .withColumn("values_match", col("__q.values_match"))
-        .withColumn("n_decoded_chunks", col("__q.n_decoded_chunks"))
-        .withColumn("int64_sum", col("__q.int64_sum"))
-        .withColumn("uncompressed_bytes", col("__q.uncompressed_bytes"))
-        .withColumn("compressed_bytes", col("__q.compressed_bytes"))
-        .drop("__q")
+      withParsed(media, flag(m, "pages_valid") +: fields(m, "n_chunks", "codec", "n_pages",
+        "n_data_pages", "n_dict_pages", "page_values", "values_match", "n_decoded_chunks",
+        "int64_sum", "uncompressed_bytes", "compressed_bytes"))
     }
 
     /** Deterministic COMPLETE parquet files over the docs table (see
@@ -2143,19 +2055,13 @@ object Binary {
       * ISIZE verdicts, and wall-to-wall `consistent`. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.GzipMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__g", m)
-        .withColumn("gzip_valid", coalesce(col("__g.gzip_valid"), lit(false)))
-        .withColumn("n_members", col("__g.n_members"))
-        .withColumn("uncompressed_bytes", col("__g.uncompressed_bytes"))
-        .withColumn("n_named", col("__g.n_named"))
-        .withColumn("first_mtime", col("__g.first_mtime"))
-        .withColumn("crc_ok", col("__g.crc_ok"))
-        .withColumn("isize_ok", col("__g.isize_ok"))
-        .withColumn("header_consistent", col("__g.consistent"))
-        .drop("__g")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.GzipMeta(gexpr(p)))
+      flag(m, "gzip_valid") +: fields(m, "n_members", "uncompressed_bytes", "n_named",
+        "first_mtime", "crc_ok", "isize_ok") :+ ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic multi-member gzip payloads over the docs table
@@ -2175,13 +2081,6 @@ object Binary {
     }
   }
 
-  /** ICO container triage + pixel tier — the TWENTIETH family: the
-    * favicon ([[graft.expressions.IcoMetaKernel]]): ICONDIR walk
-    * with the 0-means-256 rule, PNG entries through the real zlib
-    * inflate + scanline unfilter, headerless doubled-height DIB
-    * entries decoded directly. One codegen kernel pass, pure
-    * projection.
-    */
   /** AVIF/HEIC triage — the TWENTY-FIRST family (r15): HEIF images
     * in ISO BMFF, split off the generic `ftyp` lane by brand
     * ([[graft.expressions.AvifMetaKernel]] — the FullBox `meta`
@@ -2194,22 +2093,19 @@ object Binary {
       * with real dimensions), brand, dims, item/alpha/exif fields,
       * pixel count, mdat size. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.AvifMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__h", m)
-        .withColumn("heif_valid",
-          col("__h").isNotNull && col("__h.width").isNotNull)
-        .withColumn("brand", col("__h.brand"))
-        .withColumn("heif_width", col("__h.width"))
-        .withColumn("heif_height", col("__h.height"))
-        .withColumn("n_items", col("__h.n_items"))
-        .withColumn("primary_type", col("__h.primary_type"))
-        .withColumn("has_alpha", col("__h.has_alpha"))
-        .withColumn("has_exif", col("__h.has_exif"))
-        .withColumn("n_pixels", col("__h.width") * col("__h.height"))
-        .withColumn("mdat_bytes", col("__h.mdat_bytes"))
-        .drop("__h")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.AvifMeta(gexpr(p)))
+      Seq(
+        "heif_valid" -> (m.isNotNull && m("width").isNotNull),
+        "brand" -> m("brand"),
+        "heif_width" -> m("width"),
+        "heif_height" -> m("height")) ++
+        fields(m, "n_items", "primary_type", "has_alpha", "has_exif") ++ Seq(
+        "n_pixels" -> m("width") * m("height"),
+        "mdat_bytes" -> m("mdat_bytes"))
     }
 
     /** Deterministic HEIF payloads over the docs table (see
@@ -2228,6 +2124,13 @@ object Binary {
     }
   }
 
+  /** ICO container triage + pixel tier — the TWENTIETH family: the
+    * favicon ([[graft.expressions.IcoMetaKernel]]): ICONDIR walk
+    * with the 0-means-256 rule, PNG entries through the real zlib
+    * inflate + scanline unfilter, headerless doubled-height DIB
+    * entries decoded directly. One codegen kernel pass, pure
+    * projection.
+    */
   object Ico {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
@@ -2245,22 +2148,14 @@ object Binary {
       * `dims_match` verdict, and the entry byte total. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.IcoMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__i", m)
-        .withColumn("ico_valid", coalesce(col("__i.ico_valid"), lit(false)))
-        .withColumn("n_icons", col("__i.n_icons"))
-        .withColumn("n_png_entries", col("__i.n_png_entries"))
-        .withColumn("n_dib_entries", col("__i.n_dib_entries"))
-        .withColumn("max_width", col("__i.max_width"))
-        .withColumn("max_height", col("__i.max_height"))
-        .withColumn("entries_ok", col("__i.entries_ok"))
-        .withColumn("n_decoded", col("__i.n_decoded"))
-        .withColumn("pixel_sum", col("__i.pixel_sum"))
-        .withColumn("dims_match", col("__i.dims_match"))
-        .withColumn("total_image_bytes", col("__i.total_image_bytes"))
-        .drop("__i")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.IcoMeta(gexpr(p)))
+      flag(m, "ico_valid") +: fields(m, "n_icons", "n_png_entries", "n_dib_entries",
+        "max_width", "max_height", "entries_ok", "n_decoded", "pixel_sum", "dims_match",
+        "total_image_bytes")
     }
 
     /** Deterministic ICO payloads over the docs table (see
@@ -2309,29 +2204,16 @@ object Binary {
       * log / single-segment / dictionary ID, XXH64 `checksum_ok`,
       * `decode_ok`, and wall-to-wall `consistent`. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.ZstdMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__z", m)
-        .withColumn("zstd_valid", coalesce(col("__z.zstd_valid"), lit(false)))
-        .withColumn("n_frames", col("__z.n_frames"))
-        .withColumn("n_skippable", col("__z.n_skippable"))
-        .withColumn("skippable_bytes", col("__z.skippable_bytes"))
-        .withColumn("n_blocks", col("__z.n_blocks"))
-        .withColumn("n_rle_blocks", col("__z.n_rle_blocks"))
-        .withColumn("n_compressed_blocks", col("__z.n_compressed_blocks"))
-        .withColumn("uncompressed_bytes", col("__z.uncompressed_bytes"))
-        .withColumn("n_declared", col("__z.n_declared"))
-        .withColumn("declared_bytes", col("__z.declared_bytes"))
-        .withColumn("size_match", col("__z.size_match"))
-        .withColumn("single_segment", col("__z.single_segment"))
-        .withColumn("window_log", col("__z.window_log"))
-        .withColumn("dict_id", col("__z.dict_id"))
-        .withColumn("n_checksummed", col("__z.n_checksummed"))
-        .withColumn("checksum_ok", col("__z.checksum_ok"))
-        .withColumn("decode_ok", col("__z.decode_ok"))
-        .withColumn("header_consistent", col("__z.consistent"))
-        .drop("__z")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.ZstdMeta(gexpr(p)))
+      flag(m, "zstd_valid") +: fields(m, "n_frames", "n_skippable", "skippable_bytes",
+        "n_blocks", "n_rle_blocks", "n_compressed_blocks", "uncompressed_bytes",
+        "n_declared", "declared_bytes", "size_match", "single_segment", "window_log",
+        "dict_id", "n_checksummed", "checksum_ok", "decode_ok") :+
+        ("header_consistent" -> m("consistent"))
     }
 
     /** Deterministic multi-frame zstd payloads over the docs table
@@ -2376,24 +2258,15 @@ object Binary {
       * verdict, type/column counts, content length, writer version,
       * footer/metadata byte lengths. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.OrcMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__o", m)
-        .withColumn("orc_valid", coalesce(col("__o.orc_valid"), lit(false)))
-        .withColumn("compression", col("__o.compression"))
-        .withColumn("footer_decoded", coalesce(col("__o.footer_decoded"), lit(false)))
-        .withColumn("num_rows", col("__o.num_rows"))
-        .withColumn("n_stripes", col("__o.n_stripes"))
-        .withColumn("stripe_rows", col("__o.stripe_rows"))
-        .withColumn("n_types", col("__o.n_types"))
-        .withColumn("n_cols", col("__o.n_cols"))
-        .withColumn("content_length", col("__o.content_length"))
-        .withColumn("writer_version", col("__o.writer_version"))
-        .withColumn("footer_bytes", col("__o.footer_bytes"))
-        .withColumn("metadata_bytes", col("__o.metadata_bytes"))
-        .withColumn("stripe_rows_match", col("__o.stripe_rows_match"))
-        .drop("__o")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.OrcMeta(gexpr(p)))
+      Seq(flag(m, "orc_valid"), "compression" -> m("compression"),
+        flag(m, "footer_decoded")) ++ fields(m, "num_rows", "n_stripes", "stripe_rows",
+        "n_types", "n_cols", "content_length", "writer_version", "footer_bytes",
+        "metadata_bytes", "stripe_rows_match")
     }
 
     /** Deterministic ORC payloads over the docs table (see
@@ -2432,8 +2305,10 @@ object Binary {
       * `mvhd_version`, `timescale`, `duration` (movie units),
       * `duration_ms` (exact integer arithmetic). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
       val nTop = org.apache.spark.sql.GraftColumnBridge.column(
         graft.expressions.Mp4TopBoxes(
           org.apache.spark.sql.GraftColumnBridge.expression(p)))
@@ -2445,18 +2320,16 @@ object Binary {
         .otherwise(Jpeg.beUintAt(p, mvhd + 28, 4))
       val duration = when(ver === 0, Jpeg.beUintAt(p, mvhd + 24, 4))
         .otherwise(Jpeg.beUintAt(p, mvhd + 32, 8))
-      media
-        .withColumn("mp4_valid", valid)
-        .withColumn("major_brand",
-          when(valid, p.substr((ftyp + 8).cast("int"), lit(4)).cast("string")))
-        .withColumn("n_top_boxes", when(valid, nTop))
-        .withColumn("has_mdat", when(valid, boxOff(p, "mdat").isNotNull))
-        .withColumn("mvhd_version", when(valid, ver))
-        .withColumn("timescale", when(valid, timescale))
-        .withColumn("duration", when(valid, duration))
-        .withColumn("duration_ms",
-          when(valid && timescale > 0,
-            expr("(duration * 1000) div timescale")))
+      Seq(
+        "mp4_valid" -> valid,
+        "major_brand" ->
+          when(valid, p.substr((ftyp + 8).cast("int"), lit(4)).cast("string")),
+        "n_top_boxes" -> when(valid, nTop),
+        "has_mdat" -> when(valid, boxOff(p, "mdat").isNotNull),
+        "mvhd_version" -> when(valid, ver),
+        "timescale" -> when(valid, timescale),
+        "duration" -> when(valid, duration),
+        "duration_ms" -> when(valid && timescale > 0, div(duration * 1000, timescale)))
     }
 
     /** Deterministic BMFF skeletons: ftyp (brand rotates), an
@@ -2542,9 +2415,12 @@ object Binary {
       * `header_consistent` (back-pointer ok and the file ends at
       * `%%EOF`). Pure projection — zero shuffles.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val s = col(payloadCol).cast("string")
-      val valid = isPdf(col(payloadCol)) && s.contains("%%EOF")
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      withParsed(media, columns(col(payloadCol)))
+
+    private[multimodal] def columns(p: Column): Seq[(String, Column)] = {
+      val s = p.cast("string")
+      val valid = isPdf(p) && s.contains("%%EOF")
       val sx = regexp_extract(s, "startxref\\s+([0-9]+)\\s*%%EOF", 1)
       // bounded probe slice at the declared offset: enough bytes to
       // see `N G obj << … /Type /XRef` without re-scanning the file
@@ -2553,24 +2429,21 @@ object Binary {
       val streamAt = sx =!= "" &&
         atOff.rlike("(?s)^[0-9]+ [0-9]+ obj.{0,200}?/Type\\s*/XRef")
       val sxOk = tableAt || streamAt
-      media
-        .withColumn("pdf_valid", valid)
-        .withColumn("version", when(valid, substring(s, 6, 3)))
-        .withColumn("n_objects", when(valid,
-          size(regexp_extract_all(s, lit("[0-9]+ [0-9]+ obj"), lit(0))).cast("long")))
-        .withColumn("n_streams", when(valid,
-          size(regexp_extract_all(s, lit("endstream"), lit(0))).cast("long")))
-        .withColumn("n_pages", when(valid,
-          size(regexp_extract_all(s, lit("/Type /Page "), lit(0))).cast("long")))
-        .withColumn("encrypted", when(valid, s.contains("/Encrypt")))
-        .withColumn("xref_layout", when(valid,
-          when(tableAt, "table").when(streamAt, "stream").otherwise("none")))
-        .withColumn("declared_size", when(valid,
-          nullif(regexp_extract(s, "/Size ([0-9]+)", 1), lit(""))
-            .cast("long")))
-        .withColumn("startxref_ok", when(valid, sxOk))
-        .withColumn("header_consistent",
-          when(valid, sxOk && s.endsWith("%%EOF")))
+      def count(regex: String): Column =
+        size(regexp_extract_all(s, lit(regex), lit(0))).cast("long")
+      Seq(
+        "pdf_valid" -> valid,
+        "version" -> when(valid, substring(s, 6, 3)),
+        "n_objects" -> when(valid, count("[0-9]+ [0-9]+ obj")),
+        "n_streams" -> when(valid, count("endstream")),
+        "n_pages" -> when(valid, count("/Type /Page ")),
+        "encrypted" -> when(valid, s.contains("/Encrypt")),
+        "xref_layout" -> when(valid,
+          when(tableAt, "table").when(streamAt, "stream").otherwise("none")),
+        "declared_size" -> when(valid,
+          nullif(regexp_extract(s, "/Size ([0-9]+)", 1), lit("")).cast("long")),
+        "startxref_ok" -> when(valid, sxOk),
+        "header_consistent" -> when(valid, sxOk && s.endsWith("%%EOF")))
     }
 
     /** Deterministic minimal-but-legal PDF skeletons: catalog + pages
@@ -2800,307 +2673,98 @@ object Binary {
     graft.ops.Caching.materialized(out) { withH.unpersist(false) }
   }
 
-  /** Metadata stats over the media table — schema/partitioning surface
-    * checkable against a SQL oracle (payload hashes + sizes).
+  /** One container family triage routes to: the name
+    * [[graft.expressions.ContainerDetectKernel]] emits for it, its parse
+    * columns over the payload (the columns its public `parse` adds),
+    * and which of those columns are the validity flag and the content
+    * measure.
     */
+  private[graft] final case class Family(
+      name: String, columns: Column => Seq[(String, Column)], valid: String, units: String)
+
+  /** Zip has no parse of its own: the entry walk is the whole route. */
+  private def zipColumns(p: Column): Seq[(String, Column)] = {
+    val entries = org.apache.spark.sql.GraftColumnBridge.column(
+      graft.expressions.ZipEntries(
+        org.apache.spark.sql.GraftColumnBridge.expression(p), 1 << 22))
+    Seq("zip_valid" -> entries.isNotNull, "n_entries" -> size(entries).cast("long"))
+  }
+
+  /** The routed families, one row each — the single list triage, its
+    * `valid` and `content_units` routes, and the coverage check in the
+    * specs all read.
+    */
+  private[graft] val families: Seq[Family] = Seq(
+    Family("wav", Wav.columns, "wav_valid", "duration_ms"),
+    Family("png", Png.columns, "png_valid", "n_pixels"),
+    Family("jpeg", Jpeg.columns, "jpeg_valid", "n_pixels"),
+    Family("bmp", Bmp.columns, "bmp_valid", "n_pixels"),
+    Family("gif", Gif.columns, "gif_valid", "n_pixels"),
+    Family("pdf", Pdf.columns, "pdf_valid", "n_pages"),
+    Family("mp4", Mp4.columns, "mp4_valid", "duration_ms"),
+    Family("webp", Webp.columns, "webp_valid", "n_pixels"),
+    Family("tiff", Tiff.columns, "tiff_valid", "n_pixels"),
+    Family("mp3", Mp3.columns, "mp3_valid", "duration_ms"),
+    Family("flac", Flac.columns, "flac_valid", "duration_ms"),
+    Family("ogg", Ogg.columns, "ogg_valid", "duration_ms"),
+    Family("mkv", Mkv.columns, "mkv_valid", "duration_ms"),
+    Family("avro", Avro.columns, "avro_valid", "n_records"),
+    Family("parquet", Parquet.columns, "parquet_valid", "num_rows"),
+    Family("orc", Orc.columns, "orc_valid", "num_rows"),
+    Family("gzip", Gz.columns, "gzip_valid", "uncompressed_bytes"),
+    Family("zstd", Zstd.columns, "zstd_valid", "uncompressed_bytes"),
+    Family("ico", Ico.columns, "ico_valid", "n_icons"),
+    Family("zip", zipColumns, "zip_valid", "n_entries"),
+    Family("heif", Heif.columns, "heif_valid", "n_pixels"))
+
   /** Container triage over a MIXED blob column — the first pass any
     * multimodal ingest runs on 100 TB of unlabeled payloads: detect
-    * the container by magic bytes, parse the matching header codec's
-    * fields, and emit one uniform row per blob (detected type, size,
-    * structural validity, and a per-type content measure — audio
-    * milliseconds for WAV, pixels for PNG). Routing happens INSIDE the
-    * projection (both parsers are pure codegen column expressions over
-    * the same payload, gated by the detection CASE), so triage is one
-    * narrow map over the blob scan — no shuffle, no per-type job, no
-    * UDF. Declared media_type metadata is deliberately ignored: at
-    * crawl scale the label lies; the bytes decide.
+    * the container by magic bytes, parse the matching family's
+    * fields, and emit one uniform row per blob: `doc_id`, `detected`
+    * (the family name, or `unknown`), `payload_bytes`, `valid`
+    * (structural validity, false for unknown) and `content_units`
+    * (the family's content measure — audio/video milliseconds,
+    * pixels, pages, records, rows, bytes, icons, entries). Declared
+    * media_type metadata is deliberately ignored: at crawl scale the
+    * label lies; the bytes decide.
+    *
+    * Built from the [[families]] table: ONE `select` over the
+    * detection, with `valid` and `content_units` each one
+    * `CASE WHEN detected = name` chain over the rows' validity and
+    * content columns — one Dataset, one analysis, and per blob only
+    * the detected family's parse expressions run. Lazy: it runs no
+    * job and leaves no cache scope behind; it is one narrow map over
+    * the blob scan (no shuffle, no per-type job, no UDF).
+    *
+    * The projection must stay inside whole-stage codegen: detection
+    * is one kernel call because the column-predicate form pushed the
+    * generated method past janino's 64 KB limit and the stage silently
+    * ran interpreted (see [[graft.expressions.ContainerDetectKernel]]).
+    * A family added to the table must keep the stage under
+    * `spark.sql.codegen.hugeMethodLimit` (StreamingMultimodalSpec
+    * compiles every stage and checks).
     */
   def triage(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
     val p = col(payloadCol)
-    // Detection is ONE codegen kernel call (the per-family column
-    // predicates inlined three times through detected/valid/
-    // content_units used to blow the triage projection past janino's
-    // 64 KB method limit and force interpreted fallback — see
-    // ContainerDetectKernel's scaladoc). RIFF is a shared framing:
-    // form type WEBP splits off before the default-audio lane inside
-    // the kernel's ordered decision tree; DetectParitySpec pins the
-    // kernel against the per-family column predicates.
     val detected = org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.ContainerDetect(
         org.apache.spark.sql.GraftColumnBridge.expression(p)))
-    val keep = media.columns.map(col)
-    val afterWav = Wav.parse(media, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms"): _*)
-    val afterPng = Png.parse(afterWav, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("n_pixels").as("png_pixels"): _*)
-    val afterJpeg = Jpeg.parse(afterPng, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("n_pixels").as("jpeg_pixels"): _*)
-    val afterBmp = Bmp.parse(afterJpeg, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("n_pixels").as("bmp_pixels"): _*)
-    val afterGif = Gif.parse(afterBmp, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("n_pixels").as("gif_pixels"): _*)
-    // Mp4.parse also emits `duration_ms` — park the WAV one first
-    val afterPdf = Pdf.parse(afterGif, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms").as("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages"): _*)
-    val afterMp4 = Mp4.parse(afterPdf, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("duration_ms").as("mp4_ms"): _*)
-    val afterWebp = Webp.parse(afterMp4, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("n_pixels").as("webp_pixels"): _*)
-    val afterTiff = Tiff.parse(afterWebp, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("n_pixels").as("tiff_pixels"): _*)
-    val afterMp3 = Mp3.parse(afterTiff, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("duration_ms").as("mp3_ms"): _*)
-    val afterFlac = Flac.parse(afterMp3, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        // park the PDF page count: Ogg.parse emits its own `n_pages`
-        col("pdf_valid") :+ col("n_pages").as("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("duration_ms").as("flac_ms"): _*)
-    val afterOgg = Ogg.parse(afterFlac, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("duration_ms").as("ogg_ms"): _*)
-    val afterMkv = Mkv.parse(afterOgg, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("duration_ms").as("mkv_ms"): _*)
-    val afterAvro = Avro.parse(afterMkv, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("n_records").as("avro_records"): _*)
-    val afterParquet = Parquet.parse(afterAvro, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("num_rows").as("parquet_rows"): _*)
-    val afterOrc = Orc.parse(afterParquet, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("num_rows").as("orc_rows"): _*)
-    val afterGz = Gz.parse(afterOrc, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("uncompressed_bytes").as("gz_bytes"): _*)
-    val afterZstd = Zstd.parse(afterGz, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("gz_bytes") :+
-        col("zstd_valid") :+ col("uncompressed_bytes").as("zstd_bytes"): _*)
-    val afterIco = Ico.parse(afterZstd, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("gz_bytes") :+
-        col("zstd_valid") :+ col("zstd_bytes") :+
-        col("ico_valid") :+ col("n_icons").as("ico_icons"): _*)
-    val zipEntries = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.ZipEntries(
-        org.apache.spark.sql.GraftColumnBridge.expression(p), 1 << 22))
-    // heif rides the zip pattern: ONE struct expression gated by the
-    // detection, no column threading through the chain above
-    val heifMeta = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.AvifMeta(
-        org.apache.spark.sql.GraftColumnBridge.expression(p)))
-    afterIco
-      .withColumn("__zip", when(detected === "zip", zipEntries))
-      .withColumn("__heif", when(detected === "heif", heifMeta))
-      .select(col("doc_id"), detected.as("detected"),
-        length(p).cast("long").as("payload_bytes"),
-        when(detected === "wav", col("wav_valid"))
-          .when(detected === "png", col("png_valid"))
-          .when(detected === "jpeg", col("jpeg_valid"))
-          .when(detected === "bmp", col("bmp_valid"))
-          .when(detected === "gif", col("gif_valid"))
-          .when(detected === "pdf", col("pdf_valid"))
-          .when(detected === "mp4", col("mp4_valid"))
-          .when(detected === "webp", col("webp_valid"))
-          .when(detected === "tiff", col("tiff_valid"))
-          .when(detected === "mp3", col("mp3_valid"))
-          .when(detected === "flac", col("flac_valid"))
-          .when(detected === "ogg", col("ogg_valid"))
-          .when(detected === "mkv", col("mkv_valid"))
-          .when(detected === "avro", col("avro_valid"))
-          .when(detected === "parquet", col("parquet_valid"))
-          .when(detected === "orc", col("orc_valid"))
-          .when(detected === "gzip", col("gzip_valid"))
-          .when(detected === "zstd", col("zstd_valid"))
-          .when(detected === "ico", col("ico_valid"))
-          .when(detected === "zip", col("__zip").isNotNull)
-          .when(detected === "heif",
-            col("__heif").isNotNull && col("__heif.width").isNotNull)
-          .otherwise(lit(false)).as("valid"),
-        when(detected === "wav", col("wav_ms"))
-          .when(detected === "png", col("png_pixels"))
-          .when(detected === "jpeg", col("jpeg_pixels"))
-          .when(detected === "bmp", col("bmp_pixels"))
-          .when(detected === "gif", col("gif_pixels"))
-          .when(detected === "pdf", col("pdf_pages"))
-          .when(detected === "mp4", col("mp4_ms"))
-          .when(detected === "webp", col("webp_pixels"))
-          .when(detected === "tiff", col("tiff_pixels"))
-          .when(detected === "mp3", col("mp3_ms"))
-          .when(detected === "flac", col("flac_ms"))
-          .when(detected === "ogg", col("ogg_ms"))
-          .when(detected === "mkv", col("mkv_ms"))
-          .when(detected === "avro", col("avro_records"))
-          .when(detected === "parquet", col("parquet_rows"))
-          .when(detected === "orc", col("orc_rows"))
-          .when(detected === "gzip", col("gz_bytes"))
-          .when(detected === "zstd", col("zstd_bytes"))
-          .when(detected === "ico", col("ico_icons"))
-          .when(detected === "zip", size(col("__zip")).cast("long"))
-          .when(detected === "heif",
-            col("__heif.width") * col("__heif.height"))
-          .as("content_units"))
+    // CASE WHEN detected = name THEN <that family's `pick` column> …
+    def route(pick: Family => String): Column = {
+      val cases = families.map(f => (detected === f.name, f.columns(p).toMap.apply(pick(f))))
+      cases.tail.foldLeft(when(cases.head._1, cases.head._2)) {
+        case (chain, (isFamily, value)) => chain.when(isFamily, value)
+      }
+    }
+    media.select(col("doc_id"), detected.as("detected"),
+      length(p).cast("long").as("payload_bytes"),
+      route(_.valid).otherwise(lit(false)).as("valid"),
+      route(_.units).as("content_units"))
   }
 
+  /** Metadata stats over the media table — schema/partitioning surface
+    * checkable against a SQL oracle (payload hashes + sizes).
+    */
   def metadataStats(docs: DataFrame): DataFrame =
     asMediaTable(docs)
       .select(

@@ -32,7 +32,6 @@ object Caching {
     * DataFrame. After this the DataFrame is NOT recomputable (the
     * checkpoint truncated its lineage) — only call once nothing will
     * read it again, or once every reader is itself materialized.
-    * (Shared form of the helper Graph/Dedup carry privately.)
     */
   def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Caching.releaseCheckpoint
+
 /** Iterative graph analytics over DataFrame edge lists — PageRank in
   * FIXED-POINT integer arithmetic so the result is deterministic,
   * partition-order independent, and cross-engine hash-exact (a float
@@ -254,11 +256,4 @@ object Graph {
       .select(col("doc_id").as("host"), col("cluster_id").as("cluster_host"),
         (col("doc_id") === col("cluster_id")).as("is_canonical"))
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.BpeEncodeExpr
+import graft.ops.Caching.releaseCheckpoint
 
 /** Byte-pair-encoding subword tokenizer learned FROM the corpus
   * (Sennrich et al. 2016 "Neural Machine Translation of Rare Words
@@ -265,13 +266,6 @@ object Bpe {
     }
     BpeModel(merges.result())
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Subword segmentation of a token-array column under a model. */
   def encodeTokens(toks: Column, model: BpeModel): Column =

@@ -1027,6 +1027,53 @@ class StreamingMultimodalSpec extends SparkSpec {
     // the whole triage is one narrow projection — no exchange
     val phys = Binary.triage(media).queryExecution.executedPlan.toString
     assert(!phys.contains("Exchange"), s"triage shuffles:\n$phys")
+
+    // construction: triage is one select over the detection (≤ 2
+    // Projects above the input), each family parse one withColumns
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    def projects(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p: Project => p }.size
+    val base = projects(media)
+    assert(projects(Binary.triage(media)) - base <= 2)
+    val parses: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
+      Seq("wav" -> (Binary.Wav.parse(_)), "png" -> (Binary.Png.parse(_)),
+        "jpeg" -> (Binary.Jpeg.parse(_)), "bmp" -> (Binary.Bmp.parse(_)),
+        "gif" -> (Binary.Gif.parse(_)), "pdf" -> (Binary.Pdf.parse(_)),
+        "mp4" -> (Binary.Mp4.parse(_)), "webp" -> (Binary.Webp.parse(_)),
+        "tiff" -> (Binary.Tiff.parse(_)), "mp3" -> (Binary.Mp3.parse(_)),
+        "flac" -> (Binary.Flac.parse(_)), "ogg" -> (Binary.Ogg.parse(_)),
+        "mkv" -> (Binary.Mkv.parse(_)), "avro" -> (Binary.Avro.parse(_)),
+        "parquet" -> (Binary.Parquet.parse(_)), "orc" -> (Binary.Orc.parse(_)),
+        "gzip" -> (Binary.Gz.parse(_)), "zstd" -> (Binary.Zstd.parse(_)),
+        "ico" -> (Binary.Ico.parse(_)), "heif" -> (Binary.Heif.parse(_)))
+    parses.foreach { case (name, parse) =>
+      assert(projects(parse(media)) - base === 1, s"$name parse adds one Project")
+    }
+
+    // codegen: over a scanned (not local) input the triage projection
+    // runs inside whole-stage codegen, and every stage compiles under
+    // the huge-method limit (past it Spark silently falls back to the
+    // interpreted path)
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val scanned = spark.createDataFrame(media.rdd, media.schema)
+    val tri = Binary.triage(scanned)
+    assert(tri.collect().map(_.toString).sorted ===
+      Binary.triage(media).collect().map(_.toString).sorted)
+    val stages = tri.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.nonEmpty, s"triage left whole-stage codegen:\n${tri.queryExecution.executedPlan}")
+    val hugeMethodLimit = spark.conf.get("spark.sql.codegen.hugeMethodLimit").toInt
+    stages.foreach { stage =>
+      val (_, stats) = CodeGenerator.compile(stage.doCodeGen()._2)
+      assert(stats.maxMethodCodeSize <= hugeMethodLimit,
+        s"stage ${stage.codegenStageId}: ${stats.maxMethodCodeSize} B method")
+    }
+
+    // coverage: every family the detector can name has exactly one
+    // table row, so no family is detected but never validated
+    val rows = Binary.families.groupBy(_.name).map { case (n, fs) => n -> fs.size }
+    assert(rows.keySet === graft.expressions.ContainerDetectKernel.Names.keySet)
+    assert(rows.values.forall(_ == 1), s"duplicate family rows: $rows")
   }
 
   test("frameSample: exact byte-range slices with provenance; map-only plan") {
