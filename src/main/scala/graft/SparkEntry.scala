@@ -1357,22 +1357,17 @@ object SparkEntry {
       val (cells, cents) = graft.ann.Ivf.loadIndex(s, "graft_hyb_ann_rt")
       TextAnalysis.hybridSearchTopKOnIndexes(lexIdx, cells, cents, nProbe = 8)
     }),
-    // index-at-rest round trip: save → load → serve with the corpus
-    // untouched at serving time (stats from TBLPROPERTIES, doc lengths
-    // from the bucketed doclen table); same oracle as text_search_topk
     // BATCH query serving: a (query_id, token) frame served in ONE
     // pass over the postings — distinct query tokens broadcast-prune
     // the index, per-(query, doc) BM25 folds term scores in token
     // order (partition-order-free), bounded top-k per query
     "text_search_batch" -> ((s, dir) => {
       import s.implicits._
-      val d = t(s, dir, "documents")
-      val docLens = d.select(col("doc_id"),
-        size(graft.GraftFunctions.tokens(col("text"))).cast("long").as("dl"))
-      val idx = graft.text.SearchIndex.TextIndex(
-        TextAnalysis.invertedIndex(d), docLens,
-        docLens.count(), docLens.agg(sum("dl")).head().getLong(0),
-        TextAnalysis.DefaultMaxTokenDf)
+      val maxDf = TextAnalysis.DefaultMaxTokenDf
+      val b = graft.text.SearchIndex.build(t(s, dir, "documents"), maxDf)
+      val st = b.stats.head()
+      val idx = graft.text.SearchIndex.TextIndex(b.postings, b.docLens,
+        st.getLong(0), st.getLong(1), maxDf)
       graft.text.SearchIndex.searchTopKBatch(idx,
         TextAnalysis.BatchQueries.toDF("query_id", "token"), k = 10)
     }),
@@ -1396,6 +1391,9 @@ object SparkEntry {
       TextAnalysis.hybridSearchBatchOnIndexes(lexIdx, cells, cents,
         TextAnalysis.BatchQueries.toDF("query_id", "token"), nProbe = 8)
     }),
+    // index-at-rest round trip: save → load → serve with the corpus
+    // untouched at serving time (stats from TBLPROPERTIES, doc lengths
+    // from the bucketed doclen table); same oracle as text_search_topk
     "text_search_topk_persisted" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val tmp = tempDir("search_idx")

@@ -432,14 +432,14 @@ object Streams {
   }
 
   /** Always-on multi-query BM25 serving ([[queryTopKStream]]'s lexical
-    * twin): query rows `(query_id, term)` stream in, each micro-batch
-    * serves its WHOLE query table in ONE set-oriented plan through
-    * [[graft.text.TextAnalysis.searchManyTopKOnIndex]] against the
-    * persisted [[graft.text.SearchIndex]] loaded ONCE at stream start —
-    * postings pruned to the batch's term union, never a per-query loop
-    * or plan. `sink(ranked, batchId)` receives (query_id, rn, doc_id,
-    * score) rows per batch. Reload-and-restart to pick up corpus
-    * growth, like every at-rest reload here.
+    * twin): query rows `(query_id, token)` — the batch API's input —
+    * stream in, each micro-batch serves its WHOLE query table in ONE
+    * set-oriented plan through [[graft.text.SearchIndex.searchTopKBatch]]
+    * against the persisted [[graft.text.SearchIndex]] loaded ONCE at
+    * stream start — postings pruned to the batch's token union, never
+    * a per-query loop or plan. `sink(ranked, batchId)` receives
+    * (query_id, rn, doc_id, score) rows per batch. Reload-and-restart
+    * to pick up corpus growth, like every at-rest reload here.
     */
   def searchManyStream(queries: DataFrame, indexTable: String, k: Int = 20)
       (sink: (DataFrame, Long) => Unit)
@@ -448,7 +448,7 @@ object Streams {
     val idx = graft.text.SearchIndex.load(spark, indexTable)
     queries.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sink(graft.text.TextAnalysis.searchManyTopKOnIndex(idx, batch, k), batchId)
+        sink(graft.text.SearchIndex.searchTopKBatch(idx, batch, k), batchId)
     }
   }
 

@@ -28,19 +28,61 @@ object SearchIndex {
   private def statsJson(nDocs: Long, sumDl: Long, maxDf: Long): String =
     s"""{"n_docs":$nDocs,"sum_dl":$sumDl,"max_df":$maxDf}"""
 
+  /** The BM25 index inputs the scorer ([[scoreTopK]]) reads: postings
+    * (one row per token: df, cf, doc_id-sorted doc_ids, parallel tfs),
+    * doc lengths (doc_id, dl: long) and a 1-row (n_docs: long,
+    * sum_dl: long) stats frame.
+    */
+  private[graft] final case class Built(postings: DataFrame, docLens: DataFrame,
+      stats: DataFrame)
+
+  /** The ONE index build behind [[save]], [[add]], the fresh
+    * [[TextAnalysis.searchTopK]] and in-memory [[TextIndex]]es: the
+    * (token, doc, tf) grain ([[TextAnalysis.docTermFreq]]) is defined
+    * once and the postings derive from it
+    * ([[TextAnalysis.invertedIndexFromDocTf]]); doc lengths and stats
+    * come from the un-exploded tokenize pass (a doc with zero tokens
+    * must count toward n_docs, which the docTf grain cannot see). Lazy
+    * and uncached: a plan reading the postings re-derives the grain
+    * once per index branch — eager callers use [[withBuild]].
+    */
+  private[graft] def build(docs: DataFrame, maxDf: Long): Built = {
+    val t = TextAnalysis.withToks(docs)
+    builtOver(t, TextAnalysis.docTermFreq(t), maxDf)
+  }
+
+  private def builtOver(t: DataFrame, docTf: DataFrame, maxDf: Long): Built = {
+    val docLens = t.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+    Built(TextAnalysis.invertedIndexFromDocTf(docTf, maxDf), docLens,
+      docLens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
+  }
+
+  /** [[build]] for the eager operators: the docTf grain is persisted
+    * for the scope of `f` — the index's df, hot-token and posting
+    * branches read ONE explode instead of three — and released before
+    * this returns, so `f` must materialize whatever it hands back.
+    */
+  private[text] def withBuild[T](docs: DataFrame, maxDf: Long)(f: Built => T): T = {
+    val t = TextAnalysis.withToks(docs)
+    val docTf = TextAnalysis.docTermFreq(t)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(builtOver(t, docTf, maxDf)) finally docTf.unpersist(false)
+  }
+
   /** Build and persist the index for `docs`: one corpus pass for the
-    * postings (the invertedIndex build), one for doc lengths + stats.
-    * `nBuckets` sizes the at-rest file buckets — pick so one token
-    * bucket's postings fit an executor core at target scale.
+    * postings, doc lengths and stats ([[build]]). `nBuckets` sizes the
+    * at-rest file buckets — pick so one token bucket's postings fit an
+    * executor core at target scale. Eager; leaves no cache behind (the
+    * contract on [[scoreTopK]]).
     */
   def save(docs: DataFrame, table: String, nBuckets: Int = 32,
       maxDf: Long = TextAnalysis.DefaultMaxTokenDf,
       path: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    // ONE cached tokenize pass feeds both tables (withToks trusts the
-    // precomputed column), and the two independent writes run as
-    // CONCURRENT jobs — the same submission pattern as Pq.train's
-    // subspace fits
+    // ONE cached tokenize pass feeds the build (withToks trusts the
+    // precomputed column), and the three independent jobs — postings
+    // write, doclen write, stats aggregate — run CONCURRENTLY, the same
+    // submission pattern as Pq.train's subspace fits
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -49,42 +91,40 @@ object SearchIndex {
     // no separate warm-up count: the CacheManager's block-level locks
     // make the concurrent first readers build each cache partition
     // exactly once — a prior count() paid one full extra job. The
-    // stats aggregate runs as a THIRD concurrent job over the same
-    // cached pass (identical result to re-aggregating the written
-    // doclen table — same rows — one table re-read cheaper; `add`
-    // still re-derives from the table, where it is a correctness
-    // property).
+    // stats aggregate over the same cached pass equals re-aggregating
+    // the written doclen table (same rows) and skips a table re-read;
+    // `add` still re-derives from the table, where it is a correctness
+    // property.
     // cluster by the bucket key before each bucketed write (the
     // Compaction.rewriteBucketed idiom, guide §6): without it every
     // input partition emits a file per bucket it touches — tasks ×
     // nBuckets small files — while the aligned repartition emits ONE
     // file per bucket and the exchange is the hash the bucket layout
     // uses anyway
-    val fIdx = Future {
-      val w = TextAnalysis.invertedIndex(tokD, maxDf)
-        .repartition(nBuckets, col("token"))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "token").sortBy("token").format("parquet")
-      path.foreach(loc => w.option("path", loc))
-      w.saveAsTable(table)
+    val st = withBuild(tokD, maxDf) { ix =>
+      val fIdx = Future {
+        val w = ix.postings
+          .repartition(nBuckets, col("token"))
+          .write.mode("overwrite")
+          .bucketBy(nBuckets, "token").sortBy("token").format("parquet")
+        path.foreach(loc => w.option("path", loc))
+        w.saveAsTable(table)
+      }
+      val fDl = Future {
+        val wd = ix.docLens
+          .repartition(nBuckets, col("doc_id"))
+          .write.mode("overwrite")
+          .bucketBy(nBuckets, "doc_id").sortBy("doc_id").format("parquet")
+        path.foreach(loc => wd.option("path", s"${loc}_doclen"))
+        wd.saveAsTable(s"${table}_doclen")
+      }
+      val fStats = Future(ix.stats.head())
+      Await.result(fIdx, Duration.Inf); Await.result(fDl, Duration.Inf)
+      Await.result(fStats, Duration.Inf)
     }
-    val fDl = Future {
-      val wd = tokD.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .repartition(nBuckets, col("doc_id"))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "doc_id").sortBy("doc_id").format("parquet")
-      path.foreach(loc => wd.option("path", s"${loc}_doclen"))
-      wd.saveAsTable(s"${table}_doclen")
-    }
-    val fStats = Future {
-      tokD.agg(count(lit(1)).as("n"),
-        sum(size(col("toks")).cast("long")).as("s")).head()
-    }
-    Await.result(fIdx, Duration.Inf); Await.result(fDl, Duration.Inf)
-    val s = Await.result(fStats, Duration.Inf)
     tokD.unpersist(false)
     graft.ops.TableProps.set(spark, table, "graft.search.stats",
-      statsJson(s.getLong(0), s.getLong(1), maxDf))
+      statsJson(st.getLong(0), st.getLong(1), maxDf))
   }
 
   /** Restore a [[TextIndex]] from a [[save]]d table pair. Missing
@@ -99,72 +139,112 @@ object SearchIndex {
       longField(json, "n_docs"), longField(json, "sum_dl"), longField(json, "max_df"))
   }
 
-  /** BM25 top-k served ENTIRELY from the persisted index: postings of
-    * the query terms → candidate pivot → bucket-local doc-length
-    * fetch; the stored (n_docs, Σdl) ride in as a 1-row literal frame.
-    * Identical scoring core as [[TextAnalysis.searchTopKOnIndex]]
-    * ([[TextAnalysis.searchFromPostings]]) — the two plans agree
-    * bitwise; the difference is purely what gets scanned: here, zero
-    * corpus-side work (spec-asserted: no exchange above the doclen
-    * scan, no `documents` scan anywhere in the plan). Segment rows
-    * from [[add]] are merged on the way in — identity on a
-    * freshly-[[save]]d index, and the merge groupBy reads the
-    * bucketed-by-token table bucket-local.
+  /** BM25 top-k of ONE query served entirely from the index: the
+    * batch core ([[scoreTopK]]) over a batch of one, folding the
+    * per-term scores in `terms` order — the association order of the
+    * full-scan [[TextAnalysis.bm25]], so the scores agree with it
+    * bitwise. Zero corpus-side work (spec-asserted: no `documents`
+    * scan anywhere in the plan). Output: (doc_id, score), best first.
+    * Lazy — see the contract on [[scoreTopK]].
     */
   def searchTopK(idx: TextIndex, terms: Seq[String] = TextAnalysis.Bm25Terms,
-      k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = idx.postings.sparkSession
-    val stats = spark.range(1).select(
-      lit(idx.nDocs).cast("long").as("n_docs"),
-      lit(idx.sumDl).cast("long").as("sum_dl"))
-    TextAnalysis.searchFromPostings(idx.docLens, stats,
-      mergeSegments(idx.postings, idx.maxDf), terms, k, k1, b)
-  }
+      k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    serve(idx, termQuery(idx.postings.sparkSession, terms), k, k1, b)
+      .select(col("doc_id"), col("score"))
 
   /** BATCH query serving — the production shape the reference's
     * `query()` takes on the vector side, for text: a frame of
     * `(query_id, token)` rows is served in ONE pass over the postings
-    * instead of a plan per query. Plan shape: the distinct query-token
-    * set broadcast-semi-joins the postings (index side touches only
-    * Σ df(query tokens) entries regardless of corpus size), candidates
-    * join doc lengths on the bucketed doc_id key, and the per-(query,
-    * doc) BM25 sum folds the per-term scores IN TOKEN ORDER
-    * (`aggregate` over `sort_array(collect_list(struct))` — a
-    * groupBy-sum of doubles would be partition-order-dependent; the
-    * [[TextAnalysis.ngramLmScore]] determinism discipline), so even
-    * the batch ranker is cross-engine hash-exact. Per-query top-k via
-    * the bounded TopKByScore aggregate.
-    * Output: (query_id, rn, doc_id, score).
+    * instead of a plan per query ([[scoreTopK]]), each (query, doc)
+    * sum folded in token order. Output: (query_id, rn, doc_id, score).
+    * Lazy — see the contract on [[scoreTopK]].
     */
   def searchTopKBatch(idx: TextIndex, queries: DataFrame, k: Int = 20,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    serve(idx, batchQuery(queries), k, k1, b)
+
+  /** `(query_id, token)` batch rows as core queries: ord = 0, so each
+    * (query, doc) sum folds in token order.
+    */
+  private[text] def batchQuery(queries: DataFrame): DataFrame =
+    queries.select(col("query_id"), col("token"), lit(0).as("ord"))
+
+  /** A single query as a batch of one: (query_id = 0, token, ord =
+    * the term's position in `terms`).
+    */
+  private[text] def termQuery(spark: SparkSession, terms: Seq[String]): DataFrame = {
+    import spark.implicits._
+    terms.zipWithIndex.map { case (t, i) => (0L, t, i) }.toDF("query_id", "token", "ord")
+  }
+
+  /** [[scoreTopK]] over a loaded index: segment-merged postings, the
+    * stored doc lengths, and the stored (n_docs, Σdl) as a 1-row
+    * literal frame — the corpus is never touched.
+    */
+  private[text] def serve(idx: TextIndex, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = idx.postings.sparkSession
-    val stats = spark.range(1).select(
+    val stats = idx.postings.sparkSession.range(1).select(
       lit(idx.nDocs).cast("long").as("n_docs"),
       lit(idx.sumDl).cast("long").as("sum_dl"))
-    val q = queries.select(col("query_id"), col("token")).distinct()
-    val qTokens = q.select(col("token")).distinct()
-    val merged = mergeSegments(idx.postings, idx.maxDf)
-      .join(broadcast(qTokens), Seq("token"), "left_semi")
-    val posts = merged.select(col("token"), col("df"),
+    scoreTopK(Built(mergeSegments(idx.postings, idx.maxDf), idx.docLens, stats),
+      queries, k, k1, b)
+  }
+
+  /** THE BM25 scorer — every lexical and hybrid entry point ranks
+    * through it. `queries` is `(query_id, token, ord)`; each (query,
+    * doc) score folds its matched terms' scores in `(ord, token)`
+    * order (`aggregate` over `array_sort(collect_list(struct))` — a
+    * groupBy-sum of doubles would be partition-order-dependent; the
+    * [[TextAnalysis.ngramLmScore]] determinism discipline), so every
+    * ranking is cross-engine hash-exact: ord = 0 is the batch's token
+    * order, ord = term position the single query's term-list order.
+    * Plan shape: the distinct query tokens broadcast-semi-join the
+    * postings (the index side touches only Σ df(query tokens) entries
+    * regardless of corpus size), ONE explode to (token, doc, tf),
+    * candidates join doc lengths on doc_id (bucket-local on a saved
+    * index), the stats ride in as a 1-row broadcast, per-query top-k
+    * via the bounded TopKByScore aggregate ((score desc, doc_id)
+    * tie-break). Output: (query_id, rn, doc_id, score).
+    *
+    * Eager/lazy and cache-scope contract of the entry points built on
+    * this core:
+    *  - lazy serves — [[searchTopK]], [[searchTopKBatch]]: this plan
+    *    as is; nothing runs until the caller acts, nothing is cached.
+    *  - eager builds — [[save]], [[add]]: run their jobs at call time,
+    *    persist the docTf grain only inside the call ([[withBuild]]),
+    *    leave no cache behind.
+    *  - eager materialized — [[TextAnalysis.searchTopK]] and every
+    *    hybrid form: run at call time and return a PERSISTED frame
+    *    that is the one cache scope left; the caller must `unpersist`
+    *    it. The hybrid forms fuse through a released `localCheckpoint`
+    *    (TextAnalysis.fuseRankListsBatch), so their result cannot
+    *    recompute if its blocks are lost — on a fault-prone cluster
+    *    write it out before relying on it.
+    */
+  private[text] def scoreTopK(ix: Built, queries: DataFrame, k: Int,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val q = queries.select(col("query_id"), col("token"), col("ord")).distinct()
+    val posts = ix.postings
+      .join(broadcast(q.select(col("token")).distinct()), Seq("token"), "left_semi")
+      .select(col("token"), col("df"),
         explode(arrays_zip(col("doc_ids"), col("tfs"))).as("p"))
       .select(col("token"), col("df"),
         col("p.doc_ids").as("doc_id"), col("p.tfs").as("tf"))
     val withDl = posts
-      .join(idx.docLens, Seq("doc_id"))
+      .join(ix.docLens, Seq("doc_id"))
       .join(broadcast(q), Seq("token"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(ix.stats))
     val idf = graft.GraftFunctions.det_ln(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    // association order mirrors searchFromPostings term-for-term
+    // association order mirrors bm25 and the oracle SQL term-for-term
     val termScore = idf * (col("tf") * lit(k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0) - lit(b) +
         lit(b) * (col("dl") / (col("sum_dl") / col("n_docs")))))
     val perDoc = withDl
-      .select(col("query_id"), col("doc_id"), col("token"), termScore.as("s"))
+      .select(col("query_id"), col("doc_id"), col("ord"), col("token"), termScore.as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(
-        array_sort(collect_list(struct(col("token"), col("s")))),
+        array_sort(collect_list(struct(col("ord"), col("token"), col("s")))),
         lit(0.0), (a, x) => a + x.getField("s")).as("score"))
     graft.ops.TopK.rankByScore(
         perDoc.select(col("query_id").as("q_id"), col("doc_id").as("cand_id"),
@@ -173,12 +253,6 @@ object SearchIndex {
         col("cand_id").as("doc_id"), col("sim").as("score"))
       .orderBy(col("query_id"), col("rn"))
   }
-
-  /** Segment-merged postings of a loaded index — the serve-time view
-    * every reader must use (see [[mergeSegments]]).
-    */
-  def mergedPostings(idx: TextIndex): DataFrame =
-    mergeSegments(idx.postings, idx.maxDf)
 
   /** Fold segment rows (one per (token, append)) back to one row per
     * token: df/cf sum; the (doc_id, tf) pairs of all segments
@@ -206,7 +280,8 @@ object SearchIndex {
     * only the new rows. Caveat (documented, not silent): the df cap
     * is enforced per segment at build and on the merged total at
     * serve — a token that exceeded the cap inside an earlier segment
-    * alone stays dropped, exactly as a rebuild would drop it.
+    * alone stays dropped, exactly as a rebuild would drop it. Eager;
+    * leaves no cache behind (the contract on [[scoreTopK]]).
     *
     * Failure atomicity: the two appends are not transactional — a
     * crash between them can leave the batch's postings present with
@@ -227,16 +302,18 @@ object SearchIndex {
     val json = graft.ops.TableProps.get(spark, table, "graft.search.stats")
     import graft.ops.TableProps.longField
     val maxDf = longField(json, "max_df")
+    // the first write builds the tokenize cache; the doclen write
+    // reads it (no warm-up count — see save)
     val tokD = TextAnalysis.withToks(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tokD.count()
-    TextAnalysis.invertedIndex(tokD, maxDf).write.mode("append")
-      .bucketBy(bucketsOf(table), "token").sortBy("token").format("parquet")
-      .saveAsTable(table)
-    tokD.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .write.mode("append")
-      .bucketBy(bucketsOf(s"${table}_doclen"), "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(s"${table}_doclen")
+    withBuild(tokD, maxDf) { ix =>
+      ix.postings.write.mode("append")
+        .bucketBy(bucketsOf(table), "token").sortBy("token").format("parquet")
+        .saveAsTable(table)
+      ix.docLens.write.mode("append")
+        .bucketBy(bucketsOf(s"${table}_doclen"), "doc_id").sortBy("doc_id")
+        .format("parquet").saveAsTable(s"${table}_doclen")
+    }
     tokD.unpersist(false)
     // stats LAST, re-derived from the appended doclen table (one
     // linear pass over a two-long-per-doc table — not the corpus):

@@ -1045,8 +1045,8 @@ object TextAnalysis {
     * document frequency, corpus frequency, and the posting list
     * (doc_ids sorted ascending, parallel per-doc term frequencies).
     * Index once, serve many queries from postings
-    * ([[searchTopKOnIndex]]) — each query touches Σ df(term) posting
-    * entries instead of every document.
+    * ([[SearchIndex.scoreTopK]]) — each query touches Σ df(term)
+    * posting entries instead of every document.
     *
     * Scale shape: (token, doc) term counts partial-aggregate map-side;
     * hot tokens (df > maxDf) are identified from the SMALL df relation
@@ -1060,12 +1060,11 @@ object TextAnalysis {
 
   /** Per-(token, doc) term frequencies — the shared grain every index
     * branch (df relation, hot-token cap, posting lists) derives from.
-    * Callers that reference the index more than once per plan cache
-    * THIS frame (r16, the hashEmbed single-pass lesson applied to the
-    * lexical side: DataFrame plans get no common-subtree reuse, so an
-    * uncached docTf re-runs the tokenize → explode → count chain once
-    * per branch — measured 4 full chains in one text_search_hybrid
-    * serve).
+    * Eager builds cache THIS frame ([[SearchIndex.withBuild]]; the
+    * hashEmbed single-pass lesson applied to the lexical side:
+    * DataFrame plans get no common-subtree reuse, so an uncached docTf
+    * re-runs the tokenize → explode → count chain once per branch —
+    * measured 4 full chains in one text_search_hybrid serve).
     */
   private[text] def docTermFreq(docs: DataFrame): DataFrame =
     withToks(docs)
@@ -1095,7 +1094,7 @@ object TextAnalysis {
     * values) so the row is sortable/hashable by any tabular harness —
     * same information content, cross-engine hash-exact. The
     * array-returning [[invertedIndex]] stays the composition API
-    * ([[searchTopKOnIndex]] consumes it directly).
+    * ([[SearchIndex.build]] derives the served postings the same way).
     */
   def invertedIndexDigest(docs: DataFrame, maxDf: Long = DefaultMaxTokenDf): DataFrame =
     invertedIndex(docs, maxDf).select(col("token"), col("df"), col("cf"),
@@ -1238,143 +1237,32 @@ object TextAnalysis {
       .filter(col("doc_id") < n && size(col("toks")) >= 5)
       .select(col("doc_id").as("phrase_id"), slice(col("toks"), 3, 3).as("terms"))
 
-  /** BM25 top-k search served FROM a prebuilt inverted index: postings
-    * of the query terms → per-candidate term frequencies → BM25 score
-    * (same constants, association order, and [[graft.expressions.DetLn]]
-    * log as [[bm25]], so the two independent plans agree bitwise) →
-    * distributed TakeOrdered top-k with (score desc, doc_id) tie-break.
-    * Only documents containing at least one query term are candidates.
+  /** BM25 top-k over a freshly built index: [[SearchIndex.withBuild]]'s
+    * postings (the (token, doc, tf) grain cached for the call, so the
+    * index's df, hot-token and posting branches read ONE tokenize →
+    * explode → count chain) scored by the one core
+    * ([[SearchIndex.scoreTopK]]) as a batch of one, folding in `terms`
+    * order — bitwise-equal to the full-scan [[bm25]] on every
+    * candidate. Only documents containing at least one query term are
+    * candidates. Output: (doc_id, score), best first.
     *
-    * Scale shape: the candidate set (≤ Σ df(term) rows) pivots in one
-    * keyed shuffle, then fetches doc lengths by a guarded-broadcast
-    * join against the corpus — the corpus side stays map-only; the
-    * per-term df and corpus stats ride in as two 1-row broadcasts.
+    * Eager, materialized: the returned frame is the one cache scope
+    * left — the caller unpersists it (the contract on
+    * [[SearchIndex.scoreTopK]]).
     */
-  def searchTopKOnIndex(docs: DataFrame, index: DataFrame,
-      terms: Seq[String] = Bm25Terms, k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val t = withToks(docs).withColumn("dl", size(col("toks")).cast("long"))
-    val stats = t.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    searchFromPostings(t.select(col("doc_id"), col("dl")), stats, index, terms, k, k1, b)
-  }
-
-  /** MULTI-QUERY BM25 top-k — the set-oriented serving form: a whole
-    * TABLE of queries `(query_id, term)` scores in ONE plan instead of
-    * one plan per query (the shape an always-on serving loop or a
-    * batch re-ranking pass actually needs; a per-query loop costs one
-    * driver round-trip and one corpus-side plan per query).
-    *
-    * Shape: postings semi-join down to the UNION of queried terms
-    * (each query touches Σ df(term) posting entries, never the
-    * corpus), explode to (token, doc, tf), join the query table on the
-    * term, one keyed aggregate per (query, doc). The per-(query, doc)
-    * float sum runs over a VARIABLE term set, so contributions are
-    * reassembled positionally (sort_array by token) and folded
-    * left-to-right — the ngram-LM determinism discipline — making the
-    * scores cross-engine hash-exact. Top-k per query is the bounded
-    * TopKByScore aggregate. Scoring constants and the per-term formula
-    * are [[searchFromPostings]]'s exactly; only the association order
-    * differs (token order vs the caller's term-list order), which is
-    * THIS operator's documented contract, mirrored in its oracle.
-    */
-  private[text] def searchManyFromPostings(docLens: DataFrame, stats: DataFrame,
-      index: DataFrame, queryTerms: DataFrame, k: Int,
-      k1: Double, b: Double): DataFrame = {
-    val qt = queryTerms.select(col("query_id"), col("term").as("token")).distinct()
-    val qIdx = index.join(qt.select(col("token")).distinct(), Seq("token"), "left_semi")
-    val posts = qIdx.select(col("token"), col("df"),
-        explode(arrays_zip(col("doc_ids"), col("tfs"))).as("p"))
-      .select(col("token"), col("df"), col("p.doc_ids").as("doc_id"), col("p.tfs").as("tf"))
-    val matched = graft.ops.Broadcasting.maybeBroadcast(qt)
-      .join(posts, Seq("token"))
-      .join(docLens, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-    val idf = GraftFunctions.det_ln(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val contrib = idf * (col("tf") * lit(k1 + 1.0)) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) +
-        lit(b) * (col("dl") / (col("sum_dl") / col("n_docs")))))
-    val scored = matched
-      .select(col("query_id"), col("doc_id"),
-        struct(col("token"), contrib.as("c")).as("tc"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sort_array(collect_list(col("tc"))).as("tcs"))
-      .select(col("query_id"), col("doc_id"),
-        expr("aggregate(tcs, cast(0.0 as double), (acc, x) -> acc + x.c)").as("score"))
-    scored
-      .groupBy(col("query_id"))
-      .agg(GraftFunctions.top_k_by_score(col("score"), col("doc_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rn"),
-        col("t.id").as("doc_id"), col("t.score").as("score"))
-      .orderBy(col("query_id"), col("rn"))
-  }
-
-  /** [[searchManyFromPostings]] over a freshly built corpus index. */
-  def searchManyTopK(docs: DataFrame, queryTerms: DataFrame, k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75,
-      maxDf: Long = DefaultMaxTokenDf): DataFrame = {
-    val t = withToks(docs).withColumn("dl", size(col("toks")).cast("long"))
-    val stats = t.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    searchManyFromPostings(t.select(col("doc_id"), col("dl")), stats,
-      invertedIndex(t, maxDf), queryTerms, k, k1, b)
-  }
-
-  /** [[searchManyFromPostings]] served from a persisted
-    * [[SearchIndex]] — the corpus untouched at serving time.
-    */
-  def searchManyTopKOnIndex(idx: SearchIndex.TextIndex,
-      queryTerms: DataFrame, k: Int = 20,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = idx.postings.sparkSession
-    val stats = spark.range(1).select(
-      lit(idx.nDocs).cast("long").as("n_docs"),
-      lit(idx.sumDl).cast("long").as("sum_dl"))
-    searchManyFromPostings(idx.docLens, stats,
-      SearchIndex.mergedPostings(idx), queryTerms, k, k1, b)
-  }
-
-  /** The serving core shared by [[searchTopKOnIndex]] (stats/doc
-    * lengths recomputed from the corpus) and
-    * [[SearchIndex.searchTopK]] (stats/doc lengths read from the
-    * persisted index — the corpus is never touched): `docLens` is
-    * (doc_id, dl: long), `stats` a 1-row (n_docs: long, sum_dl: long)
-    * frame. One scoring definition, so the two tiers agree bitwise.
-    */
-  private[text] def searchFromPostings(docLens: DataFrame, stats: DataFrame,
-      index: DataFrame, terms: Seq[String], k: Int,
-      k1: Double, b: Double): DataFrame = {
-    val qIdx = index.filter(col("token").isin(terms: _*))
-    val dfAggs = terms.zipWithIndex.map { case (term, i) =>
-      max(when(col("token") === term, col("df"))).as(s"df_$i")
+  def searchTopK(docs: DataFrame, terms: Seq[String] = Bm25Terms,
+      k: Int = 20, k1: Double = 1.2, b: Double = 0.75,
+      maxDf: Long = DefaultMaxTokenDf): DataFrame =
+    SearchIndex.withBuild(docs, maxDf) { ix =>
+      graft.ops.Caching.materialized(SearchIndex.scoreTopK(ix,
+        SearchIndex.termQuery(docs.sparkSession, terms), k, k1, b)
+        .select(col("doc_id"), col("score")))(())
     }
-    val dfr = qIdx.agg(dfAggs.head, dfAggs.tail: _*)
-    val posts = qIdx.select(col("token"),
-        explode(arrays_zip(col("doc_ids"), col("tfs"))).as("p"))
-      .select(col("token"), col("p.doc_ids").as("doc_id"), col("p.tfs").as("tf"))
-    val tfAggs = terms.zipWithIndex.map { case (term, i) =>
-      coalesce(max(when(col("token") === term, col("tf"))), lit(0L)).as(s"tf_$i")
-    }
-    val cand = posts.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*)
-    val withDl = docLens
-      .join(graft.ops.Broadcasting.maybeBroadcast(cand), Seq("doc_id"))
-      .crossJoin(broadcast(stats)).crossJoin(broadcast(dfr))
-    val termScores = terms.zipWithIndex.map { case (term, i) =>
-      val tf = col(s"tf_$i")
-      val idf = GraftFunctions.det_ln(lit(1.0) +
-        (col("n_docs") - col(s"df_$i") + lit(0.5)) / (col(s"df_$i") + lit(0.5)))
-      // association order mirrors bm25 and the oracle SQL exactly; a
-      // zero-tf term contributes an exact +0.0 either way — the CASE
-      // exists so a term missing from the index (null df) cannot
-      // null out the whole sum
-      when(tf > lit(0L),
-        idf * (tf * lit(k1 + 1.0)) /
-          (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * (col("dl") / (col("sum_dl") / col("n_docs"))))))
-        .otherwise(lit(0.0))
-    }
-    withDl.select(col("doc_id"), termScores.reduce(_ + _).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-  }
+
+  /** doc_id of a single hybrid query's pseudo-document — negative, so
+    * it can never collide with a corpus id.
+    */
+  val HybridQueryDocId: Long = -1L
 
   /** Hybrid lexical + semantic retrieval fused by Reciprocal Rank
     * Fusion (Cormack et al., SIGIR 2009): the BM25 top-`kEach`
@@ -1402,9 +1290,11 @@ object TextAnalysis {
     *
     * Output: (rn, doc_id, lex_rank, vec_rank, rrf_score) — a null
     * rank means that retriever did not surface the document.
+    *
+    * Eager, materialized; the result's lineage runs through a released
+    * `localCheckpoint`, so it cannot recompute if its blocks are lost
+    * (the contract on [[SearchIndex.scoreTopK]]).
     */
-  val HybridQueryDocId: Long = -1L
-
   def hybridSearchTopK(docs: DataFrame, terms: Seq[String] = Bm25Terms,
       k: Int = 10, kEach: Int = 20, d: Int = 64, rrfK: Int = 60): DataFrame = {
     // ONE cached tokenize pass feeds BOTH retrievers (withToks trusts
@@ -1413,11 +1303,14 @@ object TextAnalysis {
     // the hash embedding
     val tokD = withToks(docs.select(col("doc_id"), col("text")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lexScored = searchTopK(tokD, terms, kEach)
-    val (out, releaseVec) = hybridFuse(lexScored, tokD, terms, k, kEach, d, rrfK)
-    graft.ops.Caching.materialized(out) {
-      tokD.unpersist(false); lexScored.unpersist(false); releaseVec()
+    val out = SearchIndex.withBuild(tokD, DefaultMaxTokenDf) { ix =>
+      val lex = SearchIndex.scoreTopK(ix,
+        SearchIndex.termQuery(docs.sparkSession, terms), kEach)
+      val (fused, releaseVec) = hybridFuse(lex, tokD, terms, k, kEach, d, rrfK)
+      graft.ops.Caching.materialized(fused)(releaseVec())
     }
+    tokD.unpersist(false)
+    out
   }
 
   /** [[hybridSearchTopK]] with the LEXICAL side served from a
@@ -1426,23 +1319,30 @@ object TextAnalysis {
     * query touches only its terms' postings there, and the semantic
     * side stays the one linear hash-embed pass over the corpus. The
     * fusion core is shared, so the two forms cannot drift.
+    *
+    * Eager, materialized; the result's lineage runs through a released
+    * `localCheckpoint`, so it cannot recompute if its blocks are lost
+    * (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchTopKOnIndex(idx: SearchIndex.TextIndex, docs: DataFrame,
       terms: Seq[String] = Bm25Terms, k: Int = 10, kEach: Int = 20,
       d: Int = 64, rrfK: Int = 60): DataFrame = {
-    val (out, releaseVec) = hybridFuse(SearchIndex.searchTopK(idx, terms, kEach),
+    val lex = SearchIndex.serve(idx,
+      SearchIndex.termQuery(docs.sparkSession, terms), kEach)
+    val (out, releaseVec) = hybridFuse(lex,
       docs.select(col("doc_id"), col("text")), terms, k, kEach, d, rrfK)
     graft.ops.Caching.materialized(out) { releaseVec() }
   }
 
-  /** The shared RRF fusion core: rank the lexical scores, rank the
-    * pseudo-document hash-embed cosines, full-outer join on doc_id,
-    * `Σ 1/(rrfK + rank)` in fixed association order, bounded top-k.
-    * Returns the fused frame plus a release for the embed side's
-    * cache scope — the caller runs it once its own result is
+  /** The exact-embed hybrid core: the ranked lexical side of query 0
+    * (a [[SearchIndex.scoreTopK]] frame) against the pseudo-document's
+    * hash-embed cosine ranks over the corpus, fused by the one
+    * [[fuseRankListsBatch]] tail. Returns the fused frame plus a
+    * release for the embed side's cache scope and the fusion
+    * checkpoint — the caller runs it once its own result is
     * materialized, so the operator leaves ONE scope behind.
     */
-  private def hybridFuse(lexScored: DataFrame, corpus: DataFrame,
+  private def hybridFuse(lex: DataFrame, corpus: DataFrame,
       terms: Seq[String], k: Int, kEach: Int, d: Int, rrfK: Int)
       : (DataFrame, () => Unit) = {
     val spark = corpus.sparkSession
@@ -1450,35 +1350,19 @@ object TextAnalysis {
     val qRow = withToks(Seq((HybridQueryDocId, terms.mkString(" "))).toDF("doc_id", "text"))
     val vecScoped = hashEmbedTopK(withToks(corpus).unionByName(qRow),
       qRow.select(col("doc_id")), d, kEach)
-    val vec = vecScoped.select(col("cand_id").as("doc_id"), col("rn").as("vec_rank"))
-    val (out, releaseFused) = fuseRankLists(lexScored, vec, k, kEach, rrfK)
-    (out, () => { vecScoped.unpersist(false); releaseFused() })
+    val vec = vecScoped.select(lit(0L).as("query_id"), col("cand_id").as("doc_id"),
+      col("rn").as("vec_rank"))
+    val (out, releaseFused) = fuseRankListsBatch(
+      lex.select(col("query_id"), col("doc_id"), col("rn").as("lex_rank")), vec, k, rrfK)
+    (out.drop("query_id"), () => { vecScoped.unpersist(false); releaseFused() })
   }
 
-  /** The RRF fusion tail shared by EVERY hybrid form (exact embed
-    * scan, IVF-served embed side): rank the lexical scores, full-outer
-    * join with the semantic rank list on doc_id, `Σ 1/(rrfK + rank)`
-    * in fixed association order, bounded top-k. Keeping one fusion
-    * core is what stops the exact and ANN forms from drifting.
-    */
-  private def fuseRankLists(lexScored: DataFrame, vec: DataFrame,
-      k: Int, kEach: Int, rrfK: Int): (DataFrame, () => Unit) = {
-    val lex = graft.ops.TopK.rankByScore(
-      lexScored
-        .select(lit(0L).as("q_id"), col("doc_id").as("cand_id"), col("score").as("sim")),
-      kEach)
-      .select(lit(0L).as("query_id"), col("cand_id").as("doc_id"),
-        col("rn").as("lex_rank"))
-    val (out, release) = fuseRankListsBatch(lex, vec.withColumn("query_id", lit(0L)), k, rrfK)
-    (out.drop("query_id"), release)
-  }
-
-  /** The multi-query RRF fusion tail — ONE fusion implementation for
-    * every hybrid form, single- or batch-query: full-outer join the
-    * two rank lists per (query_id, doc_id), `Σ 1/(rrfK + rank)` in
-    * fixed association order, bounded top-k PER QUERY (rankByScore
-    * partitions on q_id, so fusing 10⁴ queries is the same plan as
-    * fusing one).
+  /** The RRF fusion tail — ONE fusion implementation for every hybrid
+    * form, exact-embed or IVF-served, single- or batch-query:
+    * full-outer join the two rank lists per (query_id, doc_id),
+    * `Σ 1/(rrfK + rank)` in fixed association order, bounded top-k PER
+    * QUERY (rankByScore partitions on q_id, so fusing 10⁴ queries is
+    * the same plan as fusing one; a single query is query_id 0).
     */
   private def fuseRankListsBatch(lex: DataFrame, vec: DataFrame,
       k: Int, rrfK: Int): (DataFrame, () => Unit) = {
@@ -1514,105 +1398,78 @@ object TextAnalysis {
     (out, () => graft.ops.Caching.releaseCheckpoint(fused))
   }
 
-  /** Hybrid retrieval with BOTH sides served from indexes at rest —
-    * the 100 TB shape: the lexical side reads its terms' postings from
-    * the persisted [[SearchIndex]] (sub-linear in corpus size), and
-    * the semantic side probes a persisted IVF index over the
-    * [[hashEmbedVectors]] corpus ([[graft.ann.Ivf.probeTopKOnIndex]] —
-    * cell-confined, so a serve touches nProbe cells' vectors, never
-    * the corpus). The query pseudo-document is hash-embedded at query
-    * time (hashEmbed is per-doc pure, so the query vector needs no
-    * corpus pass), and the fusion tail is the SAME [[fuseRankLists]]
-    * core as the exact forms. With `nProbe` ≥ the cell count the
-    * semantic side degenerates to the exact dense-cosine ranking —
-    * the oracle-checkable configuration; production serves with small
-    * `nProbe` at measured recall ([[graft.ann.Knn.recallEval]]).
-    */
   /** BATCH hybrid serving from indexes at rest — the full production
     * serving story in one operator: a `(query_id, token)` frame's
-    * lexical sides serve in one pass over the postings
-    * ([[SearchIndex.searchTopKBatch]]), its semantic sides in one
-    * cell-confined pass over the IVF index (the probe machinery is
-    * natively batch — `probeTopKOnIndex` takes a query FRAME), and
-    * the shared [[fuseRankListsBatch]] tail fuses per query. Query
-    * pseudo-docs hash-embed corpus-free (hashEmbed is per-doc pure,
-    * sign sums are token-order-free); query vec_ids are negated
-    * (−query_id−1) so they can never collide with corpus vec_ids in
-    * the self-exclusion filter. Output: (query_id, rn, doc_id,
+    * lexical sides serve in one pass over the postings (the
+    * [[SearchIndex.scoreTopK]] core, token-order folds), its semantic
+    * sides in one cell-confined pass over a persisted IVF index over
+    * the [[hashEmbedVectors]] corpus ([[graft.ann.Ivf.probeTopKOnIndex]]
+    * takes a query FRAME — a serve touches nProbe cells' vectors, never
+    * the corpus), and the shared [[fuseRankListsBatch]] tail fuses per
+    * query. Query pseudo-docs hash-embed corpus-free (hashEmbed is
+    * per-doc pure, sign sums are token-order-free); query vec_ids are
+    * negated (−query_id−1) so they can never collide with corpus
+    * vec_ids in the self-exclusion filter. With `nProbe` ≥ the cell
+    * count the semantic side degenerates to the exact dense-cosine
+    * ranking — the oracle-checkable configuration; production serves
+    * with small `nProbe` at measured recall
+    * ([[graft.ann.Knn.recallEval]]). Output: (query_id, rn, doc_id,
     * lex_rank, vec_rank, rrf_score).
+    *
+    * Eager, materialized; the result's lineage runs through a released
+    * `localCheckpoint`, so it cannot recompute if its blocks are lost
+    * (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchBatchOnIndexes(lexIdx: SearchIndex.TextIndex,
       annCells: DataFrame, annCentroids: DataFrame, queries: DataFrame,
       k: Int = 10, kEach: Int = 20, d: Int = 64, nProbe: Int = 3,
       rrfK: Int = 60): DataFrame = {
-    val lex = SearchIndex.searchTopKBatch(lexIdx, queries, kEach)
+    val (out, releaseFused) = hybridOnIndexes(lexIdx, annCells, annCentroids,
+      SearchIndex.batchQuery(queries), k, kEach, d, nProbe, rrfK)
+    graft.ops.Caching.materialized(out)(releaseFused())
+  }
+
+  /** Hybrid retrieval with BOTH sides served from indexes at rest, for
+    * ONE query — the 100 TB shape: [[hybridSearchBatchOnIndexes]]'s
+    * pipeline over a batch of one (query_id 0, so the pseudo-doc's
+    * vec_id is [[HybridQueryDocId]]), its lexical side folding in
+    * `terms` order. Output: (rn, doc_id, lex_rank, vec_rank,
+    * rrf_score).
+    *
+    * Eager, materialized; the result's lineage runs through a released
+    * `localCheckpoint`, so it cannot recompute if its blocks are lost
+    * (the contract on [[SearchIndex.scoreTopK]]).
+    */
+  def hybridSearchTopKOnIndexes(lexIdx: SearchIndex.TextIndex,
+      annCells: DataFrame, annCentroids: DataFrame,
+      terms: Seq[String] = Bm25Terms, k: Int = 10, kEach: Int = 20,
+      d: Int = 64, nProbe: Int = 3, rrfK: Int = 60): DataFrame = {
+    val (out, releaseFused) = hybridOnIndexes(lexIdx, annCells, annCentroids,
+      SearchIndex.termQuery(annCells.sparkSession, terms), k, kEach, d, nProbe, rrfK)
+    graft.ops.Caching.materialized(out.drop("query_id"))(releaseFused())
+  }
+
+  /** The index-served hybrid pipeline over `(query_id, token, ord)`
+    * queries: lexical ranks from the one BM25 core, semantic ranks
+    * from the IVF probe of each query's pseudo-doc, fused per query.
+    */
+  private def hybridOnIndexes(lexIdx: SearchIndex.TextIndex,
+      annCells: DataFrame, annCentroids: DataFrame, queries: DataFrame,
+      k: Int, kEach: Int, d: Int, nProbe: Int, rrfK: Int): (DataFrame, () => Unit) = {
+    val lex = SearchIndex.serve(lexIdx, queries, kEach)
       .select(col("query_id"), col("doc_id"), col("rn").as("lex_rank"))
     val qDocs = queries.groupBy(col("query_id"))
       .agg(concat_ws(" ", sort_array(collect_list(col("token")))).as("text"))
-      .select((-col("query_id") - 1).as("doc_id"), col("text"),
-        col("query_id").as("__qid"))
-    val qVecs = hashEmbedVectors(qDocs.select(col("doc_id"), col("text")), d)
+      .select((-col("query_id") - 1).as("doc_id"), col("text"))
+    val qVecs = hashEmbedVectors(qDocs, d)
       .select(col("doc_id").as("vec_id"), col("embedding"))
     val vec = graft.ann.Ivf.probeTopKOnIndex(annCells, annCentroids, qVecs,
         nProbe, kEach)
       .select((-col("q_id") - 1).as("query_id"),
         col("cand_id").as("doc_id"), col("rn").as("vec_rank"))
-    val (out, releaseFused) = fuseRankListsBatch(lex, vec, k, rrfK)
-    graft.ops.Caching.materialized(out)(releaseFused())
+    fuseRankListsBatch(lex, vec, k, rrfK)
   }
 
-  def hybridSearchTopKOnIndexes(lexIdx: SearchIndex.TextIndex,
-      annCells: DataFrame, annCentroids: DataFrame,
-      terms: Seq[String] = Bm25Terms, k: Int = 10, kEach: Int = 20,
-      d: Int = 64, nProbe: Int = 3, rrfK: Int = 60): DataFrame = {
-    val spark = annCells.sparkSession
-    import spark.implicits._
-    val qVec = hashEmbedVectors(
-      withToks(Seq((HybridQueryDocId, terms.mkString(" "))).toDF("doc_id", "text")), d)
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-    val vec = graft.ann.Ivf.probeTopKOnIndex(annCells, annCentroids, qVec,
-        nProbe, kEach)
-      .select(col("cand_id").as("doc_id"), col("rn").as("vec_rank"))
-    val (out, releaseFused) =
-      fuseRankLists(SearchIndex.searchTopK(lexIdx, terms, kEach), vec, k, kEach, rrfK)
-    graft.ops.Caching.materialized(out)(releaseFused())
-  }
-
-  /** [[searchTopKOnIndex]] over a freshly built [[invertedIndex]].
-    *
-    * The (token, doc, tf) grain is computed ONCE and cached for the
-    * operator's scope (r16): the index's df/cap/postings branches plus
-    * the candidate pivot all derive from it, and without the cache the
-    * tokenize → explode → count chain physically re-ran once per
-    * branch (4 chains measured per serve — the lexical twin of the r15
-    * hashEmbed finding). Doc lengths and corpus stats still come from
-    * the un-exploded tokenize pass (a doc with zero tokens must count
-    * toward n_docs, which the docTf grain cannot see). The (small,
-    * top-k) result is materialized so the cache can be released — the
-    * returned frame is the one cache scope left behind.
-    */
-  def searchTopK(docs: DataFrame, terms: Seq[String] = Bm25Terms,
-      k: Int = 20, k1: Double = 1.2, b: Double = 0.75,
-      maxDf: Long = DefaultMaxTokenDf): DataFrame = {
-    val t = withToks(docs).withColumn("dl", size(col("toks")).cast("long"))
-    val stats = t.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val docTf = docTermFreq(t)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = searchFromPostings(t.select(col("doc_id"), col("dl")), stats,
-      invertedIndexFromDocTf(docTf, maxDf), terms, k, k1, b)
-    graft.ops.Caching.materialized(out) { docTf.unpersist(false) }
-  }
-
-  /** Overlapping fixed-width document chunking — the context-window
-    * shaping step of an LLM training/RAG pipeline: each document is
-    * split into `size`-char windows every `stride` chars (overlap =
-    * size − stride keeps boundary-spanning content intact in some
-    * chunk). Pure per-row explode+substring projection — no shuffle at
-    * all except the deterministic output sort; at 100 TB this is the
-    * ideal map-only shape. Each chunk carries its provenance
-    * (doc_id, index, start offset) and a portable content hash, so a
-    * downstream exact-dedup over chunks composes directly.
-    */
   /** Per-document keyword extraction — the metadata op a corpus
     * curator tags documents with: each document's top-`k` tokens by
     * tf × rational idf, where the idf factor is BM25's
@@ -1728,6 +1585,16 @@ object TextAnalysis {
         GraftFunctions.hex64(col("chunk")).as("chunk_hash"))
   }
 
+  /** Overlapping fixed-width document chunking — the context-window
+    * shaping step of an LLM training/RAG pipeline: each document is
+    * split into `size`-char windows every `stride` chars (overlap =
+    * size − stride keeps boundary-spanning content intact in some
+    * chunk). Pure per-row explode+substring projection — no shuffle at
+    * all except the deterministic output sort; at 100 TB this is the
+    * ideal map-only shape. Each chunk carries its provenance
+    * (doc_id, index, start offset) and a portable content hash, so a
+    * downstream exact-dedup over chunks composes directly.
+    */
   def chunks(docs: DataFrame, size: Int = 200, stride: Int = 150): DataFrame =
     docs
       .filter(length(col("text")) > 0)

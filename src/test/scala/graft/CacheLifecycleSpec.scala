@@ -102,6 +102,23 @@ class CacheLifecycleSpec extends SparkSpec {
     assertScoped(graft.text.TextAnalysis.hybridSearchTopK(docs))
   }
 
+  test("SearchIndex.save and add release their build caches; nothing is left behind") {
+    import graft.text.SearchIndex
+    val tmp = java.nio.file.Files.createTempDirectory("graft_search_clc").toString
+    val before = persisted
+    SearchIndex.save(docs.filter(col("doc_id") % 2 === 0), "graft_search_clc",
+      nBuckets = 4, path = Some(s"$tmp/tbl"))
+    assert((persisted -- before).isEmpty, s"save leaked: ${persisted -- before}")
+    SearchIndex.add(docs.filter(col("doc_id") % 2 === 1), "graft_search_clc")
+    assert((persisted -- before).isEmpty, s"add leaked: ${persisted -- before}")
+    spark.sql("DROP TABLE IF EXISTS graft_search_clc")
+    spark.sql("DROP TABLE IF EXISTS graft_search_clc_doclen")
+  }
+
+  test("fresh searchTopK releases its docTf cache; result is the scope") {
+    assertScoped(graft.text.TextAnalysis.searchTopK(docs))
+  }
+
   test("pageRank releases edges, degrees, and iteration checkpoints; result is the scope") {
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")

@@ -679,6 +679,34 @@ class StreamingMultimodalSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_qstream_spec")
   }
 
+  test("searchManyStream: streamed query batches against the at-rest SearchIndex ≡ searchTopKBatch") {
+    import graft.text.{SearchIndex, TextAnalysis}
+    val docs = Tables.load(spark, sfDir, "documents")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_search_stream").toString
+    SearchIndex.save(docs, "graft_search_stream_spec", nBuckets = 4, path = Some(s"$tmp/tbl"))
+    val rows = TextAnalysis.BatchQueries
+    val input = MemoryStream[(Long, String)](spark, 33)
+    input.addData(rows.filter(_._1 == 0L): _*) // two micro-batches:
+    input.addData(rows.filter(_._1 != 0L): _*) // queries are stateless rows
+    val stream = input.toDF().select(col("_1").as("query_id"), col("_2").as("token"))
+    val got = scala.collection.concurrent.TrieMap.empty[(Long, Long), (Long, Long)]
+    val q = Streams.searchManyStream(stream, "graft_search_stream_spec", k = 10) { (res, _) =>
+      res.collect().foreach(r => got((r.getAs[Long]("query_id"), r.getAs[Long]("rn"))) =
+        (r.getAs[Long]("doc_id"), java.lang.Double.doubleToLongBits(r.getAs[Double]("score"))))
+    }.start()
+    try q.processAllAvailable() finally q.stop()
+    // union of per-batch results ≡ one batch serve of all queries, bitwise
+    val batch = SearchIndex.searchTopKBatch(SearchIndex.load(spark, "graft_search_stream_spec"),
+        rows.toDF("query_id", "token"), k = 10).collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rn")) ->
+        (r.getAs[Long]("doc_id"), java.lang.Double.doubleToLongBits(r.getAs[Double]("score"))))
+      .toMap
+    assert(got.toMap === batch, "streamed BM25 top-k diverged from batch serving")
+    assert(batch.keySet.map(_._1) === rows.map(_._1).toSet)
+    spark.sql("DROP TABLE IF EXISTS graft_search_stream_spec")
+    spark.sql("DROP TABLE IF EXISTS graft_search_stream_spec_doclen")
+  }
+
   test("scoreQualityStream / scoreLangStream: micro-batch scores ≡ batch scoring from the persisted model") {
     import graft.text.{LangClassifier, QualityClassifier}
     val sent = "the project team reviewed all of the results and found that " +

@@ -1359,6 +1359,12 @@ class TextKnnSpec extends SparkSpec {
       batch.zip(single).foreach { case ((_, bs), (_, ss)) =>
         assert(math.abs(bs - ss) <= math.ulp(ss) * 4, s"query $qid score drift")
       }
+      // a single query folding in token order IS a batch of one: bitwise
+      def bits(rs: Seq[(Long, Double)]) =
+        rs.map { case (id, sc) => (id, java.lang.Double.doubleToLongBits(sc)) }
+      val sorted = SearchIndex.searchTopK(idx, rows.map(_._2).sorted, k = 10).collect()
+        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("score")))
+      assert(bits(sorted.toSeq) === bits(batch.toSeq), s"query $qid batch-of-one bits")
     }
     // ranks are 1..k dense per query
     byQuery.values.foreach { rows =>
