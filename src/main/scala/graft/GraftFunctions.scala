@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 import graft.expressions.{CosineSimilarity, DetLnExpr, DotProduct, L2Norm, L2Normalize, SparseToDense, TopKByScore}
@@ -156,37 +158,38 @@ object GraftFunctions {
     GraftColumnBridge.column(
       graft.expressions.WordShingles(GraftColumnBridge.expression(toks), w, distinct))
 
+  /** Content fingerprint of a tokenized document: [[hex64]] of its
+    * tokens joined with single spaces — the exact-dedup key every
+    * fingerprint column in the engine shares (the DuckDB oracle mirrors
+    * it as `hex64(array_to_string(toks,' '))`).
+    */
+  def fingerprintOfTokens(toks: Column): Column = hex64(array_join(toks, " "))
+
   /** Register SQL names for the native expressions on a session
-    * (idempotent; safe to call per query on driver-provided sessions).
+    * (idempotent; safe to call per query): a name the session already
+    * has is left alone, so a repeat call replaces nothing and logs
+    * nothing.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSimilarity(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_norm", es => L2Norm(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_normalize", es => L2Normalize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("int_dot_product",
-      es => graft.expressions.IntDotProduct(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_distance",
-      es => graft.expressions.HammingDistance(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("adc_score",
-      es => graft.expressions.AdcScore(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("deflate_size",
-      es => graft.expressions.DeflateSize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("char_entropy_stats",
-      es => graft.expressions.CharEntropyStats(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("jpeg_sof_offset",
-      es => graft.expressions.JpegSofOffset(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => graft.expressions.NfcNormalize(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("unicode_tokens",
-      es => graft.expressions.UnicodeTokens(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("script_counts",
-      es => graft.expressions.ScriptCounts(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("det_ln",
-      es => DetLnExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("gaussian_project",
-      es => GraftFunctions.projectFromSql(es), "scala_udf")
+    def add(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    add("cosine_sim", es => CosineSimilarity(es.head, es(1)))
+    add("dot_product", es => DotProduct(es.head, es(1)))
+    add("l2_norm", es => L2Norm(es.head))
+    add("l2_normalize", es => L2Normalize(es.head))
+    add("int_dot_product", es => graft.expressions.IntDotProduct(es.head, es(1)))
+    add("hamming_distance", es => graft.expressions.HammingDistance(es.head, es(1)))
+    add("adc_score", es => graft.expressions.AdcScore(es.head, es(1)))
+    add("deflate_size", es => graft.expressions.DeflateSize(es.head))
+    add("char_entropy_stats", es => graft.expressions.CharEntropyStats(es.head))
+    add("jpeg_sof_offset", es => graft.expressions.JpegSofOffset(es.head))
+    add("nfc_normalize", es => graft.expressions.NfcNormalize(es.head))
+    add("unicode_tokens", es => graft.expressions.UnicodeTokens(es.head))
+    add("script_counts", es => graft.expressions.ScriptCounts(es.head))
+    add("det_ln", es => DetLnExpr(es.head))
+    add("gaussian_project", es => GraftFunctions.projectFromSql(es))
   }
 
   /** SQL-surface constructor for [[graft.expressions.GaussianProjectExpr]]:

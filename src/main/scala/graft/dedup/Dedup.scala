@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -9,8 +8,8 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import graft.GraftFunctions.{hex64, tokens}
-import graft.ops.Caching.releaseCheckpoint
+import graft.GraftFunctions.{fingerprintOfTokens, hex64, tokens}
+import graft.ops.Caching.{materialized, releaseCheckpoint}
 
 /** Deduplication suite for training-data pipelines.
   *
@@ -58,9 +57,6 @@ object Dedup {
     if (docs.columns.contains("toks")) docs
     else docs.withColumn("toks", tokens(col("text")))
 
-  private def materialized(df: DataFrame)(release: => Unit): DataFrame =
-    graft.ops.Caching.materialized(df)(release)
-
   /** Distinct (doc_id, shingle) pairs. The shingle expression already
     * dedupes within each document (array_distinct), so no extra
     * shuffle is needed to get set semantics; shingling runs over the
@@ -89,7 +85,7 @@ object Dedup {
     */
   def exact(docs: DataFrame): DataFrame = {
     val t = withToks(docs)
-      .withColumn("fingerprint", hex64(array_join(col("toks"), " ")))
+      .withColumn("fingerprint", fingerprintOfTokens(col("toks")))
       .select(col("doc_id"), col("fingerprint"))
     val g = t.groupBy(col("fingerprint")).agg(
       count(lit(1)).as("group_size"), min(col("doc_id")).as("keeper_id"))
@@ -124,7 +120,7 @@ object Dedup {
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn("n_punct", length(regexp_replace(lower(col("text")),
         graft.text.TextAnalysis.PunctKeepClass, "")))
-      .withColumn("fingerprint", hex64(array_join(col("toks"), " ")))
+      .withColumn("fingerprint", fingerprintOfTokens(col("toks")))
       .select(col("doc_id"), col("fingerprint"),
         graft.text.TextAnalysis.qualityScore.as("quality_score"))
     val best = t.groupBy(col("fingerprint")).agg(
@@ -157,12 +153,13 @@ object Dedup {
     * k-wise Carter-Wegman family ([[MinhashFamily]]); min over the
     * shingle set per function. One explode + one grouped aggregation
     * with map-side partials — the shuffle carries k longs per doc.
+    * Lazy (see [[jaccardOf]]).
     */
   def minhash(docs: DataFrame): DataFrame =
     minhashOf(shingleSet(docs))
 
   /** (doc_id, band, band_hash) — one row per band; band hash combines
-    * the band's r minhash values.
+    * the band's r minhash values. Lazy (see [[jaccardOf]]).
     */
   def minhashBands(mh: DataFrame): DataFrame = {
     val bandCols = (0 until Bands).map { j =>
@@ -171,11 +168,28 @@ object Dedup {
     mh.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "band_hash")))
   }
 
+  /** The band signature of a (doc_id, s) shingle table. */
+  private def bandsOf(sh: DataFrame): DataFrame = minhashBands(minhashOf(sh))
+
+  /** Distinct band-collision pairs (a from `xBands`, b from `yBands`)
+    * off one (band, band_hash) equi-join. A self-join caller adds `a < b`.
+    */
+  private def collisionPairs(xBands: DataFrame, yBands: DataFrame): DataFrame =
+    xBands.as("x").join(yBands.as("y"),
+        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .distinct()
+
+  /** The rows of `df` whose doc_id is among the candidate `ids` (broadcast). */
+  private def onlyIds(df: DataFrame, ids: DataFrame): DataFrame =
+    df.join(graft.ops.Broadcasting.maybeBroadcast(ids), Seq("doc_id"), "left_semi")
+
   /** MinHash-LSH near-duplicate pairs: candidates share ≥1 full band;
     * each candidate is verified with exact shingle-set Jaccard (the
     * analogue of the reference's cosine rerank of bucket candidates).
     * Returns (a, b, n_int, n_a, n_b, jaccard) for candidates with ≥1
-    * shared shingle.
+    * shared shingle. Eager; the caller unpersists the result (see
+    * [[jaccardOf]]).
     */
   def minhashLshPairs(docs: DataFrame): DataFrame = {
     // the shingle set feeds both the signature branch and the exact
@@ -188,19 +202,16 @@ object Dedup {
     // subtrees off the shingle cache — the dominant cost of every
     // near-dup row). Bands are Bands rows per doc — the lightweight
     // proxy table, cheap to hold.
-    val bands = minhashBands(minhashOf(sh))
+    val bands = bandsOf(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    // cand is tiny but referenced three times downstream (the id prune
+    // and both verifier joins) — cache it so the signature/band subtree
+    // runs once
+    val cand = collisionPairs(bands, bands).filter(col("a") < col("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // cand is tiny but referenced three times downstream (both sides of
-    // the doc filter + the intersection join) — cache it so the
-    // signature/band subtree runs once
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
+    // one pruned side serves as both verifier sides
+    val shc = onlyIds(sh, cand.select(explode(array(col("a"), col("b"))).as("doc_id")).distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (jac, shc) = jaccardOf(cand, sh)
-    materialized(jac) {
+    materialized(jaccardOf(cand, shc, shc)) {
       cand.unpersist(false); bands.unpersist(false)
       shc.unpersist(false); sh.unpersist(false)
     }
@@ -209,7 +220,8 @@ object Dedup {
   /** Exact n-gram Jaccard pairs: every pair sharing ≥1 shingle, kept
     * when jaccard ≥ minJaccard. The exact baseline for the LSH variant.
     * Intersection counts come straight off the shingle self-join (one
-    * shuffle), no separate candidate materialization.
+    * shuffle), no separate candidate materialization; sizes and the
+    * ratio are the verifier's ([[jaccardOf]]). Lazy.
     *
     * `maxShingleDf`: the self-join is quadratic in a shingle's document
     * frequency — one stop-phrase shared by 10⁶ docs yields 10¹² join
@@ -233,53 +245,57 @@ object Dedup {
     val shAll = shingleSet(docs)
     val sh = maxShingleDf.fold(shAll)(cap =>
       graft.ops.Caching.capByFrequency(shAll, col("s"), cap))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.as("x").join(sh.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .agg(count(lit(1)).as("n_int"))
-    inter
-      .join(sizes.as("za"), col("a") === col("za.doc_id"))
-      .join(sizes.as("zb"), col("b") === col("zb.doc_id"))
-      .select(
-        col("a"), col("b"), col("n_int"),
-        col("za.n").as("n_a"), col("zb.n").as("n_b"),
-        (col("n_int") / (col("za.n") + col("zb.n") - col("n_int"))).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    withJaccard(inter, sh, sh).filter(col("jaccard") >= minJaccard)
   }
 
-  /** Exact Jaccard for given candidate pairs over a shingle set. The
-    * shingle set is first narrowed to candidate docs with a broadcast
-    * semi-join — at scale the candidate set is a vanishing fraction of
-    * the corpus, so verification never re-shuffles the full data.
+  /** The exact-Jaccard verifier: for candidate pairs `(a, b)`, the
+    * shingle intersection of a's rows in `shA` and b's rows in `shB`,
+    * both set sizes and the ratio — (a, b, n_int, n_a, n_b, jaccard)
+    * for pairs sharing ≥1 shingle. Every near-dup operator verifies
+    * here, so a pair scores bit-identically whichever operator finds
+    * it.
+    *
+    * Each side is read twice (its sizes and the intersection), so
+    * callers pass sides already narrowed to the candidate ids
+    * ([[onlyIds]]) and cached — otherwise the prune over the full
+    * shingle set runs once per reading branch. `minhashLshPairs` passes
+    * one pruned set as both sides; `incrementalFlags` prunes the batch
+    * side to the a-ids and the corpus side to the b-ids.
+    *
+    * Evaluation and cache contract of the public near-dup operators:
+    *  - lazy, nothing cached: [[minhash]], [[minhashBands]],
+    *    [[ngramJaccardPairs]];
+    *  - eager, returning a materialized result that is the one cache
+    *    scope left behind — the caller `unpersist`s it:
+    *    [[minhashLshPairs]], [[nearDupClusters]], [[nearDupKeepBest]],
+    *    [[incrementalDedup]], [[incrementalDedupOnSignatures]],
+    *    [[decontaminateFuzzy]] (and the per-batch frames of
+    *    [[graft.streaming.Streams.nearDupStreamAgainstSignatures]]);
+    *  - eager, leaving nothing cached: the store writers
+    *    [[saveSignatures]] and [[addSignatures]].
     */
-  private def jaccardOf(cand: DataFrame, sh: DataFrame): (DataFrame, DataFrame) = {
-    val candDocs = cand
-      .select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
-    // the pruned shingle set feeds FOUR plan branches (both sides of
-    // the intersection join, and the sizes aggregate under each
-    // join-back) — cache it or the semi-join over the full shingle set
-    // physically runs once per branch (r16; same no-common-subtree-
-    // reuse disease as hashEmbed/docTf). Candidates are a vanishing
-    // fraction of the corpus at scale, so the cache is small by the
-    // same argument that justifies the prune itself. Returned to the
-    // caller for release once its own result is materialized.
-    val shc = sh.join(graft.ops.Broadcasting.maybeBroadcast(candDocs),
-      Seq("doc_id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sizes = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shc.as("sa"), col("a") === col("sa.doc_id"))
-      .join(shc.as("sb"), col("b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_int"))
-    val out = inter
-      .join(sizes.as("za"), col("a") === col("za.doc_id"))
-      .join(sizes.as("zb"), col("b") === col("zb.doc_id"))
+  private def jaccardOf(cand: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame =
+    withJaccard(
+      cand
+        .join(shA.as("sa"), col("a") === col("sa.doc_id"))
+        .join(shB.as("sb"), col("b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_int")),
+      shA, shB)
+
+  /** The verifier's tail: a's and b's set sizes and the ratio. */
+  private def withJaccard(inter: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame = {
+    def sizes(sh: DataFrame) = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    inter
+      .join(sizes(shA).as("za"), col("a") === col("za.doc_id"))
+      .join(sizes(shB).as("zb"), col("b") === col("zb.doc_id"))
       .select(
         col("a"), col("b"), col("n_int"),
         col("za.n").as("n_a"), col("zb.n").as("n_b"),
         (col("n_int") / (col("za.n") + col("zb.n") - col("n_int"))).as("jaccard"))
-    (out, shc)
   }
 
   /** (count, xor-of-row-hashes) signature of an edge set — an O(1)-state
@@ -437,6 +453,7 @@ object Dedup {
   /** Near-duplicate clusters over the MinHash-LSH pair graph at
     * `minJaccard` — the canonical "keep one per cluster" dedup output.
     * Composition of [[minhashLshPairs]] and [[clustersFromPairs]].
+    * Eager; the caller unpersists the result (see [[jaccardOf]]).
     */
   def nearDupClusters(docs: DataFrame, minJaccard: Double = 0.7, maxIters: Int = 30): DataFrame = {
     val pairs = minhashLshPairs(docs)
@@ -462,7 +479,8 @@ object Dedup {
     * exchange, where a window would buffer-and-sort the whole cluster
     * on one task (round-8 verdict #3). The cluster labels are cached
     * by [[clustersFromPairs]], so the two references cost one
-    * contraction.
+    * contraction. Eager; the caller unpersists the result (see
+    * [[jaccardOf]]).
     */
   def nearDupKeepBest(docs: DataFrame, minJaccard: Double = 0.7,
       maxIters: Int = 30): DataFrame = {
@@ -502,29 +520,6 @@ object Dedup {
     }
   }
 
-  /** Exact Jaccard for candidate pairs whose sides come from two
-    * DIFFERENT shingle sources (a-side docs in `shA`, b-side docs in
-    * `shB`) — the cross-table generalization of [[jaccardOf]].
-    */
-  private def jaccardAcross(cand: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame = {
-    val aDocs = cand.select(col("a").as("doc_id")).distinct()
-    val bDocs = cand.select(col("b").as("doc_id")).distinct()
-    val sa = shA.join(graft.ops.Broadcasting.maybeBroadcast(aDocs), Seq("doc_id"), "left_semi")
-    val sb = shB.join(graft.ops.Broadcasting.maybeBroadcast(bDocs), Seq("doc_id"), "left_semi")
-    val sizesA = sa.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val sizesB = sb.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sa.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sb.as("sb"), col("b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_int"))
-    inter
-      .join(sizesA.as("za"), col("a") === col("za.doc_id"))
-      .join(sizesB.as("zb"), col("b") === col("zb.doc_id"))
-      .select(col("a"), col("b"), col("n_int"),
-        col("za.n").as("n_a"), col("zb.n").as("n_b"),
-        (col("n_int") / (col("za.n") + col("zb.n") - col("n_int"))).as("jaccard"))
-  }
-
   /** Incremental dedup — the production ingest shape: flag each BATCH
     * document that duplicates the EXISTING corpus, without re-deduping
     * the corpus against itself (reference analogue: querying a
@@ -537,6 +532,7 @@ object Dedup {
     * exact Jaccard ≥ `minJaccard` (tie-break: highest jaccard, then
     * smallest corpus doc_id). Output one row per batch doc:
     * (doc_id, exact_dup, near_dup, best_match, best_jaccard, keep).
+    * Eager; the caller unpersists the result (see [[jaccardOf]]).
     *
     * At 100 TB the corpus side's signatures/bands come from a
     * persisted index (compute once, reuse per batch) — this method
@@ -549,24 +545,25 @@ object Dedup {
     // fingerprint and shingle stages (withToks trusts precomputed toks)
     val tokC = withToks(corpus).select(col("doc_id"), col("toks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val corpusFp = tokC
-      .select(hex64(array_join(col("toks"), " ")).as("fingerprint")).distinct()
     // ONE corpus shingle pass feeds both the band signatures and the
     // exact-Jaccard verify (tokC caching alone would still run the
     // WordShingles explode twice)
     val shC = shingleSet(tokC).persist(StorageLevel.MEMORY_AND_DISK)
-    val corpusBands = minhashBands(minhashOf(shC))
-    incrementalFlags(batch, corpusFp, corpusBands,
-      _ => shC, minJaccard) { shC.unpersist(false); tokC.unpersist(false) }
+    incrementalFlags(batch, fingerprintsOf(tokC), bandsOf(shC),
+      onlyIds(shC, _), minJaccard) { shC.unpersist(false); tokC.unpersist(false) }
   }
+
+  /** Distinct content fingerprints of a (doc_id, toks) frame. */
+  private def fingerprintsOf(tok: DataFrame): DataFrame =
+    tok.select(fingerprintOfTokens(col("toks")).as("fingerprint")).distinct()
 
   /** The ingest core shared by [[incrementalDedup]] (corpus signatures
     * recomputed in-plan) and [[incrementalDedupOnSignatures]] (corpus
     * signatures read from a persisted [[saveSignatures]] table — the
     * production shape): one definition, so the two tiers cannot drift.
-    * `corpusShinglesFor(candidateIds)` supplies corpus shingle rows for
-    * the exact-Jaccard verify; the persisted path uses it to tokenize
-    * ONLY band-collided corpus docs.
+    * `corpusShinglesFor(candidateIds)` supplies the corpus shingle rows
+    * of the band-collided docs for the exact-Jaccard verify; the
+    * persisted path uses it to tokenize ONLY those docs.
     */
   private def incrementalFlags(batch: DataFrame, corpusFp: DataFrame,
       corpusBands: DataFrame, corpusShinglesFor: DataFrame => DataFrame,
@@ -574,19 +571,20 @@ object Dedup {
     val tokB = withToks(batch).select(col("doc_id"), col("toks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val exact = tokB
-      .select(col("doc_id"), hex64(array_join(col("toks"), " ")).as("fingerprint"))
+      .select(col("doc_id"), fingerprintOfTokens(col("toks")).as("fingerprint"))
       .join(corpusFp, Seq("fingerprint"), "left_semi")
       .select(col("doc_id"), lit(true).as("exact_dup"))
     val shB = shingleSet(tokB).persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = minhashBands(minhashOf(shB)).as("x")
-      .join(corpusBands.as("y"),
-        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
+    val cand = collisionPairs(bandsOf(shB), corpusBands)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val shC = corpusShinglesFor(cand.select(col("b").as("doc_id")).distinct())
+    // each verifier side narrowed to its candidate ids ONCE and cached
+    // (the verifier reads each side twice); both sides stay narrowed —
+    // decontaminateFuzzy's "batch" is the training set, the large side
+    val sa = onlyIds(shB, cand.select(col("a").as("doc_id")).distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val near = jaccardAcross(cand, shB, shC)
+    val sb = corpusShinglesFor(cand.select(col("b").as("doc_id")).distinct())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val near = jaccardOf(cand, sa, sb)
       .filter(col("jaccard") >= minJaccard)
       .groupBy(col("a"))
       .agg(max(struct(col("jaccard"), (-col("b")).as("neg_b"), col("b"))).as("m"))
@@ -602,9 +600,40 @@ object Dedup {
         (!(coalesce(col("exact_dup"), lit(false)) ||
           coalesce(col("near_dup"), lit(false)))).as("keep"))
     materialized(out) {
-      cand.unpersist(false); shB.unpersist(false); shC.unpersist(false)
-      tokB.unpersist(false); releaseCorpus
+      cand.unpersist(false); sa.unpersist(false); sb.unpersist(false)
+      shB.unpersist(false); tokB.unpersist(false); releaseCorpus
     }
+  }
+
+  /** The signature-store writer behind [[saveSignatures]] (mode
+    * overwrite) and [[addSignatures]] (append); `buckets(t)` is table t's
+    * bucket count. One cached tokenize pass feeds two CONCURRENT writes
+    * (the Pq.train pattern) with no warm-up count: block-level cache
+    * locks build each partition once (the SearchIndex.save precedent).
+    * A save clusters each table by its bucket key first (the Compaction
+    * idiom): one file per bucket instead of tasks × buckets. An append
+    * does not: n tasks per table cost a small batch more than the files
+    * they save (perfbench curate, 4 cores: write_best_s 1.24 → 1.99 s),
+    * and [[compactSignatures]] folds append debris.
+    */
+  private def writeSignatures(docs: DataFrame, table: String, mode: String,
+      buckets: String => Int, path: Option[String]): Unit = {
+    val tok = withToks(docs).select(col("doc_id"), col("toks"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def write(df: DataFrame, t: String, loc: Option[String], key: String*) = Future {
+      val n = buckets(t)
+      val clustered = if (mode == "overwrite") df.repartition(n, key.map(col): _*) else df
+      val w = clustered.write.mode(mode)
+        .bucketBy(n, key.head, key.tail: _*).sortBy(key.head, key.tail: _*)
+        .format("parquet")
+      loc.foreach(l => w.option("path", l))
+      w.saveAsTable(t)
+    }
+    try Seq(
+        write(fingerprintsOf(tok), s"${table}_fp", path.map(loc => s"${loc}_fp"), "fingerprint"),
+        write(bandsOf(shingleSet(tok)), table, path, "band", "band_hash"))
+      .foreach(Await.result(_, Duration.Inf))
+    finally tok.unpersist(false)
   }
 
   /** Persist the corpus-side dedup signatures ONCE — fingerprints as a
@@ -615,39 +644,11 @@ object Dedup {
     * per batch). The bucketed layouts make BOTH corpus-side joins of an
     * ingest exchange-free after reload: the exact semi-join co-locates
     * on fingerprint, the band collision join on (band, band_hash).
-    * One corpus tokenize pass feeds both relations.
+    * Eager; leaves nothing cached (see [[jaccardOf]]).
     */
   def saveSignatures(corpus: DataFrame, table: String, nBuckets: Int = 32,
-      path: Option[String] = None): Unit = {
-    val tokC = withToks(corpus).select(col("doc_id"), col("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the fingerprint and band tables are independent — write them as
-    // CONCURRENT jobs off the shared cached tokenize pass (the Pq.train
-    // submission pattern); no warm-up count — the CacheManager's
-    // block-level locks already build each cache partition exactly once
-    // under concurrent first readers (the SearchIndex.save precedent)
-    val fFp = Future {
-      val fp = tokC
-        .select(hex64(array_join(col("toks"), " ")).as("fingerprint")).distinct()
-      // cluster by the bucket key first (the Compaction idiom): one
-      // file per bucket instead of tasks × nBuckets
-      val wf = fp.repartition(nBuckets, col("fingerprint")).write.mode("overwrite")
-        .bucketBy(nBuckets, "fingerprint").sortBy("fingerprint").format("parquet")
-      path.foreach(loc => wf.option("path", s"${loc}_fp"))
-      wf.saveAsTable(s"${table}_fp")
-    }
-    val fBands = Future {
-      val bands = minhashBands(minhashOf(shingleSet(tokC)))
-      val wb = bands.repartition(nBuckets, col("band"), col("band_hash"))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "band", "band_hash").sortBy("band", "band_hash")
-        .format("parquet")
-      path.foreach(loc => wb.option("path", loc))
-      wb.saveAsTable(table)
-    }
-    Await.result(fFp, Duration.Inf); Await.result(fBands, Duration.Inf)
-    tokC.unpersist(false)
-  }
+      path: Option[String] = None): Unit =
+    writeSignatures(corpus, table, "overwrite", _ => nBuckets, path)
 
   /** Restore (fingerprints, bands) from a [[saveSignatures]] table pair. */
   def loadSignatures(spark: org.apache.spark.sql.SparkSession,
@@ -666,33 +667,16 @@ object Dedup {
     * probes), so a duplicate row would not corrupt results, but it is
     * dead weight compaction has to carry. Periodic
     * [[compactSignatures]] folds append debris back to one file per
-    * bucket.
+    * bucket. Eager; leaves nothing cached (see [[jaccardOf]]).
     */
   def addSignatures(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String): Unit = {
-    def bucketsOf(t: String): Int =
+      batch: DataFrame, table: String): Unit =
+    writeSignatures(batch, table, "append", t =>
       spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
         .bucketSpec.getOrElse(throw new IllegalArgumentException(
-          s"table $t is not bucketed — not a saveSignatures table")).numBuckets
-    val tokC = withToks(batch).select(col("doc_id"), col("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    tokC.count()
-    val fFp = Future {
-      tokC.select(hex64(array_join(col("toks"), " ")).as("fingerprint")).distinct()
-        .write.mode("append")
-        .bucketBy(bucketsOf(s"${table}_fp"), "fingerprint").sortBy("fingerprint")
-        .format("parquet").saveAsTable(s"${table}_fp")
-    }
-    val fBands = Future {
-      minhashBands(minhashOf(shingleSet(tokC)))
-        .write.mode("append")
-        .bucketBy(bucketsOf(table), "band", "band_hash").sortBy("band", "band_hash")
-        .format("parquet").saveAsTable(table)
-    }
-    Await.result(fFp, Duration.Inf); Await.result(fBands, Duration.Inf)
-    tokC.unpersist(false)
-  }
+          s"table $t is not bucketed — not a saveSignatures table")).numBuckets,
+      None)
 
   /** Compact both signature tables after repeated [[addSignatures]]
     * appends — the dedup store's quarter of the uniform at-rest
@@ -712,14 +696,13 @@ object Dedup {
     * candidate-id semi-join — ~|collisions| docs, not the corpus), and
     * the signature tables serve their joins bucket-local with no
     * corpus-side exchange (spec-asserted). Output ≡ [[incrementalDedup]]
-    * (spec-asserted).
+    * (spec-asserted). Eager; the caller unpersists the result (see
+    * [[jaccardOf]]).
     */
   def incrementalDedupOnSignatures(corpusFp: DataFrame, corpusBands: DataFrame,
       corpus: DataFrame, batch: DataFrame, minJaccard: Double = 0.7): DataFrame =
     incrementalFlags(batch, corpusFp.select(col("fingerprint")), corpusBands,
-      ids => shingleSet(withToks(
-        corpus.join(graft.ops.Broadcasting.maybeBroadcast(ids), Seq("doc_id"), "left_semi"))),
-      minJaccard)(())
+      ids => shingleSet(withToks(onlyIds(corpus, ids))), minJaccard)(())
 
   /** Bloom-gated incremental exact dedup: flag new-batch docs whose
     * normalized-text fingerprint already exists in the corpus, with a
@@ -750,7 +733,7 @@ object Dedup {
   def bloomDedup(corpus: DataFrame, batch: DataFrame,
       fpp: Double = 0.01): DataFrame = {
     def fpOf(d: DataFrame): DataFrame = withToks(d)
-      .select(col("doc_id"), hex64(array_join(col("toks"), " ")).as("fingerprint"))
+      .select(col("doc_id"), fingerprintOfTokens(col("toks")).as("fingerprint"))
     // the corpus fingerprint projection feeds THREE actions (the sizing
     // count, the bloomFilter treeAggregate, the verify semi-join) —
     // cache it for the operator's scope or the corpus tokenizes thrice
@@ -884,15 +867,21 @@ object Dedup {
     * decontamination contract so the two use cases cannot drift.
     * Output one row per training doc: (doc_id, exact_contaminated,
     * near_contaminated, best_match = the closest eval doc,
-    * best_jaccard, keep).
+    * best_jaccard, keep). Eager; the caller unpersists the result (see
+    * [[jaccardOf]]).
     */
   def decontaminateFuzzy(train: DataFrame, eval: DataFrame,
-      minJaccard: Double = 0.5): DataFrame =
-    incrementalDedup(eval, train, minJaccard)
-      .select(col("doc_id"),
+      minJaccard: Double = 0.5): DataFrame = {
+    val flags = incrementalDedup(eval, train, minJaccard)
+    // the renamed frame is the scope: unpersist on a projection does
+    // not reach the cache under it
+    materialized(flags.select(col("doc_id"),
         col("exact_dup").as("exact_contaminated"),
         col("near_dup").as("near_contaminated"),
-        col("best_match"), col("best_jaccard"), col("keep"))
+        col("best_match"), col("best_jaccard"), col("keep"))) {
+      flags.unpersist(false)
+    }
+  }
 
   /** Span length (in tokens) for substring-level dedup: a duplicated
     * passage must be at least this long to be detected/removed. Real

@@ -166,12 +166,7 @@ object LshIndex {
     */
   def topKOnIndex(index: DataFrame, queries: DataFrame, p: LshParams, k: Int,
       broadcastQueries: Boolean = true): DataFrame = {
-    val qIndex0 = build(queries, p)
-      .select(col("vec_id").as("q_id"), col("band"), col("sig"))
-    // serving batches broadcast; corpus-scale query tables shuffle-join
-    val qIndex = if (broadcastQueries) broadcast(qIndex0) else qIndex0
-    val collisions = index.join(qIndex, Seq("band", "sig"))
-      .filter(col("vec_id") =!= col("q_id"))
+    val collisions = queryCollisions(index, queries, p, broadcastQueries)
       .groupBy(col("q_id"), col("vec_id"))
       .agg(count(lit(1)).as("n_collisions"))
     // bounded TopKByScore aggregate, not a rank window (the idiom shared
@@ -188,34 +183,34 @@ object LshIndex {
       .orderBy(col("q_id"), col("rn"))
   }
 
+  /** (index rows ⋈ query signatures) on (band, sig), self matches
+    * dropped: one row per (query `q_id`, colliding `vec_id`, band).
+    * Serving batches broadcast the query side; corpus-scale query
+    * tables (`broadcastQueries = false`) shuffle-join.
+    */
+  private def queryCollisions(index: DataFrame, queries: DataFrame, p: LshParams,
+      broadcastQueries: Boolean): DataFrame = {
+    val qIndex0 = build(queries, p)
+      .select(col("vec_id").as("q_id"), col("band"), col("sig"))
+    val qIndex = if (broadcastQueries) broadcast(qIndex0) else qIndex0
+    index.join(qIndex, Seq("band", "sig"))
+      .filter(col("vec_id") =!= col("q_id"))
+  }
+
   /** Candidates reranked by exact cosine; per query returns the first
     * ceil(n_candidates · topP) (≥1), capped at topK (reference:
     * core/main.py:524 query(top_p=·) → :650 limit computation).
     */
   def topPRerank(corpus: DataFrame, queries: DataFrame, p: LshParams,
       topP: Double, topK: Int = Int.MaxValue,
-      broadcastQueries: Boolean = true,
-      broadcastCandidates: Boolean = false): DataFrame = {
+      broadcastQueries: Boolean = true): DataFrame = {
     require(topP > 0 && topP <= 1, "top_p must be within (0, 1]")
-    val index = build(corpus, p)
-    val qIndex0 = build(queries, p)
-      .select(col("vec_id").as("q_id"), col("band"), col("sig"))
-    val qIndex = if (broadcastQueries) broadcast(qIndex0) else qIndex0
-    val cand = index.join(qIndex, Seq("band", "sig"))
-      .filter(col("vec_id") =!= col("q_id"))
+    val cand = queryCollisions(build(corpus, p), queries, p, broadcastQueries)
       .select(col("q_id"), col("vec_id").as("cand_id"))
       .distinct()
     val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id").as("cand_id"), col("embedding").as("cand_emb"))
-    // Optionally broadcast (candidate, query-vector) to turn the
-    // rerank into a map-side corpus scan — only profitable when the
-    // layout is selective enough that candidates stay well under the
-    // broadcast budget (measured: 2.8k candidates/query × 100 queries
-    // is already ~80MB with 64-dim query vectors attached — default
-    // stays with the shuffle join).
-    val candQ0 = cand.join(broadcast(q), Seq("q_id"))
-    val candQ = if (broadcastCandidates) broadcast(candQ0) else candQ0
-    val scored = c.join(candQ, Seq("cand_id"))
+    val scored = c.join(cand.join(broadcast(q), Seq("q_id")), Seq("cand_id"))
       .select(col("q_id"), col("cand_id"), cosine_sim(col("q_emb"), col("cand_emb")).as("sim"))
     if (topK == Int.MaxValue) {
       // unbounded top-p must rank EVERY candidate of a query — a bounded

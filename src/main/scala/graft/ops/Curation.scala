@@ -393,7 +393,7 @@ object Curation {
         length(regexp_replace(lower(col("text")),
           graft.text.TextAnalysis.PunctKeepClass, "")).cast("long"))
       .withColumn("fp",
-        graft.GraftFunctions.hex64(array_join(col("toks"), " ")))
+        graft.GraftFunctions.fingerprintOfTokens(col("toks")))
     sig.groupBy(col("domain"))
       .agg(count(lit(1)).as("n_pages"),
         countDistinct(col("host")).as("n_hosts"),

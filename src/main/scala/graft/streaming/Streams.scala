@@ -108,7 +108,7 @@ object Streams {
   def dedupStream(docs: DataFrame, watermark: String = "1 hour"): DataFrame =
     docs
       .withColumn("fingerprint",
-        GraftFunctions.hex64(array_join(GraftFunctions.tokens(col("text")), " ")))
+        GraftFunctions.fingerprintOfTokens(GraftFunctions.tokens(col("text"))))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
 
@@ -221,7 +221,7 @@ object Streams {
           coalesce(col("script_ratio") >= minScriptRatio, lit(false)) &&
           col("quality_score") >= minQuality).as("keep"))
       .withColumn("fingerprint",
-        GraftFunctions.hex64(array_join(GraftFunctions.tokens(col("text")), " ")))
+        GraftFunctions.fingerprintOfTokens(GraftFunctions.tokens(col("text"))))
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
 
@@ -250,7 +250,7 @@ object Streams {
       watermark: String = "1 hour", fpp: Double = 0.01)
       : (DataFrame, org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]) = {
     val corpusFp = corpus.select(
-      GraftFunctions.hex64(array_join(GraftFunctions.tokens(col("text")), " "))
+      GraftFunctions.fingerprintOfTokens(GraftFunctions.tokens(col("text")))
         .as("fingerprint"))
     val expected = math.max(corpusFp.count(), 64L)
     val bloom = corpusFp.stat.bloomFilter("fingerprint", expected, fpp)

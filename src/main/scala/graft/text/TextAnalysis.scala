@@ -734,7 +734,7 @@ object TextAnalysis {
   def corpusApproxDistinct(docs: DataFrame, rsd: Double = 0.05): DataFrame =
     withToks(docs)
       .select(col("source"), col("lang"),
-        GraftFunctions.hex64(array_join(col("toks"), " ")).as("fingerprint"),
+        GraftFunctions.fingerprintOfTokens(col("toks")).as("fingerprint"),
         explode(col("toks")).as("tok"))
       .groupBy(col("source"), col("lang"))
       .agg(
@@ -1699,6 +1699,6 @@ object TextAnalysis {
     withToks(docs)
       .select(
         col("doc_id"),
-        GraftFunctions.hex64(array_join(col("toks"), " ")).as("fingerprint"),
+        GraftFunctions.fingerprintOfTokens(col("toks")).as("fingerprint"),
         (size(col("toks")) / lit(10)).cast("long").as("len_band"))
 }

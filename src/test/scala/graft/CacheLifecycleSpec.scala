@@ -45,6 +45,30 @@ class CacheLifecycleSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
   }
 
+  test("nearDupKeepBest releases its tokenize, pair and label caches; result is the scope") {
+    assertScoped(Dedup.nearDupKeepBest(docs))
+  }
+
+  test("nearDupKeepBest on pre-tokenized docs leaves the caller's toks cache persisted") {
+    val toked = docs.withColumn("toks", graft.GraftFunctions.tokens(col("text")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    toked.count()
+    val before = persisted
+    val res = Dedup.nearDupKeepBest(toked)
+    assert((persisted -- before).size <= 1, s"operator leaked intermediates: ${persisted -- before}")
+    res.unpersist(blocking = true)
+    assert((persisted -- before).isEmpty, s"result scope not released: ${persisted -- before}")
+    assert(before.subsetOf(persisted) &&
+      toked.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the caller's toks cache was released by the operator")
+    toked.unpersist(blocking = true)
+  }
+
+  test("decontaminateFuzzy releases the inner flag cache; result is the scope") {
+    assertScoped(Dedup.decontaminateFuzzy(
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
+  }
+
   test("MLlib twins release their vector-frame caches; result is the scope") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     assertScoped(graft.ann.MlLsh.minhashNearDupPairs(docs, maxJaccardDistance = 0.5))
@@ -91,6 +115,18 @@ class CacheLifecycleSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
     spark.sql("DROP TABLE IF EXISTS graft_dedup_sig_clc")
     spark.sql("DROP TABLE IF EXISTS graft_dedup_sig_clc_fp")
+  }
+
+  test("saveSignatures and addSignatures release their tokenize caches; nothing is left behind") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_store_clc").toString
+    val before = persisted
+    Dedup.saveSignatures(docs.filter(col("doc_id") % 2 === 0), "graft_sig_store_clc",
+      nBuckets = 4, path = Some(s"$tmp/tbl"))
+    assert((persisted -- before).isEmpty, s"saveSignatures leaked: ${persisted -- before}")
+    Dedup.addSignatures(spark, docs.filter(col("doc_id") % 2 === 1), "graft_sig_store_clc")
+    assert((persisted -- before).isEmpty, s"addSignatures leaked: ${persisted -- before}")
+    spark.sql("DROP TABLE IF EXISTS graft_sig_store_clc")
+    spark.sql("DROP TABLE IF EXISTS graft_sig_store_clc_fp")
   }
 
   test("hashEmbedTopK releases the weight-table cache; result is the scope") {

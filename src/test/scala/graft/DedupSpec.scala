@@ -98,6 +98,30 @@ class DedupSpec extends SparkSpec {
     res.foreach { case (_, (ex, near, keep)) => assert(keep === !(ex || near)) }
   }
 
+  test("one verifier: incrementalDedup best_jaccard ≡ minhashLshPairs jaccard for the same pair, bit for bit") {
+    val corpus = docs.filter(col("doc_id") < 400).select(col("doc_id"), col("text"))
+    // a batch doc whose best match is a corpus doc: doc 1 minus its
+    // first 3 tokens (jaccard < 1, so the ratio is a real division)
+    val d1 = docs.filter(col("doc_id") === 1L).head().getAs[String]("text")
+    val batch = Seq((2000002L, d1.split(" ").drop(3).mkString(" "))).toDF("doc_id", "text")
+    val inc = Dedup.incrementalDedup(corpus, batch, minJaccard = 0.5)
+    val row = inc.filter(col("doc_id") === 2000002L).head()
+    inc.unpersist()
+    assert(row.getAs[Boolean]("near_dup"), s"near copy missed: $row")
+    val best = row.getAs[Long]("best_match")
+    val bestJaccard = row.getAs[Double]("best_jaccard")
+    assert(bestJaccard < 1.0)
+    // the same pair through the self-join path over corpus ∪ batch
+    // (corpus ids < batch id, so the pair is (a = best, b = batch doc))
+    val pairs = Dedup.minhashLshPairs(corpus.unionByName(batch))
+    val jac = pairs.filter(col("a") === best && col("b") === 2000002L)
+      .select(col("jaccard")).collect().map(_.getDouble(0))
+    pairs.unpersist()
+    assert(jac.length === 1, s"pair ($best, 2000002) missing from minhashLshPairs")
+    assert(java.lang.Double.doubleToLongBits(jac.head) ===
+      java.lang.Double.doubleToLongBits(bestJaccard), s"${jac.head} vs $bestJaccard")
+  }
+
   test("persisted signatures: ingest output equals self-contained path; corpus band join exchange-free") {
     import org.apache.spark.sql.functions._
     val corpus = docs.filter(col("doc_id") % 2 === 0)
