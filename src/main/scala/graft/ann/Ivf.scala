@@ -187,15 +187,8 @@ object Ivf {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fCells = Future {
-      // cluster by the bucket key first (the Compaction idiom): one
-      // file per bucket instead of tasks × nBuckets
-      val w = cells.repartition(nBuckets, col("cell"))
-        .write.mode("overwrite")
-        .bucketBy(nBuckets, "cell").sortBy("cell").format("parquet")
-      path.foreach(loc => w.option("path", loc))
-      w.saveAsTable(table)
-    }
+    val fCells = Future(
+      graft.ops.Compaction.saveBucketed(cells, table, nBuckets, path, "cell"))
     val fCents = Future {
       val wc = centroids.select(col("vec_id"), col("embedding"))
         .write.mode("overwrite").format("parquet")
@@ -224,17 +217,12 @@ object Ivf {
   def addToIndex(spark: org.apache.spark.sql.SparkSession,
       additions: DataFrame, table: String,
       metaCols: Seq[String] = Nil): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table $table is not bucketed — not a saveIndex table"))
-    val (_, cents) = loadIndex(spark, table)
-    val cells = assign(additions, cents)
-      .join(additions.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*),
-        Seq("vec_id"))
-    cells.write.mode("append")
-      .bucketBy(spec.numBuckets, "cell").sortBy("cell").format("parquet")
-      .saveAsTable(table)
+    graft.ops.Compaction.appendBucketed(spark, table) {
+      val (_, cents) = loadIndex(spark, table)
+      assign(additions, cents)
+        .join(additions.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*),
+          Seq("vec_id"))
+    }
   }
 
   /** Compact a [[saveIndex]]ed table after repeated [[addToIndex]]
@@ -251,7 +239,9 @@ object Ivf {
     * centroids (appends assign against the frozen quantizer by
     * design). The index stores full embeddings, so reassignment needs
     * no other input; the centroids sibling table is rewritten to
-    * match. The refreshed frame is materialized BEFORE the old tables
+    * match through [[graft.ops.Compaction.rewriteTable]] — staged,
+    * then renamed, so a failure midway never leaves the index without
+    * a quantizer. The refreshed frame is materialized BEFORE the old tables
     * are touched, so it may safely derive from the index itself
     * (e.g. k-means over the indexed embeddings).
     */
@@ -276,21 +266,7 @@ object Ivf {
         assign(corpus, c).join(corpus, Seq("vec_id"))
           .select(cells.columns.map(col): _*)
     })
-    local.foreach { c =>
-      val cTable = s"${table}_centroids"
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(cTable))
-      val external = meta.tableType ==
-        org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL
-      val loc = meta.location
-      spark.sql(s"DROP TABLE `$cTable`")
-      val w = c.write.mode("overwrite").format("parquet")
-      val wp = if (external) {
-        val p = new org.apache.hadoop.fs.Path(loc)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        w.option("path", loc.getPath)
-      } else w
-      wp.saveAsTable(cTable)
-    }
+    local.foreach(c =>
+      graft.ops.Compaction.rewriteTable(spark, s"${table}_centroids", _ => c))
   }
 }

@@ -503,13 +503,9 @@ object Pq {
     val spark = corpus.sparkSession
     val fModel = Future(save(model, spark, table, path))
     val fCells = Future {
-      // cluster by the bucket key first (the Compaction idiom)
-      val wc = encodeInCells(corpus, model, centroids,
-        residual = residual, nProbe = nProbe)
-        .repartition(nBuckets, col("cell")).write.mode("overwrite")
-        .bucketBy(nBuckets, "cell").sortBy("cell").format("parquet")
-      path.foreach(loc => wc.option("path", s"${loc}_cells"))
-      wc.saveAsTable(s"${table}_cells")
+      graft.ops.Compaction.saveBucketed(
+        encodeInCells(corpus, model, centroids, residual = residual, nProbe = nProbe),
+        s"${table}_cells", nBuckets, path.map(loc => s"${loc}_cells"), "cell")
       // the encoding flags ride on the cells table: a residual index
       // served without the bias term (or vice versa) scores silently
       // wrong, so the flag must live WITH the index, not in caller lore
@@ -549,16 +545,11 @@ object Pq {
     */
   def addToCellIndex(spark: SparkSession, additions: DataFrame,
       table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_cells"))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table ${table}_cells is not bucketed — not a saveCellIndex table"))
-    val (model, _, cents) = loadCellIndex(spark, table)
-    val (residual, nProbe) = cellIndexParams(spark, table)
-    encodeInCells(additions, model, cents, residual = residual, nProbe = nProbe)
-      .write.mode("append")
-      .bucketBy(spec.numBuckets, "cell").sortBy("cell").format("parquet")
-      .saveAsTable(s"${table}_cells")
+    graft.ops.Compaction.appendBucketed(spark, s"${table}_cells") {
+      val (model, _, cents) = loadCellIndex(spark, table)
+      val (residual, nProbe) = cellIndexParams(spark, table)
+      encodeInCells(additions, model, cents, residual = residual, nProbe = nProbe)
+    }
   }
 
   /** Compact the cells table of a [[saveCellIndex]]ed index after
@@ -583,9 +574,7 @@ object Pq {
     * property and load as (false, 1), their then-only encoding.
     */
   def cellIndexParams(spark: SparkSession, table: String): (Boolean, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${table}_cells").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    props.get("graft.pq.cells_params") match {
+    graft.ops.TableProps.find(spark, s"${table}_cells", "graft.pq.cells_params") match {
       case None => (false, 1)
       case Some(json) =>
         (graft.ops.TableProps.longField(json, "residual") == 1L,

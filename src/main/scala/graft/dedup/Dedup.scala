@@ -605,33 +605,20 @@ object Dedup {
     }
   }
 
-  /** The signature-store writer behind [[saveSignatures]] (mode
-    * overwrite) and [[addSignatures]] (append); `buckets(t)` is table t's
-    * bucket count. One cached tokenize pass feeds two CONCURRENT writes
-    * (the Pq.train pattern) with no warm-up count: block-level cache
-    * locks build each partition once (the SearchIndex.save precedent).
-    * A save clusters each table by its bucket key first (the Compaction
-    * idiom): one file per bucket instead of tasks × buckets. An append
-    * does not: n tasks per table cost a small batch more than the files
-    * they save (perfbench curate, 4 cores: write_best_s 1.24 → 1.99 s),
-    * and [[compactSignatures]] folds append debris.
+  /** The signature-store writer behind [[saveSignatures]] and
+    * [[addSignatures]]: `write(df, suffix, keys)` stores `df` as table
+    * `table + suffix` keyed on `keys`. One cached tokenize pass feeds
+    * two CONCURRENT writes (the Pq.train pattern) with no warm-up
+    * count: block-level cache locks build each partition once (the
+    * SearchIndex.save precedent).
     */
-  private def writeSignatures(docs: DataFrame, table: String, mode: String,
-      buckets: String => Int, path: Option[String]): Unit = {
+  private def writeSignatures(docs: DataFrame, table: String,
+      write: (DataFrame, String, Seq[String]) => Unit): Unit = {
     val tok = withToks(docs).select(col("doc_id"), col("toks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def write(df: DataFrame, t: String, loc: Option[String], key: String*) = Future {
-      val n = buckets(t)
-      val clustered = if (mode == "overwrite") df.repartition(n, key.map(col): _*) else df
-      val w = clustered.write.mode(mode)
-        .bucketBy(n, key.head, key.tail: _*).sortBy(key.head, key.tail: _*)
-        .format("parquet")
-      loc.foreach(l => w.option("path", l))
-      w.saveAsTable(t)
-    }
     try Seq(
-        write(fingerprintsOf(tok), s"${table}_fp", path.map(loc => s"${loc}_fp"), "fingerprint"),
-        write(bandsOf(shingleSet(tok)), table, path, "band", "band_hash"))
+        Future(write(fingerprintsOf(tok), "_fp", Seq("fingerprint"))),
+        Future(write(bandsOf(shingleSet(tok)), "", Seq("band", "band_hash"))))
       .foreach(Await.result(_, Duration.Inf))
     finally tok.unpersist(false)
   }
@@ -648,7 +635,9 @@ object Dedup {
     */
   def saveSignatures(corpus: DataFrame, table: String, nBuckets: Int = 32,
       path: Option[String] = None): Unit =
-    writeSignatures(corpus, table, "overwrite", _ => nBuckets, path)
+    writeSignatures(corpus, table, (df, suffix, keys) =>
+      graft.ops.Compaction.saveBucketed(df, table + suffix, nBuckets,
+        path.map(_ + suffix), keys: _*))
 
   /** Restore (fingerprints, bands) from a [[saveSignatures]] table pair. */
   def loadSignatures(spark: org.apache.spark.sql.SparkSession,
@@ -671,12 +660,8 @@ object Dedup {
     */
   def addSignatures(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String): Unit =
-    writeSignatures(batch, table, "append", t =>
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .bucketSpec.getOrElse(throw new IllegalArgumentException(
-          s"table $t is not bucketed — not a saveSignatures table")).numBuckets,
-      None)
+    writeSignatures(batch, table,
+      (df, suffix, _) => graft.ops.Compaction.appendBucketed(spark, table + suffix)(df))
 
   /** Compact both signature tables after repeated [[addSignatures]]
     * appends — the dedup store's quarter of the uniform at-rest

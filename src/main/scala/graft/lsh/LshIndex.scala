@@ -280,16 +280,14 @@ object LshIndex {
        |"seed":${p.seed}}""".stripMargin.replace("\n", "")
 
   private def parseParams(json: String): LshParams = {
-    def field(name: String): String =
-      s""""$name":([-0-9.eE]+)""".r.findFirstMatchIn(json)
-        .getOrElse(sys.error(s"missing $name in params.json")).group(1)
+    import graft.ops.TableProps.{doubleField, longField}
     LshParams(
-      dim = field("dim").toInt,
-      numPerm = field("num_perm").toInt,
-      numBands = Some(field("num_bands").toInt),
-      rowsPerBand = Some(field("rows_per_band").toInt),
-      similarityThreshold = field("similarity_threshold").toDouble,
-      seed = field("seed").toLong)
+      dim = longField(json, "dim").toInt,
+      numPerm = longField(json, "num_perm").toInt,
+      numBands = Some(longField(json, "num_bands").toInt),
+      rowsPerBand = Some(longField(json, "rows_per_band").toInt),
+      similarityThreshold = doubleField(json, "similarity_threshold"),
+      seed = longField(json, "seed"))
   }
 
   // The params sidecar goes through the Hadoop FileSystem API so index
@@ -364,17 +362,8 @@ object LshIndex {
     */
   def saveBucketed(index: DataFrame, p: LshParams, table: String,
       nBuckets: Int = 32, path: Option[String] = None): Unit = {
-    val spark = index.sparkSession
-    // cluster by the bucket key first (the Compaction idiom): one
-    // file per bucket instead of tasks × nBuckets
-    val w = index.repartition(nBuckets, col("band"), col("sig"))
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, "band", "sig").sortBy("band", "sig")
-      .format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    spark.sql(
-      s"ALTER TABLE $table SET TBLPROPERTIES ('graft.lsh.params' = '${paramsJson(p)}')")
+    graft.ops.Compaction.saveBucketed(index, table, nBuckets, path, "band", "sig")
+    graft.ops.TableProps.set(index.sparkSession, table, "graft.lsh.params", paramsJson(p))
   }
 
   /** Restore (index, params) from a [[saveBucketed]] table; `validate`
@@ -382,12 +371,8 @@ object LshIndex {
     */
   def loadBucketed(spark: SparkSession, table: String,
       validate: Boolean = true): (DataFrame, LshParams) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val json = props.getOrElse("graft.lsh.params",
-      sys.error(s"table $table has no graft.lsh.params property"))
+    val p = parseParams(graft.ops.TableProps.get(spark, table, "graft.lsh.params"))
     val idx = spark.table(table)
-    val p = parseParams(json)
     if (validate) validateIndex(idx, p, "the graft.lsh.params table property")
     (idx, p)
   }
@@ -402,15 +387,8 @@ object LshIndex {
     * At 100 TB the add touches only the new rows, never the index.
     */
   def addToBucketed(spark: SparkSession, newVectors: DataFrame, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table $table is not bucketed — not a saveBucketed table"))
-    val (_, p) = loadBucketed(spark, table, validate = false)
-    build(newVectors, p).write.mode("append")
-      .bucketBy(spec.numBuckets, "band", "sig").sortBy("band", "sig")
-      .format("parquet")
-      .saveAsTable(table)
+    graft.ops.Compaction.appendBucketed(spark, table)(
+      build(newVectors, loadBucketed(spark, table, validate = false)._2))
   }
 
   /** Compact a [[saveBucketed]] table after repeated [[addToBucketed]]

@@ -2,26 +2,70 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTableType}
 import org.apache.spark.sql.functions.col
 
-/** Compaction for bucketed at-rest index tables (round-8 verdict #5 —
-  * the missing quarter of the build → serve → add → compact
-  * lifecycle; reference maintenance analogue: `storage/redis.py:419`
-  * delete / `:590` clear, which rewrite the store in place).
+/** The at-rest layout of every bucketed index table, and its upkeep
+  * (reference analogue: the `storage/redis.py` bucket store — `:40`
+  * the `(band_id, sig_bytes)` → ids map, `:419` delete / `:590` clear
+  * rewriting it in place).
   *
-  * Repeated [[graft.ann.Ivf.addToIndex]] /
-  * [[graft.ann.Pq.addToCellIndex]] appends accumulate one file set
-  * per append inside every bucket — correct (the bucket JOIN stays
-  * exchange-free; bucketing metadata is append-stable) but
-  * progressively slower to open at serving time. Compaction rewrites
-  * the table ONCE through a staging table and swaps it in via a
-  * catalog rename: exactly one data rewrite, no window where the
-  * table name is unserveable except the metadata swap itself. On a
-  * production metastore the rename is a metadata-only operation; the
-  * data move is the single bucketed rewrite either way.
+  * The layout decision, made once here for the LSH bands, IVF and
+  * IVFADC cells, BM25 postings + doclen, positional postings, the
+  * bigram LM and the MinHash signature store:
+  *  - Tables are bucketed AND sorted on their join key. A reloaded
+  *    index's collision/probe join then reads bucket-local with no
+  *    exchange and no sort on the index side; that shuffle is the
+  *    network-bound step of collision-counting LSH joins (C2Net,
+  *    ICDE 2019).
+  *  - A save ([[saveBucketed]]) clusters first: `repartition(n, keys)`
+  *    hashes with the same murmur3-pmod function as the bucket
+  *    layout, so each task holds one bucket and the writer emits ONE
+  *    file per bucket instead of tasks × buckets.
+  *  - An append ([[appendBucketed]]) does not cluster: the extra n
+  *    tasks cost a small batch more than the files they save
+  *    (perfbench curate, 4 cores: `write_best_s` 1.24 → 1.99 s). Each
+  *    append leaves one more file set per bucket — still correct, the
+  *    bucketing metadata is append-stable — and [[rewriteBucketed]]
+  *    folds the debris back to one file per bucket through a staging
+  *    table and a catalog rename: one data rewrite, no window where
+  *    the table name is unserveable except the metadata swap itself.
   */
 object Compaction {
+
+  /** Overwrite `table` with `df` in the layout: bucketed into
+    * `nBuckets` and sorted on `keys`, clustered first so every bucket
+    * is one file. `path` makes the table external at that location.
+    */
+  private[graft] def saveBucketed(df: DataFrame, table: String, nBuckets: Int,
+      path: Option[String], keys: String*): Unit = {
+    val w = df.repartition(nBuckets, keys.map(col): _*).write.mode("overwrite")
+      .bucketBy(nBuckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+      .format("parquet")
+    path.foreach(loc => w.option("path", loc))
+    w.saveAsTable(table)
+  }
+
+  /** Append `df` to a [[saveBucketed]] table under the bucket count,
+    * bucket columns and sort columns the catalog holds for it — the
+    * append cannot break the layout. Not clustered (see above). A
+    * table that is not bucketed is refused BEFORE `df` is built, so
+    * no caller work (loading the table's params or siblings) runs
+    * against it.
+    */
+  private[graft] def appendBucketed(spark: SparkSession, table: String)(
+      df: => DataFrame): Unit = {
+    val spec = bucketSpec(spark, table)
+    val (b, s) = (spec.bucketColumnNames, spec.sortColumnNames)
+    df.write.mode("append")
+      .bucketBy(spec.numBuckets, b.head, b.tail: _*).sortBy(s.head, s.tail: _*)
+      .format("parquet").saveAsTable(table)
+  }
+
+  private def bucketSpec(spark: SparkSession, table: String): BucketSpec =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .bucketSpec.getOrElse(throw new IllegalArgumentException(
+        s"table $table is not bucketed — not a graft index table"))
 
   /** Rewrite bucketed catalog table `table` to EXACTLY one file per
     * bucket (empty buckets write none), preserving the bucket spec,
@@ -30,21 +74,19 @@ object Compaction {
     * cells against refreshed centroids); it runs while the original
     * table is still readable.
     *
-    * The one-file guarantee comes from repartitioning on the bucket
-    * column with the bucket count: `repartition(n, col)` hashes with
-    * the same murmur3-pmod function as the bucket layout, so each
-    * task holds exactly one bucket's rows and the writer emits one
-    * file for it. At target scale size `nBuckets` at save time so a
-    * single bucket fits an executor core (the [[graft.ann.Ivf]]
-    * docstring contract) — then the compaction tasks are
-    * bucket-sized by construction.
+    * The one-file guarantee is the save's clustering, applied with
+    * the table's own spec. At target scale size `nBuckets` at save
+    * time so a single bucket fits an executor core (the
+    * [[graft.ann.Ivf]] docstring contract) — then the compaction
+    * tasks are bucket-sized by construction. The staging write keeps
+    * its own writer rather than [[saveBucketed]]: it preserves a sort
+    * spec that may differ from (or be absent beside) the bucket
+    * columns.
     */
   def rewriteBucketed(spark: SparkSession, table: String,
       transform: DataFrame => DataFrame = identity): Unit = {
-    val catalog = spark.sessionState.catalog
-    val meta = catalog.getTableMetadata(TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"table $table is not bucketed — not a compactable index table"))
+    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+    val spec = bucketSpec(spark, table)
     val external = meta.tableType == CatalogTableType.EXTERNAL
     val oldLoc = meta.location
     val staging = s"${table}__compacting"

@@ -21,10 +21,16 @@ object TableProps {
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('${esc(key)}' = '${esc(value)}')")
   }
 
-  def get(spark: SparkSession, table: String, key: String): String =
+  /** The property, or None where the table lacks it (e.g. an index
+    * persisted before the property existed).
+    */
+  def find(spark: SparkSession, table: String, key: String): Option[String] =
     spark.sql(s"SHOW TBLPROPERTIES $table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-      .getOrElse(key, sys.error(s"table $table has no $key property"))
+      .get(key)
+
+  def get(spark: SparkSession, table: String, key: String): String =
+    find(spark, table, key).getOrElse(sys.error(s"table $table has no $key property"))
 
   /** Integer field from a flat JSON object string. */
   def longField(json: String, key: String): Long = {

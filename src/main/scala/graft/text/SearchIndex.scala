@@ -95,29 +95,11 @@ object SearchIndex {
     // the written doclen table (same rows) and skips a table re-read;
     // `add` still re-derives from the table, where it is a correctness
     // property.
-    // cluster by the bucket key before each bucketed write (the
-    // Compaction.rewriteBucketed idiom, guide §6): without it every
-    // input partition emits a file per bucket it touches — tasks ×
-    // nBuckets small files — while the aligned repartition emits ONE
-    // file per bucket and the exchange is the hash the bucket layout
-    // uses anyway
     val st = withBuild(tokD, maxDf) { ix =>
-      val fIdx = Future {
-        val w = ix.postings
-          .repartition(nBuckets, col("token"))
-          .write.mode("overwrite")
-          .bucketBy(nBuckets, "token").sortBy("token").format("parquet")
-        path.foreach(loc => w.option("path", loc))
-        w.saveAsTable(table)
-      }
-      val fDl = Future {
-        val wd = ix.docLens
-          .repartition(nBuckets, col("doc_id"))
-          .write.mode("overwrite")
-          .bucketBy(nBuckets, "doc_id").sortBy("doc_id").format("parquet")
-        path.foreach(loc => wd.option("path", s"${loc}_doclen"))
-        wd.saveAsTable(s"${table}_doclen")
-      }
+      val fIdx = Future(
+        graft.ops.Compaction.saveBucketed(ix.postings, table, nBuckets, path, "token"))
+      val fDl = Future(graft.ops.Compaction.saveBucketed(ix.docLens,
+        s"${table}_doclen", nBuckets, path.map(loc => s"${loc}_doclen"), "doc_id"))
       val fStats = Future(ix.stats.head())
       Await.result(fIdx, Duration.Inf); Await.result(fDl, Duration.Inf)
       Await.result(fStats, Duration.Inf)
@@ -294,11 +276,6 @@ object SearchIndex {
     */
   def add(batch: DataFrame, table: String): Unit = {
     val spark = batch.sparkSession
-    def bucketsOf(t: String): Int =
-      spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .bucketSpec.getOrElse(throw new IllegalArgumentException(
-          s"table $t is not bucketed — not a SearchIndex table")).numBuckets
     val json = graft.ops.TableProps.get(spark, table, "graft.search.stats")
     import graft.ops.TableProps.longField
     val maxDf = longField(json, "max_df")
@@ -307,12 +284,8 @@ object SearchIndex {
     val tokD = TextAnalysis.withToks(batch)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     withBuild(tokD, maxDf) { ix =>
-      ix.postings.write.mode("append")
-        .bucketBy(bucketsOf(table), "token").sortBy("token").format("parquet")
-        .saveAsTable(table)
-      ix.docLens.write.mode("append")
-        .bucketBy(bucketsOf(s"${table}_doclen"), "doc_id").sortBy("doc_id")
-        .format("parquet").saveAsTable(s"${table}_doclen")
+      graft.ops.Compaction.appendBucketed(spark, table)(ix.postings)
+      graft.ops.Compaction.appendBucketed(spark, s"${table}_doclen")(ix.docLens)
     }
     tokD.unpersist(false)
     // stats LAST, re-derived from the appended doclen table (one

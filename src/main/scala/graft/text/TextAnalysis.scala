@@ -996,21 +996,13 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val t = withToks(docs).select(col("doc_id"), col("toks"))
     val bg = positionalBigrams(t)
-    // cluster by the bucket key before each bucketed write (the
-    // Compaction idiom): one file per bucket instead of tasks × buckets
-    val bigW = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .repartition(nBuckets, col("w1"), col("w2"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "w1", "w2").sortBy("w1", "w2")
-    path.foreach(loc => bigW.option("path", s"$loc/big"))
-    bigW.saveAsTable(table)
-    val uniW = t.select(explode(col("toks")).as("w1"))
+    val big = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    graft.ops.Compaction.saveBucketed(big, table, nBuckets,
+      path.map(loc => s"$loc/big"), "w1", "w2")
+    val uni = t.select(explode(col("toks")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-      .repartition(nBuckets, col("w1"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "w1").sortBy("w1")
-    path.foreach(loc => uniW.option("path", s"$loc/uni"))
-    uniW.saveAsTable(s"${table}_uni")
+    graft.ops.Compaction.saveBucketed(uni, s"${table}_uni", nBuckets,
+      path.map(loc => s"$loc/uni"), "w1")
     val v = t.select(explode(col("toks")).as("w"))
       .agg(count_distinct(col("w"))).collect()(0).getLong(0)
     graft.ops.TableProps.set(spark, table, "graft.lm.params", s"""{"v":$v}""")
@@ -1198,12 +1190,7 @@ object TextAnalysis {
     */
   def savePositionalIndex(docs: DataFrame, table: String, nBuckets: Int = 32,
       path: Option[String] = None): Unit = {
-    // cluster by the bucket key first (the Compaction idiom)
-    val w = positionalPostings(docs).repartition(nBuckets, col("token"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "token").sortBy("token")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
+    graft.ops.Compaction.saveBucketed(positionalPostings(docs), table, nBuckets, path, "token")
   }
 
   /** [[phraseSearch]] served from a [[savePositionalIndex]] table. */
@@ -1218,16 +1205,8 @@ object TextAnalysis {
     * BM25 index's segment rows); compaction is the generic
     * [[graft.ops.Compaction.rewriteBucketed]].
     */
-  def addToPositionalIndex(batch: DataFrame, table: String): Unit = {
-    val spark = batch.sparkSession
-    val n = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.getOrElse(throw new IllegalArgumentException(
-        s"table $table is not bucketed — not a positional index table")).numBuckets
-    positionalPostings(batch).write.mode("append")
-      .bucketBy(n, "token").sortBy("token").format("parquet")
-      .saveAsTable(table)
-  }
+  def addToPositionalIndex(batch: DataFrame, table: String): Unit =
+    graft.ops.Compaction.appendBucketed(batch.sparkSession, table)(positionalPostings(batch))
 
   /** Deterministic corpus-derived phrase set for the driver row: the
     * 3rd–5th tokens of each of the first `n` long-enough docs.

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, FormattedMode}
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, InputAdapter,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** SURVEY §5's scale contract, asserted on real plans (round-1 verdict
   * item #7) so a future refactor can't silently regress pushdown,
@@ -20,6 +22,19 @@ class PlanContractSpec extends SparkSpec {
 
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every operator of `p` paired with whether it runs inside a
+    * WholeStageCodegenExec — adaptive query stages unwrapped, and an
+    * InputAdapter closing the enclosing codegen stage.
+    */
+  private def codegenMembership(p: SparkPlan,
+      inStage: Boolean = false): Seq[(SparkPlan, Boolean)] = p match {
+    case a: AdaptiveSparkPlanExec => codegenMembership(a.executedPlan)
+    case s: QueryStageExec => codegenMembership(s.plan)
+    case w: WholeStageCodegenExec => codegenMembership(w.child, inStage = true)
+    case i: InputAdapter => codegenMembership(i.child)
+    case op => (op, inStage) +: op.children.flatMap(codegenMembership(_, inStage))
+  }
 
   test("q1_agg: filter and column pruning reach the parquet scan; single agg shuffle") {
     val plan = formatted(q("q1_agg"))
@@ -207,6 +222,20 @@ class PlanContractSpec extends SparkSpec {
     // the ADC inner loop is the codegen kernel, not an interpreted HOF fold
     assert(physical(q("ann_pq")).contains("adc_score"),
       "ann_pq does not score through the native AdcScore kernel")
+    // ...and in the FINAL executed plan the operator evaluating each
+    // scoring kernel sits inside a whole-stage codegen stage
+    for ((name, fn) <- Seq("ann_pq" -> "adc_score", "ann_opq" -> "adc_score",
+        "ann_quantized" -> "int_dot_product")) {
+      val df = q(name)
+      df.collect()
+      val evaluators = codegenMembership(df.queryExecution.executedPlan)
+        .filter(_._1.expressions.exists(_.find(_.prettyName == fn).isDefined))
+      assert(evaluators.nonEmpty, s"$name: no operator evaluates $fn")
+      info(s"$name: $fn evaluated by " + evaluators.map(_._1.nodeName).mkString(", "))
+      assert(evaluators.forall(_._2),
+        s"$name evaluates $fn outside WholeStageCodegen: " +
+          evaluators.filterNot(_._2).map(_._1.nodeName).mkString(", "))
+    }
     // hash embedding: two keyed aggs + the norm join, no window
     val he = physical(q("text_hash_embed"))
     assert(!he.contains("Window"), s"hash_embed plans a window:\n$he")

@@ -1,0 +1,56 @@
+package graft
+
+import java.io.File
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps each at-rest decision behind its one module: the bucketed
+  * layout (bucket/sort spec, clustering, the not-bucketed refusal) in
+  * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`.
+  * Comment lines are skipped — prose may name either.
+  */
+class StructureLintSpec extends AnyFunSuite {
+
+  private lazy val mainRoot: File = {
+    val start = new File(sys.props("user.dir")).getAbsoluteFile
+    Iterator.iterate(start)(_.getParentFile).takeWhile(_ != null)
+      .map(d => new File(d, "src/main/scala"))
+      .find(_.isDirectory)
+      .getOrElse(fail(s"no src/main/scala above $start"))
+  }
+
+  private def sources(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  /** `path:line` of every code line matching one of `needles`
+    * outside `owner` (a path relative to `graft/`).
+    */
+  private def offenders(owner: String, needles: Seq[String]): Seq[String] = {
+    val ownerFile = new File(mainRoot, s"graft/$owner").getCanonicalFile
+    sources(mainRoot).filter(_.getCanonicalFile != ownerFile).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if !isComment(line) && needles.exists(line.contains) =>
+          s"${mainRoot.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+      }.toList finally src.close()
+    }
+  }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+  }
+
+  test("the bucketed layout is written only by ops/Compaction.scala") {
+    assert(sources(mainRoot).exists(_.getName == "Compaction.scala"))
+    val hits = offenders("ops/Compaction.scala", Seq(".bucketBy(", "bucketSpec.getOrElse"))
+    if (hits.nonEmpty) fail(s"bucket layout decided outside Compaction:\n${hits.mkString("\n")}")
+  }
+
+  test("table-property DDL lives only in ops/TableProps.scala") {
+    val hits = offenders("ops/TableProps.scala", Seq("SET TBLPROPERTIES", "SHOW TBLPROPERTIES"))
+    if (hits.nonEmpty) fail(s"TBLPROPERTIES DDL outside TableProps:\n${hits.mkString("\n")}")
+  }
+}
