@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTableType}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogTable, CatalogTableType}
 import org.apache.spark.sql.functions.col
 
 /** The at-rest layout of every bucketed index table, and its upkeep
@@ -87,10 +87,6 @@ object Compaction {
       transform: DataFrame => DataFrame = identity): Unit = {
     val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
     val spec = bucketSpec(spark, table)
-    val external = meta.tableType == CatalogTableType.EXTERNAL
-    val oldLoc = meta.location
-    val staging = s"${table}__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
     // read the FILES, not the catalog table: a scan of the bucketed
     // table advertises HashPartitioning(bucket, n), which lets the
     // planner elide the repartition exchange as already-satisfied —
@@ -105,30 +101,12 @@ object Compaction {
     // buckets
     val rows = transform(spark.read.parquet(meta.location.toString))
       .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
-    val w0 = rows.write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets,
+    swapIn(spark, table, meta, rows) { w =>
+      val b = w.bucketBy(spec.numBuckets,
         spec.bucketColumnNames.head, spec.bucketColumnNames.tail: _*)
-    val w1 = if (spec.sortColumnNames.nonEmpty)
-      w0.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w0
-    val w2 = if (external)
-      w1.option("path", s"${oldLoc.getPath}__compact_${System.nanoTime()}")
-    else w1
-    w2.saveAsTable(staging)
-    // index flags (e.g. the PQ residual/nProbe encoding params) must
-    // survive compaction — a compacted residual index served without
-    // its bias term is the silent-wrong case the props exist to stop
-    meta.properties.filter { case (k, _) => k.startsWith("graft.") }.foreach {
-      case (k, v) => TableProps.set(spark, staging, k, v)
+      if (spec.sortColumnNames.isEmpty) b
+      else b.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
     }
-    spark.sql(s"DROP TABLE `$table`")
-    if (external) {
-      // DROP on an external table leaves the old file set behind —
-      // remove it so compaction actually reclaims the append debris
-      val p = new org.apache.hadoop.fs.Path(oldLoc)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
   }
 
   /** Rewrite an UNBUCKETED catalog table through a staging table and
@@ -144,30 +122,39 @@ object Compaction {
     */
   def rewriteTable(spark: SparkSession, table: String,
       transform: DataFrame => DataFrame): Unit = {
-    val catalog = spark.sessionState.catalog
-    val meta = catalog.getTableMetadata(TableIdentifier(table))
+    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
     require(meta.bucketSpec.isEmpty,
       s"table $table is bucketed — use rewriteBucketed to preserve the layout")
-    val external = meta.tableType == CatalogTableType.EXTERNAL
-    val oldLoc = meta.location
+    swapIn(spark, table, meta,
+      transform(spark.read.schema(meta.schema).parquet(meta.location.toString)))(identity)
+  }
+
+  /** The tail both rewrites share: write `rows` through `layout` to a
+    * staging table, copy every `graft.*` table property of `table`
+    * (catalog entry `meta`) onto it, drop `table` and an external
+    * table's old files (DROP leaves them behind), and rename the
+    * staging table into its place. An external table's new location
+    * is its old one with any earlier rewrite suffix stripped and one
+    * fresh suffix added, so repeated rewrites never lengthen the path.
+    */
+  private def swapIn(spark: SparkSession, table: String, meta: CatalogTable,
+      rows: DataFrame)(layout: DataFrameWriter[Row] => DataFrameWriter[Row]): Unit = {
     val staging = s"${table}__rewriting"
+    val external = meta.tableType == CatalogTableType.EXTERNAL
     spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    val rows = transform(
-      spark.read.schema(meta.schema).parquet(oldLoc.toString))
-    val w0 = rows.write.mode("overwrite").format("parquet")
-    // strip any prior rewrite suffix so repeated batch rewrites don't
-    // compound the path name forever
-    val base = oldLoc.getPath.replaceAll("__rewrite_\\d+$", "")
-    val w1 = if (external)
-      w0.option("path", s"${base}__rewrite_${System.nanoTime()}")
-    else w0
-    w1.saveAsTable(staging)
+    val w = layout(rows.write.mode("overwrite").format("parquet"))
+    val base = meta.location.getPath.replaceAll("(__(compact|rewrite)_\\d+)+$", "")
+    (if (external) w.option("path", s"${base}__rewrite_${System.nanoTime()}") else w)
+      .saveAsTable(staging)
+    // index flags (e.g. the PQ residual/nProbe encoding params) must
+    // survive a rewrite — a compacted residual index served without
+    // its bias term is the silent-wrong case the props exist to stop
     meta.properties.filter { case (k, _) => k.startsWith("graft.") }.foreach {
       case (k, v) => TableProps.set(spark, staging, k, v)
     }
     spark.sql(s"DROP TABLE `$table`")
     if (external) {
-      val p = new org.apache.hadoop.fs.Path(oldLoc)
+      val p = new org.apache.hadoop.fs.Path(meta.location)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
     spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")

@@ -670,6 +670,11 @@ object Curation {
     * full-outer join on the domain grain, never a driver
     * materialization: a real crawl's ledger has 10⁷–10⁸ registered
     * domains).
+    *
+    * Eager: the returned frame is a [[Caching.cut]], and the caller
+    * releases it with [[Caching.releaseCheckpoint]] once nothing reads
+    * it (`superseded = true` also deletes its files under a checkpoint
+    * dir).
     */
   def admitWithQuota(parsed: DataFrame, table: String, quota: Int,
       salt: String = "quota"): DataFrame = {
@@ -683,13 +688,13 @@ object Curation {
       .filter(col("rn") <= lit(quota.toLong) - col("__used"))
       .select(col("domain"), col("key"),
         (col("rn") + col("__used")).as("admission_rank"))
-    // localCheckpoint, NOT persist: the ledger overwrite below
+    // a cut, NOT persist: the ledger overwrite below
     // UNCACHES every plan that references the table (Spark's
     // saveAsTable invalidation), and a merely-persisted result would
     // silently recompute against the POST-admission ledger — the
     // checkpoint severs the lineage so this batch's admissions are
     // immutable once computed
-    val admittedCached = admitted.localCheckpoint(true)
+    val admittedCached = Caching.cut(admitted)
     // ledger advance: distributed staging-table rewrite (one
     // domains-grain full-outer join), swapped in via the catalog
     // rename idiom — the new files land before the old table name

@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.Caching.releaseCheckpoint
-
 /** Iterative graph analytics over DataFrame edge lists — PageRank in
   * FIXED-POINT integer arithmetic so the result is deterministic,
   * partition-order independent, and cross-engine hash-exact (a float
@@ -15,11 +13,9 @@ import graft.ops.Caching.releaseCheckpoint
   * Scale shape (the star-contraction discipline applied to power
   * iteration): each iteration is ONE equi-join of the edge list with
   * the rank table plus one map-side-partial keyed sum — no windows,
-  * no driver-side graph state; lineage is cut every iteration with an
-  * eager `localCheckpoint` (constant-depth plans over any iteration
-  * count, previous iteration's blocks released). At 100 TB swap
-  * `localCheckpoint` for reliable checkpointing to the cluster FS —
-  * one flag, same plan shape.
+  * no driver-side graph state; every iteration is one round of
+  * [[Caching.iterate]] (a [[Caching.cut]] per round, constant-depth
+  * plans over any iteration count, previous round released).
   *
   * Fixed-point arithmetic: ranks carry `Scale` units per 1.0 of mass.
   * contribution(u→v) = rank(u) div outdeg(u); rank'(v) =
@@ -85,27 +81,6 @@ object Graph {
       iterations: Int = 10, scale: Long = Scale): DataFrame =
     pageRankImpl(edges, iterations, scale, Some(_ => seeds))
 
-  /** Lineage is cut (localCheckpoint) once per this many iterations —
-    * plan depth between cuts stays ≤ `2·PageRankCheckpointEvery`
-    * operators while per-round write+read round trips of the rank
-    * table drop by the same factor. Env-overridable
-    * (`SPARK_GRAFT_PR_CHECKPOINT_EVERY`).
-    *
-    * Default 1 (r16): the r15 chunking default of 5 was A/B'd against
-    * 1 and 2 on otherwise identical code (min-of-5, local[32], sf0.1):
-    * q_pagerank 9.12 s (k=1) vs 11.02 (k=2) vs 10.97 (k=5),
-    * q_pagerank_personalized 9.19 vs 9.39 vs 12.33 — composing rounds
-    * into one deep AQE job pays more in adaptive re-planning and
-    * stage-barrier latency than the skipped per-round materializations
-    * of a tiny rank table save. The trade reverses when the rank table
-    * is big enough that writing it per round dominates (each cut is a
-    * full write+read of |nodes| rows) — raise the env knob on cluster
-    * runs after measuring, exactly like the r15 note said, but the
-    * LOCAL default must be the locally measured winner.
-    */
-  val PageRankCheckpointEvery: Int =
-    sys.env.get("SPARK_GRAFT_PR_CHECKPOINT_EVERY").map(_.toInt).getOrElse(1)
-
   /** `seeds`: a function from the node table (one `node` column, the
     * distinct src set, served from the already-cached edge list) to
     * the seed set — lets a caller pick seeds from the graph itself
@@ -114,12 +89,9 @@ object Graph {
     * constant function.
     */
   private def pageRankImpl(edges: DataFrame, iterations: Int, scale: Long,
-      seeds: Option[DataFrame => DataFrame],
-      checkpointEvery: Int = PageRankCheckpointEvery): DataFrame = {
+      seeds: Option[DataFrame => DataFrame]): DataFrame = {
     require(iterations >= 1, s"need at least one iteration, got $iterations")
     require(scale >= 1L, s"scale must be positive, got $scale")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be ≥ 1, got $checkpointEvery")
     // partition the STATIC sides once, on their join keys: the cached
     // InMemoryRelation advertises its hashpartitioning, so every
     // iteration's edge⋈rank join exchanges ONLY the iteration-fresh
@@ -162,48 +134,29 @@ object Graph {
         "Pass a smaller `scale` — e.g. 10_000_000 covers ~10^10 nodes " +
         "at 10^-7 rank resolution.")
     val baseFp = 15L * scale / 100L
-    // Iterations are CHUNKED between lineage cuts (guide §1.2/§2.4:
-    // remove materializations, not just shuffles): a localCheckpoint
-    // per iteration writes + re-reads the full rank table every round
-    // and pays a job submission per round; composing `checkpointEvery`
-    // rounds into one lazy plan executes them as ONE job (the shuffles
-    // between rounds are the natural materialization — task failures
-    // still recover from shuffle files), then cuts lineage once per
-    // chunk so plan depth stays bounded for ANY iteration count. The
-    // arithmetic is untouched — int64 fixed-point results are
-    // bit-identical whether or not a round crosses a checkpoint.
-    var ranks = degs.select(col("node"), col("outdeg"), col("is_seed"),
+    // one cut per round (r16 A/B, min-of-5, local[32], sf0.1: a cut
+    // every round beat composing 2 or 5 rounds into one job — q_pagerank
+    // 9.12 vs 11.02 vs 10.97 s; AQE re-planning and stage barriers of
+    // the deep plan cost more than the tiny rank table's write+read)
+    val init = degs.select(col("node"), col("outdeg"), col("is_seed"),
       (lit(scale) * col("is_seed")).as("rank_fp"))
-    var lastCp: Option[DataFrame] = None
-    var it = 0
-    while (it < iterations) {
+    val (ranks, _) = Caching.iterate("pageRank", init, iterations, cutInit = false) { r =>
       val contribs = e
-        .join(ranks.select(col("node").as("src"), col("outdeg"), col("rank_fp")),
+        .join(r.select(col("node").as("src"), col("outdeg"), col("rank_fp")),
           Seq("src"))
         .select(col("dst").as("node"), expr("rank_fp div outdeg").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-      var next = degs.join(contribs, Seq("node"), "left")
+      Some(degs.join(contribs, Seq("node"), "left")
         .select(col("node"), col("outdeg"), col("is_seed"),
           (lit(baseFp) * col("is_seed") +
-            expr(s"(85 * coalesce(s, 0L)) div 100")).as("rank_fp"))
-      it += 1
-      if (it % checkpointEvery == 0 || it == iterations) {
-        next = next.localCheckpoint(true)
-        lastCp.foreach(releaseCheckpoint)
-        lastCp = Some(next)
-      }
-      ranks = next
+            expr(s"(85 * coalesce(s, 0L)) div 100")).as("rank_fp")))
     }
-    // the cached result's lineage passes through the final iteration's
-    // localCheckpoint, whose blocks are released here (the
-    // clustersFromPairs convention): it cannot recompute if its own
-    // blocks are lost — write it out / use reliable checkpointing on a
-    // fault-prone cluster
+    // the cached result reads the last round's cut: set a checkpoint
+    // dir and the result recomputes ([[Caching.cut]])
     val out = ranks.select(col("node"), col("outdeg"), col("rank_fp"),
       (col("rank_fp").cast("double") / lit(scale.toDouble)).as("pagerank"))
-    val last = ranks
     Caching.materialized(out) {
-      e.unpersist(false); degs.unpersist(false); releaseCheckpoint(last)
+      e.unpersist(false); degs.unpersist(false); Caching.releaseCheckpoint(ranks)
     }
   }
 
@@ -245,15 +198,14 @@ object Graph {
     * small-star contraction ([[graft.dedup.Dedup.clustersFromPairs]]
     * — label-type agnostic, per-round lineage cuts, map-side min
     * aggregation, never a window), so the dedup-scale evidence (1M-
-    * node smoke) carries over.
+    * node smoke) carries over. Eager: the result is the one cache
+    * scope, and the caller unpersists it.
     */
   def hostClusters(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     val nodes = edges.select(col("src_host").as("doc_id"))
       .union(edges.select(col("dst_host").as("doc_id"))).distinct()
-    graft.dedup.Dedup.clustersFromPairs(nodes,
-        edges.select(col("src_host").as("a"), col("dst_host").as("b")),
-        maxIters)
-      .select(col("doc_id").as("host"), col("cluster_id").as("cluster_host"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
+    graft.dedup.Dedup.labelComponents(nodes,
+      edges.select(col("src_host").as("a"), col("dst_host").as("b")),
+      maxIters, "host", "cluster_host", "is_canonical")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.BpeEncodeExpr
-import graft.ops.Caching.releaseCheckpoint
+import graft.ops.Caching
 
 /** Byte-pair-encoding subword tokenizer learned FROM the corpus
   * (Sennrich et al. 2016 "Neural Machine Translation of Rare Words
@@ -20,10 +20,10 @@ import graft.ops.Caching.releaseCheckpoint
   * frequency, partial-aggregated to one row per pair per partition)
   * feeds a 1-ROW argmax to the driver (the merge RULE is the scalar
   * decision — kilobytes, like the PQ codebook collect), and the merge
-  * applies as a map-side array fold. Lineage is cut with an eager
-  * `localCheckpoint` each round (the star-contraction discipline —
-  * constant-depth plans over `numMerges` rounds, previous round's
-  * blocks released). Serving is [[graft.expressions.BpeEncodeExpr]]:
+  * applies as a map-side array fold. Each merge is one round of
+  * [[graft.ops.Caching.iterate]] (the star-contraction discipline —
+  * a cut per round, constant-depth plans over `numMerges` rounds,
+  * previous round released). Serving is [[graft.expressions.BpeEncodeExpr]]:
   * the merge list rides the plan as a literal, one native call per row
   * inside whole-stage codegen.
   */
@@ -84,8 +84,8 @@ object Bpe {
       minCount: Long = 2L, maxLocalVocab: Long = 4000000L): BpeModel = {
     // one corpus tokenize pass, materialized at vocabulary grain; the
     // size probe and the collect (or the distributed loop) both read
-    // the checkpointed blocks, never the corpus again
-    val wc = wordCounts(docs, sampleFrac).localCheckpoint(true)
+    // the cut, never the corpus again
+    val wc = Caching.cut(wordCounts(docs, sampleFrac))
     try {
       val probeCap = math.min(maxLocalVocab + 1L, Int.MaxValue.toLong).toInt
       if (maxLocalVocab > 0 && wc.limit(probeCap).count() <= maxLocalVocab) {
@@ -94,24 +94,20 @@ object Bpe {
         }
         trainLocal(vocab, numMerges, minCount)
       } else trainDistributed(wc, numMerges, minCount)
-    } finally releaseCheckpoint(wc)
+    } finally Caching.releaseCheckpoint(wc, superseded = true)
   }
 
   /** The per-merge Spark loop for vocabularies too large to collect:
     * each round is a pair-count aggregate (map-side-combined to one
     * row per pair per partition) → 1-row argmax on the driver → a
-    * map-side array-fold rewrite, with lineage cut by an eager
-    * `localCheckpoint` per round.
+    * map-side array-fold rewrite, one [[graft.ops.Caching.iterate]]
+    * round per merge; a best pair below `minCount` ends the loop.
     */
   private[graft] def trainDistributed(wordCounts: DataFrame, numMerges: Int,
       minCount: Long): BpeModel = {
-    var words = wordCounts
-      .select(col("wc"), charsOf(col("word")).as("syms"))
-      .localCheckpoint(true)
     val merges = Seq.newBuilder[(String, String)]
-    var m = 0
-    var done = false
-    while (m < numMerges && !done) {
+    val (words, _) = Caching.iterate("bpe", wordCounts
+        .select(col("wc"), charsOf(col("word")).as("syms")), numMerges) { words =>
       val best = words
         .filter(size(col("syms")) >= 2)
         .select(col("wc"), explode(transform(
@@ -121,19 +117,13 @@ object Bpe {
         .groupBy(col("p.a"), col("p.b")).agg(sum(col("wc")).as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.isEmpty || best.head.getLong(2) < minCount) done = true
-      else {
-        val (a, b) = (best.head.getString(0), best.head.getString(1))
+      best.headOption.filter(_.getLong(2) >= minCount).map { r =>
+        val (a, b) = (r.getString(0), r.getString(1))
         merges += ((a, b))
-        val next = words
-          .select(col("wc"), mergePair(col("syms"), a, b).as("syms"))
-          .localCheckpoint(true)
-        releaseCheckpoint(words)
-        words = next
-        m += 1
+        words.select(col("wc"), mergePair(col("syms"), a, b).as("syms"))
       }
     }
-    releaseCheckpoint(words)
+    Caching.releaseCheckpoint(words, superseded = true)
     BpeModel(merges.result())
   }
 

@@ -198,10 +198,9 @@ object SearchIndex {
     *  - eager materialized — [[TextAnalysis.searchTopK]] and every
     *    hybrid form: run at call time and return a PERSISTED frame
     *    that is the one cache scope left; the caller must `unpersist`
-    *    it. The hybrid forms fuse through a released `localCheckpoint`
-    *    (TextAnalysis.fuseRankListsBatch), so their result cannot
-    *    recompute if its blocks are lost — on a fault-prone cluster
-    *    write it out before relying on it.
+    *    it. The hybrid forms fuse through a released
+    *    [[graft.ops.Caching.cut]] (TextAnalysis.fuseRankListsBatch):
+    *    set a checkpoint dir and the result recomputes.
     */
   private[text] def scoreTopK(ix: Built, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {

@@ -1271,8 +1271,8 @@ object TextAnalysis {
     * rank means that retriever did not surface the document.
     *
     * Eager, materialized; the result's lineage runs through a released
-    * `localCheckpoint`, so it cannot recompute if its blocks are lost
-    * (the contract on [[SearchIndex.scoreTopK]]).
+    * [[graft.ops.Caching.cut]]: set a checkpoint dir and the result
+    * recomputes (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchTopK(docs: DataFrame, terms: Seq[String] = Bm25Terms,
       k: Int = 10, kEach: Int = 20, d: Int = 64, rrfK: Int = 60): DataFrame = {
@@ -1300,8 +1300,8 @@ object TextAnalysis {
     * fusion core is shared, so the two forms cannot drift.
     *
     * Eager, materialized; the result's lineage runs through a released
-    * `localCheckpoint`, so it cannot recompute if its blocks are lost
-    * (the contract on [[SearchIndex.scoreTopK]]).
+    * [[graft.ops.Caching.cut]]: set a checkpoint dir and the result
+    * recomputes (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchTopKOnIndex(idx: SearchIndex.TextIndex, docs: DataFrame,
       terms: Seq[String] = Bm25Terms, k: Int = 10, kEach: Int = 20,
@@ -1356,14 +1356,12 @@ object TextAnalysis {
     // The fused rank lists are ≤ 2·kEach rows per query — the cheapest
     // possible thing to materialize (guide §3.3: materialize an
     // intermediate to truncate a very wide plan). The returned release
-    // frees the checkpoint blocks; callers run it once their own result
-    // is materialized (after which, like clustersFromPairs, the result
-    // cannot recompute if its blocks are lost — write it out / use
-    // reliable checkpointing on a fault-prone cluster).
-    val fused = lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
-      .select(col("query_id"), col("doc_id"), col("lex_rank"), col("vec_rank"),
-        rrfScore.as("rrf_score"))
-      .localCheckpoint(true)
+    // frees the cut; callers run it once their own result is
+    // materialized (set a checkpoint dir and the result recomputes).
+    val fused = graft.ops.Caching.cut(
+      lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
+        .select(col("query_id"), col("doc_id"), col("lex_rank"), col("vec_rank"),
+          rrfScore.as("rrf_score")))
     val out = graft.ops.TopK.rankByScore(
       fused.select(col("query_id").as("q_id"), col("doc_id").as("cand_id"),
         col("rrf_score").as("sim")), k)
@@ -1396,8 +1394,8 @@ object TextAnalysis {
     * lex_rank, vec_rank, rrf_score).
     *
     * Eager, materialized; the result's lineage runs through a released
-    * `localCheckpoint`, so it cannot recompute if its blocks are lost
-    * (the contract on [[SearchIndex.scoreTopK]]).
+    * [[graft.ops.Caching.cut]]: set a checkpoint dir and the result
+    * recomputes (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchBatchOnIndexes(lexIdx: SearchIndex.TextIndex,
       annCells: DataFrame, annCentroids: DataFrame, queries: DataFrame,
@@ -1416,8 +1414,8 @@ object TextAnalysis {
     * rrf_score).
     *
     * Eager, materialized; the result's lineage runs through a released
-    * `localCheckpoint`, so it cannot recompute if its blocks are lost
-    * (the contract on [[SearchIndex.scoreTopK]]).
+    * [[graft.ops.Caching.cut]]: set a checkpoint dir and the result
+    * recomputes (the contract on [[SearchIndex.scoreTopK]]).
     */
   def hybridSearchTopKOnIndexes(lexIdx: SearchIndex.TextIndex,
       annCells: DataFrame, annCentroids: DataFrame,

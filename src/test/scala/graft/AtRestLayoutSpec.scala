@@ -94,7 +94,7 @@ class AtRestLayoutSpec extends SparkSpec {
     spark.conf.set(coalesce, "false")
     try for (f <- fams) {
       val base = s"graft_layout_${f.name}_spec"
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_layout_${f.name}").toString
+      val dir = tempDir(s"graft_layout_${f.name}").toString
       f.save(base, s"$dir/tbl")
       val tables = f.tables.map { case (suffix, keys) => (base + suffix, keys) }
       for ((t, keys) <- tables) {
@@ -120,5 +120,20 @@ class AtRestLayoutSpec extends SparkSpec {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     } finally spark.conf.set(coalesce, old)
+  }
+
+  test("compacting an external table twice leaves one rewrite suffix on its location") {
+    val dir = tempDir("graft_layout_suffix").toString
+    val t = "graft_layout_suffix_spec"
+    Ivf.saveIndex(emb, emb.filter(col("vec_id") < 8), t, nBuckets, Some(s"$dir/tbl"))
+    val n = spark.table(t).count()
+    Compaction.rewriteBucketed(spark, t)
+    Compaction.rewriteBucketed(spark, t)
+    val loc = meta(t).location.getPath
+    assert(loc.matches(s".*/tbl__rewrite_\\d+"), s"location $loc")
+    assert("__(rewrite|compact)_".r.findAllIn(loc).size === 1, s"location $loc")
+    assert(spark.table(t).count() === n)
+    assert(Compaction.filesPerBucket(spark, t).values.forall(_ == 1))
+    Seq(t, s"${t}_centroids").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
   }
 }

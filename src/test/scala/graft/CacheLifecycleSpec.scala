@@ -107,7 +107,7 @@ class CacheLifecycleSpec extends SparkSpec {
   }
 
   test("incrementalDedupOnSignatures releases its caches; result is the scope") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_clc").toString
+    val tmp = tempDir("graft_sig_clc").toString
     Dedup.saveSignatures(docs.filter(col("doc_id") % 2 === 0),
       "graft_dedup_sig_clc", path = Some(s"$tmp/tbl"))
     val (fp, bands) = Dedup.loadSignatures(spark, "graft_dedup_sig_clc")
@@ -118,7 +118,7 @@ class CacheLifecycleSpec extends SparkSpec {
   }
 
   test("saveSignatures and addSignatures release their tokenize caches; nothing is left behind") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_store_clc").toString
+    val tmp = tempDir("graft_sig_store_clc").toString
     val before = persisted
     Dedup.saveSignatures(docs.filter(col("doc_id") % 2 === 0), "graft_sig_store_clc",
       nBuckets = 4, path = Some(s"$tmp/tbl"))
@@ -140,7 +140,7 @@ class CacheLifecycleSpec extends SparkSpec {
 
   test("SearchIndex.save and add release their build caches; nothing is left behind") {
     import graft.text.SearchIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_search_clc").toString
+    val tmp = tempDir("graft_search_clc").toString
     val before = persisted
     SearchIndex.save(docs.filter(col("doc_id") % 2 === 0), "graft_search_clc",
       nBuckets = 4, path = Some(s"$tmp/tbl"))
@@ -159,6 +159,36 @@ class CacheLifecycleSpec extends SparkSpec {
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     assertScoped(graft.ops.Graph.pageRank(edges, iterations = 3))
+  }
+
+  test("hostClusters releases the contraction's cuts; its renamed result is the scope") {
+    val edges = Seq(("a.com", "b.com"), ("b.com", "c.com"), ("x.org", "y.org"))
+      .toDF("src_host", "dst_host")
+    assertScoped(graft.ops.Graph.hostClusters(edges))
+  }
+
+  test("Bpe.trainDistributed releases every round's cut; nothing is left behind") {
+    val before = persisted
+    val model = graft.text.Bpe.trainDistributed(
+      graft.text.Bpe.wordCounts(docs.limit(50)), numMerges = 4, minCount = 1L)
+    assert(model.merges.nonEmpty)
+    assert((persisted -- before).isEmpty, s"trainDistributed leaked: ${persisted -- before}")
+  }
+
+  test("admitWithQuota returns one cut, which Caching.releaseCheckpoint releases") {
+    import graft.ops.{Caching, Curation}
+    val tmp = tempDir("graft_ledger_clc").toString
+    Curation.initQuotaLedger(spark, "graft_ledger_clc", Some(s"$tmp/tbl"))
+    val before = persisted
+    val res = Curation.admitWithQuota(
+      Seq((1L, "a.com"), (2L, "a.com"), (3L, "b.org")).toDF("doc_id", "domain"),
+      "graft_ledger_clc", quota = 1)
+    assert(res.count() === 2)
+    assert((persisted -- before).size === 1,
+      s"expected the one returned cut: ${persisted -- before}")
+    Caching.releaseCheckpoint(res)
+    assert((persisted -- before).isEmpty, s"the cut was not released: ${persisted -- before}")
+    spark.sql("DROP TABLE IF EXISTS graft_ledger_clc")
   }
 
   test("star contraction converges within 30 rounds on a diameter-200 chain") {

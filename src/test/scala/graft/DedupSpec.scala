@@ -126,7 +126,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_sig").toString
+    val tmp = tempDir("graft_dedup_sig").toString
     Dedup.saveSignatures(corpus, "graft_dedup_sig_spec", path = Some(s"$tmp/tbl"))
     val (fp, bands) = Dedup.loadSignatures(spark, "graft_dedup_sig_spec")
     val persisted = Dedup.incrementalDedupOnSignatures(fp, bands, corpus, batch)
@@ -160,7 +160,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val corpus = docs.filter(col("doc_id") < 300)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_loop").toString
+    val tmp = tempDir("graft_sig_loop").toString
     Dedup.saveSignatures(corpus, "graft_sig_loop_spec", path = Some(s"$tmp/tbl"))
     // batch B: one fresh doc the corpus has never seen
     val freshText = (1 to 60).map(i => s"loopy$i").mkString(" ")

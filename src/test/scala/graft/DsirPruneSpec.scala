@@ -92,7 +92,7 @@ class DsirPruneSpec extends SparkSpec {
 
   test("dsir: persisted llr round trip — resample from the loaded table ≡ fresh, params guarded") {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dsir_spec").toString
+    val tmp = tempDir("graft_dsir_spec").toString
     val fresh = Dsir.importanceResample(d).collect().map(_.toString)
     val persisted = Dsir.fitSaveResampleQuery(d, "graft_dsir_llr_spec",
       path = Some(s"$tmp/llr")).collect().map(_.toString)
@@ -121,7 +121,7 @@ class DsirPruneSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.Streams
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dsir_stream").toString
+    val tmp = tempDir("graft_dsir_stream").toString
     Dsir.saveLlr(Dsir.fitLlr(d), "graft_dsir_llr_stream_spec",
       path = Some(s"$tmp/llr"))
     val sample = d.orderBy(col("doc_id")).limit(5).collect()

@@ -152,7 +152,7 @@ class IngestFacesSpec extends SparkSpec {
   }
 
   test("Jsonl.docs: real .jsonl files from disk, explicit schema, malformed lane") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toFile
+    val dir = tempDir("graft_jsonl").toFile
     val f = new java.io.File(dir, "part-0.jsonl")
     try {
       val lines = Seq(
@@ -184,7 +184,7 @@ class IngestFacesSpec extends SparkSpec {
     // one .gz shard, one plain — all three codecs in ONE scan, which
     // is exactly how released corpora arrive (RedPajama/FineWeb ship
     // .jsonl.zst; local reprocessing mixes in plain shards)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zst").toFile
+    val dir = tempDir("graft_zst").toFile
     val fz = new java.io.File(dir, "part-0.jsonl.zst")
     val fg = new java.io.File(dir, "part-1.jsonl.gz")
     val fp = new java.io.File(dir, "part-2.jsonl")

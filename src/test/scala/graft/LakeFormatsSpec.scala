@@ -207,7 +207,7 @@ class LakeFormatsSpec extends SparkSpec {
 
   test("Parquet conformance: Spark's own parquet output parses exact") {
     // write a real parquet file with Spark, triage its BYTES
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toFile
+    val dir = tempDir("graft_pq").toFile
     try {
       val df = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"), col("source"))
@@ -288,7 +288,7 @@ class LakeFormatsSpec extends SparkSpec {
 
   test("ORC conformance: Spark's own ORC writer parses exact in ALL its codecs") {
     import graft.expressions.OrcMetaKernel
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toFile
+    val dir = tempDir("graft_orc").toFile
     try {
       val df = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"), col("source"))
@@ -380,7 +380,7 @@ class LakeFormatsSpec extends SparkSpec {
 
   test("parquet pages conformance: files Spark ITSELF wrote decode value-exact in five codecs") {
     import graft.expressions.ParquetPagesKernel
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pages").toFile
+    val tmp = tempDir("graft_pages").toFile
     def bytesOf(dir: java.io.File): Array[Byte] = {
       val part = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.readAllBytes(part.toPath)

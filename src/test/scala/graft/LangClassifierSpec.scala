@@ -67,7 +67,7 @@ class LangClassifierSpec extends SparkSpec {
 
   test("persisted driver row: loaded-weights scoring stays accurate on the stripped corpus") {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lang_rt").toString
+    val tmp = tempDir("graft_lang_rt").toString
     val out = graft.text.LangClassifier.trainSaveScoreQuery(d,
       "graft_lang_model_rt_spec", path = Some(s"$tmp/m")).collect()
     assert(out.nonEmpty)

@@ -86,7 +86,7 @@ class LshSpec extends SparkSpec {
   }
 
   test("save/load round-trip preserves index and params") {
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = tempDir("lshidx").toString
     val idx = LshIndex.build(emb, p)
     LshIndex.save(idx, p, dir)
     val (loaded, lp) = LshIndex.load(spark, dir)
@@ -102,17 +102,17 @@ class LshSpec extends SparkSpec {
     // missing directory raises (test_load_missing_directory_raises)
     intercept[Exception] { LshIndex.load(spark, "/tmp/graft_no_such_dir_xyz") }
     // params without index raises (test_load_missing_files_raises)
-    val dir = java.nio.file.Files.createTempDirectory("lshbad").toString
+    val dir = tempDir("lshbad").toString
     val idx = LshIndex.build(emb, p)
     LshIndex.save(idx, p, dir)
-    val dir2 = java.nio.file.Files.createTempDirectory("lshbad2").toString
+    val dir2 = tempDir("lshbad2").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(dir, "params.json"),
       java.nio.file.Paths.get(dir2, "params.json"))
     intercept[Exception] { LshIndex.load(spark, dir2) }
     // params that disagree with the stored band layout fail fast
     val wrong = p.copy(numPerm = 16, numBands = Some(4), rowsPerBand = Some(4))
-    val dir3 = java.nio.file.Files.createTempDirectory("lshbad3").toString
+    val dir3 = tempDir("lshbad3").toString
     LshIndex.save(idx, wrong, dir3) // 8-band index, 4-band params
     val e = intercept[IllegalArgumentException] { LshIndex.load(spark, dir3) }
     assert(e.getMessage.contains("does not match"))
@@ -122,7 +122,7 @@ class LshSpec extends SparkSpec {
 
   test("bucketed save/load: params round-trip; collision join has no index-side exchange") {
     val idx = LshIndex.build(emb, p)
-    val dir = java.nio.file.Files.createTempDirectory("lshtbl").toString
+    val dir = tempDir("lshtbl").toString
     LshIndex.saveBucketed(idx, p, "lsh_idx_spec", nBuckets = 4, path = Some(dir))
     val (loaded, lp) = LshIndex.loadBucketed(spark, "lsh_idx_spec")
     assert(lp === p.copy(numBands = Some(p.b), rowsPerBand = Some(p.r)))
@@ -153,7 +153,7 @@ class LshSpec extends SparkSpec {
   test("bucketed lifecycle: add appends under stored params; compact ≡ rebuild, one file per bucket") {
     import graft.ops.Compaction
     val thirds = (0 to 2).map(i => emb.filter(col("vec_id") % 3 === i))
-    val dir = java.nio.file.Files.createTempDirectory("lshcpt").toString
+    val dir = tempDir("lshcpt").toString
     LshIndex.saveBucketed(LshIndex.build(thirds(0), p), p, "lsh_cpt_spec",
       nBuckets = 4, path = Some(s"$dir/tbl"))
     LshIndex.addToBucketed(spark, thirds(1), "lsh_cpt_spec")
@@ -253,7 +253,7 @@ class LshSpec extends SparkSpec {
     assert(got.head.getAs[Long]("n_collisions") === 2L)
     // persistence: the hex-sig index round-trips through save/load
     // with its wide params intact
-    val dir = java.nio.file.Files.createTempDirectory("lsh_wide_rt").toString
+    val dir = tempDir("lsh_wide_rt").toString
     LshIndex.save(idx, wp, dir)
     val (reloaded, rp) = LshIndex.load(spark, dir)
     assert(rp === wp && rp.wide)

@@ -42,7 +42,7 @@ class LshrsFacadeSpec extends SparkSpec {
     assert(lsh.clear().indexDf.count() === 0)
 
     // save / load round-trip
-    val dir = java.nio.file.Files.createTempDirectory("lshrs_facade").toString
+    val dir = tempDir("lshrs_facade").toString
     lsh.saveToDisk(dir)
     val reloaded = Lshrs.loadFromDisk(spark, dir, lsh.corpus)
     assert(reloaded.params === p.copy(numBands = Some(p.b), rowsPerBand = Some(p.r)))

@@ -107,7 +107,7 @@ class OpqSpec extends SparkSpec {
   test("OPQ × IVFADC: cell-pruned serving from the rotated index at rest") {
     val model = Opq.train(planted, m = 4, k = 8, sampleFrac = 1.0)
     val cents = planted.filter(col("vec_id") < 6)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_opq_cells").toString
+    val tmp = tempDir("graft_opq_cells").toString
     Opq.saveCellIndex(model, planted, cents, "graft_opq_cells_rt",
       path = Some(s"$tmp/tbl"), residual = true, nProbe = 2)
     val queries = planted.filter(col("vec_id") < 5)
@@ -138,7 +138,7 @@ class OpqSpec extends SparkSpec {
 
   test("save/load round trip: rotation bitwise, served top-k identical") {
     val model = Opq.train(planted, m = 4, k = 8, sampleFrac = 1.0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_opq_spec").toString
+    val tmp = tempDir("graft_opq_spec").toString
     Opq.saveIndex(model, planted, "graft_opq_spec_rt", path = Some(s"$tmp/tbl"))
     val (loaded, codes) = Opq.loadIndex(spark, "graft_opq_spec_rt")
     assert(loaded.d === model.d)

@@ -102,7 +102,7 @@ class PcaSpec extends SparkSpec {
 
   test("model save/load round trip is bitwise") {
     val m = Pca.fit(emb, d, 6)
-    val dir = java.nio.file.Files.createTempDirectory("pca_rt").toString
+    val dir = tempDir("pca_rt").toString
     Pca.saveModel(m, spark, "graft_pca_rt_spec", Some(s"$dir/tbl"))
     val m2 = Pca.loadModel(spark, "graft_pca_rt_spec")
     assert(m2.d === m.d && m2.k === m.k)

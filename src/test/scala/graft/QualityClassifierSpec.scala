@@ -101,7 +101,7 @@ class QualityClassifierSpec extends SparkSpec {
     val labels = QualityClassifier.weakLabels(docs)
     val feats = QualityClassifier.features(docs, d = 64)
     val model = QualityClassifier.trainOnFeatures(feats, labels, d = 64, sampleFrac = 0.5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qmodel").toString
+    val tmp = tempDir("graft_qmodel").toString
     QualityClassifier.saveModel(model, spark, "graft_quality_spec_rt", Some(s"$tmp/tbl"))
     val loaded = QualityClassifier.loadModel(spark, "graft_quality_spec_rt")
     assert(loaded.d === model.d)
@@ -113,7 +113,7 @@ class QualityClassifierSpec extends SparkSpec {
   }
 
   test("trainSaveScoreQuery serves from the loaded model and scores every doc") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qmodel_q").toString
+    val tmp = tempDir("graft_qmodel_q").toString
     val out = QualityClassifier.trainSaveScoreQuery(docs, "graft_quality_spec_q",
       path = Some(s"$tmp/tbl"), d = 64, sampleFrac = 0.5)
     val rows = out.collect()

@@ -351,7 +351,7 @@ class RelationalSpec extends SparkSpec {
   test("writeShuffledShards: one dir per shard, in-file order is the deterministic total order") {
     import org.apache.spark.sql.functions._
     val docs = Tables.load(spark, sfDir, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString + "/out"
+    val dir = tempDir("shards").toString + "/out"
     graft.ops.Sampling.writeShuffledShards(docs, col("doc_id"), dir, nShards = 4)
     // every row lands in exactly one shard; union reloads the corpus
     val back = spark.read.parquet(dir)

@@ -16,7 +16,7 @@ class SourcesExtensionsSpec extends SparkSpec {
   }
 
   test("csvVectors parses delimited vectors") {
-    val tmp = java.nio.file.Files.createTempDirectory("csvv")
+    val tmp = tempDir("csvv")
     val f = tmp.resolve("v.csv")
     java.nio.file.Files.writeString(f, "id,vec\n1,0.5|1.5\n2,2.0|3.0\n")
     val df = Sources.csvVectors(spark, f.toString, "id", "vec")

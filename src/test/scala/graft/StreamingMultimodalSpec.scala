@@ -15,7 +15,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   test("windowedAgg over a bounded stream equals the batch rollup") {
     val batchEv = Tables.load(spark, sfDir, "events")
     val schema = batchEv.schema
-    val tmp = java.nio.file.Files.createTempDirectory("ev")
+    val tmp = tempDir("ev")
     java.nio.file.Files.createSymbolicLink(
       tmp.resolve("events.parquet"), java.nio.file.Paths.get(s"$sfDir/events.parquet"))
     // schema-branched µs projection (int64-nanos OR timestamp-typed ts),
@@ -40,7 +40,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   test("windowedApproxUsers: streamed HLL user counts land within the rsd bound of batch exact") {
     val batchEv = Tables.load(spark, sfDir, "events")
     val schema = batchEv.schema
-    val tmp = java.nio.file.Files.createTempDirectory("evu")
+    val tmp = tempDir("evu")
     java.nio.file.Files.createSymbolicLink(
       tmp.resolve("events.parquet"), java.nio.file.Paths.get(s"$sfDir/events.parquet"))
     val stream = spark.readStream.schema(schema).parquet(tmp.toString)
@@ -75,7 +75,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val batchEv = Tables.load(spark, sfDir, "events")
     val schema = batchEv.schema
     def run(tag: String): Array[org.apache.spark.sql.Row] = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"evr_$tag")
+      val tmp = tempDir(s"evr_$tag")
       java.nio.file.Files.createSymbolicLink(
         tmp.resolve("events.parquet"), java.nio.file.Paths.get(s"$sfDir/events.parquet"))
       val stream = spark.readStream.schema(schema).parquet(tmp.toString)
@@ -95,7 +95,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val batchEv = Tables.load(spark, sfDir, "events")
     val schema = batchEv.schema
     def sideStream(tag: String, typ: String): org.apache.spark.sql.DataFrame = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"ij_$tag")
+      val tmp = tempDir(s"ij_$tag")
       java.nio.file.Files.createSymbolicLink(
         tmp.resolve("events.parquet"), java.nio.file.Paths.get(s"$sfDir/events.parquet"))
       spark.readStream.schema(schema).parquet(tmp.toString)
@@ -149,8 +149,8 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("dedupStream state survives a checkpointed restart (no re-emission of pre-restart fingerprints)") {
     val input = MemoryStream[(Long, Long, String)](spark, 5)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
+    val ckpt = tempDir("graft_ckpt").toString
+    val outDir = tempDir("graft_ckpt_out").toString
     def docsOf = input.toDF()
       .select(timestamp_micros(col("_1")).as("ts"), col("_2").as("doc_id"),
         col("_3").as("text"))
@@ -548,7 +548,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       (1L, (1 to 30).map(i => s"alpha$i").mkString(" ")),
       (2L, (1 to 30).map(i => s"beta$i").mkString(" ")))
     val corpus = corpusTexts.toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sig").toString
+    val tmp = tempDir("graft_stream_sig").toString
     graft.dedup.Dedup.saveSignatures(corpus, "graft_stream_sig_spec",
       path = Some(s"$tmp/tbl"))
     val (fp, bands) = graft.dedup.Dedup.loadSignatures(spark, "graft_stream_sig_spec")
@@ -580,7 +580,7 @@ class StreamingMultimodalSpec extends SparkSpec {
 
   test("scoreLmStream: micro-batch perplexity ≡ batch scoring from the LM at rest") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lm_stream").toString
+    val tmp = tempDir("graft_lm_stream").toString
     graft.text.TextAnalysis.saveLm(docs, "graft_lm_stream_spec", path = Some(s"$tmp/tbl"))
     val texts = docs.filter(col("doc_id") < 4)
       .select(col("doc_id"), col("text")).collect()
@@ -608,7 +608,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   test("triageStream: triage runs natively as a streaming projection, batch-identical") {
     val docs = Tables.load(spark, sfDir, "documents").limit(60)
     val media = Binary.Jpeg.synthFromDocs(docs)
-    val tmp = java.nio.file.Files.createTempDirectory("triage_stream")
+    val tmp = tempDir("triage_stream")
     media.write.parquet(s"$tmp/in")
     val stream = spark.readStream.schema(media.schema).parquet(s"$tmp/in")
     val got = Streams.runOnce(spark, Streams.triageStream(stream), "triage_stream_spec",
@@ -652,7 +652,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     import graft.lsh.{LshIndex, LshParams}
     val emb = Tables.load(spark, sfDir, "embeddings")
     val p = LshParams(dim = 64, numPerm = 32, numBands = Some(8), rowsPerBand = Some(4))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qstream").toString
+    val tmp = tempDir("graft_qstream").toString
     LshIndex.saveBucketed(LshIndex.build(emb, p), p, "graft_qstream_spec",
       nBuckets = 4, path = Some(s"$tmp/tbl"))
     val queryVecs = emb.filter(col("vec_id") < 6)
@@ -682,7 +682,7 @@ class StreamingMultimodalSpec extends SparkSpec {
   test("searchManyStream: streamed query batches against the at-rest SearchIndex ≡ searchTopKBatch") {
     import graft.text.{SearchIndex, TextAnalysis}
     val docs = Tables.load(spark, sfDir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_search_stream").toString
+    val tmp = tempDir("graft_search_stream").toString
     SearchIndex.save(docs, "graft_search_stream_spec", nBuckets = 4, path = Some(s"$tmp/tbl"))
     val rows = TextAnalysis.BatchQueries
     val input = MemoryStream[(Long, String)](spark, 33)
@@ -713,7 +713,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       "the data was sound because every test in the set passed with a clear margin today"
     val docs = ((0 until 40).map(i => (i.toLong, s"$sent item$i $sent")) ++
       (40 until 80).map(i => (i.toLong, s"### 123 456 ### $i ###"))).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_model").toString
+    val tmp = tempDir("graft_stream_model").toString
     val qm = QualityClassifier.train(docs, QualityClassifier.weakLabels(docs), d = 64)
     QualityClassifier.saveModel(qm, spark, "graft_stream_qm_spec",
       path = Some(s"$tmp/qm"))

@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each at-rest decision behind its one module: the bucketed
   * layout (bucket/sort spec, clustering, the not-bucketed refusal) in
-  * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`.
-  * Comment lines are skipped — prose may name either.
+  * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`,
+  * every lineage cut in `ops/Caching.scala`; and keeps the library
+  * packages off `System.err`. Comment lines are skipped — prose may
+  * name any of them.
   */
 class StructureLintSpec extends AnyFunSuite {
 
@@ -29,14 +31,17 @@ class StructureLintSpec extends AnyFunSuite {
     */
   private def offenders(owner: String, needles: Seq[String]): Seq[String] = {
     val ownerFile = new File(mainRoot, s"graft/$owner").getCanonicalFile
-    sources(mainRoot).filter(_.getCanonicalFile != ownerFile).flatMap { f =>
+    matches(sources(mainRoot).filter(_.getCanonicalFile != ownerFile), needles)
+  }
+
+  private def matches(files: Seq[File], needles: Seq[String]): Seq[String] =
+    files.flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         case (line, i) if !isComment(line) && needles.exists(line.contains) =>
           s"${mainRoot.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
       }.toList finally src.close()
     }
-  }
 
   private def isComment(line: String): Boolean = {
     val t = line.trim
@@ -52,5 +57,19 @@ class StructureLintSpec extends AnyFunSuite {
   test("table-property DDL lives only in ops/TableProps.scala") {
     val hits = offenders("ops/TableProps.scala", Seq("SET TBLPROPERTIES", "SHOW TBLPROPERTIES"))
     if (hits.nonEmpty) fail(s"TBLPROPERTIES DDL outside TableProps:\n${hits.mkString("\n")}")
+  }
+
+  test("every lineage cut goes through ops/Caching.scala") {
+    assert(sources(mainRoot).exists(_.getName == "Caching.scala"))
+    val hits = offenders("ops/Caching.scala", Seq(".localCheckpoint(", ".checkpoint("))
+    if (hits.nonEmpty) fail(s"lineage cut outside Caching:\n${hits.mkString("\n")}")
+  }
+
+  test("library packages never write to System.err") {
+    val libs = Seq("ops", "dedup", "text", "lsh", "ann", "multimodal", "streaming", "events")
+    val dirs = libs.map(p => new File(mainRoot, s"graft/$p"))
+    assert(dirs.forall(_.isDirectory), s"missing library package: ${dirs.filterNot(_.isDirectory)}")
+    val hits = matches(dirs.flatMap(sources), Seq("System.err"))
+    if (hits.nonEmpty) fail(s"System.err in library code:\n${hits.mkString("\n")}")
   }
 }

@@ -310,7 +310,7 @@ class TextKnnSpec extends SparkSpec {
 
   test("hybridSearchTopKOnIndex ≡ the self-contained hybrid, bitwise") {
     import graft.text.{SearchIndex, TextAnalysis}
-    val tmp = java.nio.file.Files.createTempDirectory("hyb_idx").toString
+    val tmp = tempDir("hyb_idx").toString
     SearchIndex.save(docs, "graft_hybrid_spec_idx", path = Some(s"$tmp/t"))
     val idx = SearchIndex.load(spark, "graft_hybrid_spec_idx")
     val fresh = TextAnalysis.hybridSearchTopK(docs).collect().map(_.toString)
@@ -501,7 +501,7 @@ class TextKnnSpec extends SparkSpec {
   test("Pq saveIndex/loadIndex: codebooks+codes round-trip; code-served results identical") {
     import graft.ann.Pq
     val model = Pq.train(emb, m = 8, k = 16)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val tmp = tempDir("graft_pq").toString
     Pq.saveIndex(model, emb, "graft_pq_spec", path = Some(s"$tmp/tbl"))
     val (loaded, codes) = Pq.loadIndex(spark, "graft_pq_spec")
     assert(loaded.m === model.m && loaded.k === model.k && loaded.dSub === model.dSub)
@@ -573,7 +573,7 @@ class TextKnnSpec extends SparkSpec {
     val model = Pq.train(emb, m = 8, k = 16)
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 5)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val tmp = tempDir("graft_ivfpq").toString
     Pq.saveCellIndex(model, emb, cents, "graft_ivfpq_spec", path = Some(s"$tmp/tbl"))
     val (loaded, cells, loadedCents) = Pq.loadCellIndex(spark, "graft_ivfpq_spec")
     assert(loaded.m === model.m && loaded.k === model.k && loaded.dSub === model.dSub)
@@ -612,7 +612,7 @@ class TextKnnSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 5)
     val (half, rest) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 === 1))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_add").toString
+    val tmp = tempDir("graft_ivfpq_add").toString
     // a RESIDUAL index: the append must pick the flag up from the table
     Pq.saveCellIndex(model, half, cents, "graft_ivfpq_add_spec",
       path = Some(s"$tmp/tbl"), residual = true, nProbe = 2)
@@ -648,7 +648,7 @@ class TextKnnSpec extends SparkSpec {
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 5)
     val thirds = (0 to 2).map(i => emb.filter(col("vec_id") % 3 === i))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_cpt").toString
+    val tmp = tempDir("graft_ivfpq_cpt").toString
     Pq.saveCellIndex(model, thirds(0), cents, "graft_ivfpq_cpt_spec",
       path = Some(s"$tmp/tbl"), residual = true, nProbe = 2)
     Pq.addToCellIndex(spark, thirds(1), "graft_ivfpq_cpt_spec")
@@ -750,7 +750,7 @@ class TextKnnSpec extends SparkSpec {
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 5)
     val model = Pq.trainResidual(emb, cents, m = 8, k = 16)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_res").toString
+    val tmp = tempDir("graft_ivfpq_res").toString
     Pq.saveCellIndex(model, emb, cents, "graft_ivfpq_res_spec",
       path = Some(s"$tmp/tbl"), residual = true, nProbe = 2)
     val (resFlag, idxProbes) = Pq.cellIndexParams(spark, "graft_ivfpq_res_spec")
@@ -819,7 +819,7 @@ class TextKnnSpec extends SparkSpec {
     import graft.ann.Ivf
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 10)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val tmp = tempDir("graft_ivf_idx").toString
     Ivf.saveIndex(emb, cents, "graft_ivf_idx_spec", path = Some(s"$tmp/tbl"))
     val (cells, loadedCents) = Ivf.loadIndex(spark, "graft_ivf_idx_spec")
     val served = Ivf.probeTopKOnIndex(cells, loadedCents, queries, 2, 5)
@@ -848,7 +848,7 @@ class TextKnnSpec extends SparkSpec {
     import graft.ann.Ivf
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 10)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_flt").toString
+    val tmp = tempDir("graft_ivf_flt").toString
     Ivf.saveIndex(emb, cents, "graft_ivf_flt_spec", path = Some(s"$tmp/tbl"),
       metaCols = Seq("label"))
     val (cells, loadedCents) = Ivf.loadIndex(spark, "graft_ivf_flt_spec")
@@ -882,7 +882,7 @@ class TextKnnSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val (half, rest) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 === 1))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_add").toString
+    val tmp = tempDir("graft_ivf_add").toString
     Ivf.saveIndex(half, cents, "graft_ivf_add_spec", path = Some(s"$tmp/tbl"))
     Ivf.addToIndex(spark, rest, "graft_ivf_add_spec")
     val (cells, loadedCents) = Ivf.loadIndex(spark, "graft_ivf_add_spec")
@@ -912,7 +912,7 @@ class TextKnnSpec extends SparkSpec {
     val cents = emb.filter(col("vec_id") < 8)
     val queries = emb.filter(col("vec_id") < 10)
     val thirds = (0 to 2).map(i => emb.filter(col("vec_id") % 3 === i))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_cpt").toString
+    val tmp = tempDir("graft_ivf_cpt").toString
     Ivf.saveIndex(thirds(0), cents, "graft_ivf_cpt_spec", path = Some(s"$tmp/tbl"))
     Ivf.addToIndex(spark, thirds(1), "graft_ivf_cpt_spec")
     Ivf.addToIndex(spark, thirds(2), "graft_ivf_cpt_spec")
@@ -1176,7 +1176,7 @@ class TextKnnSpec extends SparkSpec {
     import graft.ops.Compaction
     val half1 = docs.filter(col("doc_id") % 2 === 0)
     val half2 = docs.filter(col("doc_id") % 2 === 1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_search_seg").toString
+    val tmp = tempDir("graft_search_seg").toString
     SearchIndex.save(half1, "graft_search_seg_spec", path = Some(s"$tmp/a"))
     SearchIndex.add(half2, "graft_search_seg_spec")
     // reference: a from-scratch index over the full corpus
@@ -1204,7 +1204,7 @@ class TextKnnSpec extends SparkSpec {
   }
 
   test("positional index at rest: phrase serving ≡ fresh bitwise, no corpus scan in the plan") {
-    val tmp = java.nio.file.Files.createTempDirectory("phrase_idx").toString
+    val tmp = tempDir("phrase_idx").toString
     graft.text.TextAnalysis.savePositionalIndex(docs, "graft_phrase_idx_spec",
       path = Some(s"$tmp/tbl"))
     val phrases = graft.text.TextAnalysis.cannedPhrases(docs)
@@ -1250,7 +1250,7 @@ class TextKnnSpec extends SparkSpec {
   }
 
   test("LM at rest: persisted scoring ≡ in-query fit bitwise; LM-side joins exchange-free; cross-corpus") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    val tmp = tempDir("graft_lm").toString
     TextAnalysis.saveLm(docs, "graft_lm_spec", path = Some(s"$tmp/tbl"))
     // scoring the training corpus from the loaded tables is bitwise
     // identical to the in-query fit (same joins, same positional fold)
@@ -1278,7 +1278,7 @@ class TextKnnSpec extends SparkSpec {
 
   test("SearchIndex: persisted round trip serves bitwise-equal results with zero corpus-side work") {
     import graft.text.SearchIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_search_idx").toString
+    val tmp = tempDir("graft_search_idx").toString
     SearchIndex.save(docs, "graft_search_idx_spec", path = Some(s"$tmp/tbl"))
     val idx = SearchIndex.load(spark, "graft_search_idx_spec")
     // stats come from TBLPROPERTIES, not a corpus re-aggregation — and

@@ -36,7 +36,7 @@ class TopicsSpec extends SparkSpec {
     val train = (Seq((0L, a), (1L, b)) ++
       (2L until 12L).map(i => (i, if (i % 2 == 0) a else b)))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("topics_rt").toString
+    val tmp = tempDir("topics_rt").toString
     Topics.saveTopics(train, "graft_topics_spec", nCentroids = 2, topTerms = 3,
       path = Some(s"$tmp/tbl"))
     // label table round trip ≡ the in-query topics output bitwise

@@ -217,7 +217,7 @@ class WdsTarSpec extends SparkSpec {
 
   test("binaryShards refuses a >2 GiB shard up front (one file = one JVM byte array)") {
     import graft.sources.Sources
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shards").toFile
+    val tmp = tempDir("graft_shards").toFile
     val big = new java.io.File(tmp, "big.tar")
     try {
       // sparse file: 3 GiB of metadata, zero blocks — the refusal
