@@ -1687,8 +1687,9 @@ object SparkEntry {
       val e = t(s, dir, "embeddings")
       graft.ann.Quantize.quantizedTopK(e, e.filter(col("vec_id") < 10), k = 5, prefilterK = 20)
     }),
-    // rows-only: MLlib KMeans codebooks are not SQL-reproducible
-    // (declared); planted-copy + recall specs in TextKnnSpec
+    // rows-only: the fixed-point Lloyd codebooks are partition-exact,
+    // but no SQL oracle mirrors the rounds yet; planted-copy, recall
+    // and partition-invariance specs in TextKnnSpec
     "ann_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       // codebooks train on train()'s default deterministic 10% sample —
@@ -1698,7 +1699,7 @@ object SparkEntry {
       val model = graft.ann.Pq.train(e, m = 8, k = 16)
       graft.ann.Pq.pqTopK(e, e.filter(col("vec_id") < 10), model, k = 5, prefilterK = 20)
     }),
-    // rows-only like ann_pq (MLlib codebooks); IVFADC — the full
+    // rows-only like ann_pq (no oracle for the Lloyd rounds); IVFADC — the full
     // persisted round trip: codebook + (vec_id, cell, codes) bucketed
     // by cell + centroids saved, reloaded, and served with ADC scored
     // ONLY inside probed cells (equi-join on cell, never a codes ×
@@ -1731,7 +1732,7 @@ object SparkEntry {
       graft.ann.Pq.topKOnSavedCellIndex(s, "graft_ivfpq_res_rt", e,
         e.filter(col("vec_id") < 10), k = 5, prefilterK = 20)
     }),
-    // rows-only like ann_pq (MLlib codebooks + float PCA rotation);
+    // rows-only like ann_pq (Lloyd codebooks + float PCA rotation);
     // OPQ (Ge et al. 2013, parametric): an orthogonal eigen-allocation
     // rotation fitted in one GramMoments pass precedes codebook
     // training, rides at rest in <table>_rot, and queries rotate with

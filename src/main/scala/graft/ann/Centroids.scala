@@ -24,6 +24,13 @@ object Centroids {
     * nearest-centroid classification.
     */
   def labelCentroids(emb: DataFrame): DataFrame =
+    labelMeans(emb).orderBy(col("label"), col("i"))
+
+  /** [[labelCentroids]] unordered — the aggregate alone, for callers
+    * that collect it (the PQ codebook fit runs it once per Lloyd round,
+    * where a global sort would add a job).
+    */
+  private[ann] def labelMeans(emb: DataFrame): DataFrame =
     emb
       .select(col("label").cast("long").as("label"),
         posexplode(col("embedding")).as(Seq("i", "x")))
@@ -33,7 +40,6 @@ object Centroids {
       .agg(sum(col("fx")).as("sum_fx"), count(lit(1)).as("n"))
       .select(col("label"), col("i"), col("sum_fx"), col("n"),
         (col("sum_fx").cast("double") / (col("n") * Scale).cast("double")).as("centroid"))
-      .orderBy(col("label"), col("i"))
 
   /** Per-label embedding OUTLIERS — the `k` vectors FARTHEST from
     * their label's centroid: mislabeled examples, embedding-model

@@ -180,22 +180,14 @@ object Ivf {
     val cells = assign(corpus, centroids)
       .join(corpus.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*),
         Seq("vec_id"))
-    // the two table writes are independent — submit them concurrently
-    // (the SearchIndex.save / Pq.train submission pattern; the tiny
-    // centroid write otherwise serializes a full job latency behind
-    // the cells write)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fCells = Future(
-      graft.ops.Compaction.saveBucketed(cells, table, nBuckets, path, "cell"))
-    val fCents = Future {
-      val wc = centroids.select(col("vec_id"), col("embedding"))
-        .write.mode("overwrite").format("parquet")
-      path.foreach(loc => wc.option("path", s"${loc}_centroids"))
-      wc.saveAsTable(s"${table}_centroids")
-    }
-    Await.result(fCells, Duration.Inf); Await.result(fCents, Duration.Inf)
+    graft.ops.Concurrency.all(
+      () => graft.ops.Compaction.saveBucketed(cells, table, nBuckets, path, "cell"),
+      () => {
+        val wc = centroids.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").format("parquet")
+        path.foreach(loc => wc.option("path", s"${loc}_centroids"))
+        wc.saveAsTable(s"${table}_centroids")
+      })
   }
 
   /** Restore (cells, centroids) from a [[saveIndex]] table pair. */

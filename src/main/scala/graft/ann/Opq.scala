@@ -30,8 +30,9 @@ import graft.GraftFunctions
   *     literals (the [[Pca.projectCol]] idiom — no UDF, no broadcast,
   *     no shuffle), then the standard [[Pq]] machinery takes over.
   *
-  * Rows-only at the driver gate like the rest of the MLlib-codebook
-  * family; orthonormality / inner-product-preservation / allocation /
+  * Rows-only at the driver gate: the PCA rotation is a float fit,
+  * and no SQL oracle mirrors the [[Pq]] Lloyd rounds yet;
+  * orthonormality / inner-product-preservation / allocation /
   * recall-vs-raw-PQ properties in OpqSpec.
   */
 object Opq {
@@ -104,14 +105,14 @@ object Opq {
     * corpus sample discipline via `sampleFrac` (rotation statistics
     * stabilize long before the full corpus is seen).
     */
-  def train(emb: DataFrame, m: Int = 8, k: Int = 16, seed: Long = 42L,
+  def train(emb: DataFrame, m: Int = 8, k: Int = 16,
       maxIter: Int = 10, sampleFrac: Double = 0.1): OpqModel = {
     val fitSrc =
       if (sampleFrac >= 1.0) emb
       else emb.filter(col("vec_id") % math.round(1.0 / sampleFrac) === 0)
     val rotation = fitRotation(fitSrc, m)
     OpqModel(rotation.length, rotation,
-      Pq.train(rotate(emb, rotation), m, k, seed, maxIter, sampleFrac))
+      Pq.train(rotate(emb, rotation), m, k, maxIter, sampleFrac))
   }
 
   /** Exhaustive OPQ-ADC top-k (the [[Pq.pqTopK]] twin): rotate corpus

@@ -1,7 +1,6 @@
 package graft.ann
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions.{cosine_sim, l2_normalize, top_k_by_score}
@@ -9,24 +8,24 @@ import graft.GraftFunctions.{cosine_sim, l2_normalize, top_k_by_score}
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the classic middle ground
   * of the compression ladder: split the (L2-normalized) vector into
-  * `m` subspaces, learn a `k`-centroid codebook per subspace (seeded
-  * MLlib KMeans — deterministic models), store each vector as `m`
+  * `m` subspaces, learn a `k`-centroid codebook per subspace (one
+  * fixed-point Lloyd loop for all of them), store each vector as `m`
   * small codes (m·log₂k bits; m=8, k=16 → 4 bytes per 64-dim vector,
   * a 64× shrink), and serve cosine ANN by Asymmetric Distance
   * Computation: the query stays full-precision, each candidate's
   * score is `Σ_s dot(q_s, codebook_s[code_s])` — m table lookups per
   * candidate, no vector arithmetic at all in the scan.
   *
-  * Scale shape: training is m seeded KMeans fits (offline, corpus
-  * sample is fine in production); encoding is a broadcast codebook
-  * join + per-(vector, subspace) `min(struct)` argmin — the map-side
+  * Scale shape: training is one aggregate per Lloyd round for all m
+  * subspaces (offline, on a corpus sample); encoding explodes the
+  * plan-literal codebook + per-(vector, subspace) `min(struct)` argmin — the map-side
   * partial-aggregation idiom shared with [[Ivf.assign]], never a
   * window; serving scans only the 4-byte code arrays and reads the
   * per-query lookup table from a broadcast. Like [[Quantize]], exact
   * rerank touches prefilterK × queries full vectors only.
   *
-  * Rows-only at the driver gate (MLlib centroids are not
-  * SQL-reproducible); recall + planted-copy property specs.
+  * Rows-only at the driver gate: no SQL oracle mirrors the Lloyd
+  * rounds yet. Recall, planted-copy and partition-invariance specs.
   */
 object Pq {
 
@@ -45,12 +44,12 @@ object Pq {
     }
   }
 
-  /** Fit one seeded KMeans per subspace over the L2-normalized
-    * corpus. `m` must divide the dimension. `maxIter` is capped low by
-    * default: PQ codebooks are a quantization grid, not a clustering
-    * result — centroid movement past the first few Lloyd iterations
-    * changes ADC recall marginally while costing a full corpus pass
-    * per iteration per subspace.
+  /** Fit the per-subspace codebooks ([[fitCodebooks]]) over the
+    * L2-normalized corpus. `m` must divide the dimension. `maxIter` is
+    * capped low by default: PQ codebooks are a quantization grid, not a
+    * clustering result — centroid movement past the first few Lloyd
+    * rounds changes ADC recall marginally while costing a sample pass
+    * per round.
     *
     * `sampleFrac` (default 0.1) trains on a DETERMINISTIC corpus
     * sample (`vec_id % round(1/frac) == 0`) — the standard PQ
@@ -60,13 +59,13 @@ object Pq {
     * TextKnnSpec). Pass 1.0 for the full-corpus fit. The sample must
     * still hold ≥ k vectors (refused loudly below otherwise).
     */
-  def train(emb: DataFrame, m: Int = 8, k: Int = 16, seed: Long = 42L,
+  def train(emb: DataFrame, m: Int = 8, k: Int = 16,
       maxIter: Int = 10, sampleFrac: Double = 0.1): PqModel =
     fitCodebooks(
       sample(emb, sampleFrac, k)
-        .select(l2_normalize(col("embedding")).as("nv"))
+        .select(col("vec_id"), l2_normalize(col("embedding")).as("nv"))
         .filter(col("nv").isNotNull),
-      m, k, seed, maxIter, sampleFrac)
+      m, k, maxIter, sampleFrac)
 
   /** [[train]] on CELL RESIDUALS (x̂ − ĉ, both unit-normalized): the
     * codebook for [[encodeInCells]]`(residual = true)` — Jégou et al.
@@ -80,13 +79,12 @@ object Pq {
     * similarity is added back to the ADC score.
     */
   def trainResidual(emb: DataFrame, centroids: DataFrame, m: Int = 8,
-      k: Int = 16, seed: Long = 42L, maxIter: Int = 10,
-      sampleFrac: Double = 0.1): PqModel = {
+      k: Int = 16, maxIter: Int = 10, sampleFrac: Double = 0.1): PqModel = {
     val sampled = sample(emb, sampleFrac, k)
     fitCodebooks(
       residualVectors(Ivf.assign(sampled, centroids), sampled, centroids)
-        .select(col("nv")),
-      m, k, seed, maxIter, sampleFrac)
+        .select(col("vec_id"), col("nv")),
+      m, k, maxIter, sampleFrac)
   }
 
   /** Per-(vector, cell) unit-sphere residuals `nv = x̂ − ĉ` over an
@@ -122,73 +120,59 @@ object Pq {
     else emb.filter(col("vec_id") % math.round(1.0 / sampleFrac) === 0)
   }
 
-  /** The shared fit: one seeded KMeans per subspace over a prepared
-    * `nv` (array<double>) training frame — unit vectors for [[train]],
-    * cell residuals for [[trainResidual]].
+  /** The one codebook fit: Lloyd over all m subspaces at once on a
+    * (vec_id, nv) frame — unit vectors ([[train]]) or cell residuals
+    * ([[trainResidual]]). Init: the k sample rows first in
+    * `xxhash64(vec_id)` order (ties by vec_id). E-step: [[nearestCodes]],
+    * encode's own argmin. M-step: [[Centroids]]' int64 fixed-point mean
+    * per ADC slot `s·k + code`; an empty code keeps its centroid. Stops
+    * when a round leaves the codebook unchanged, or after `maxIter`.
+    * Every step is order-independent, so the codebook is bit-identical
+    * under any partitioning of the sample. The state between rounds is
+    * the codebook (m·k·dSub floats on the driver), so this is a plain
+    * driver loop, not [[graft.ops.Caching.iterate]], which exists to cut
+    * DataFrame state.
     */
-  private def fitCodebooks(vecs: DataFrame, m: Int, k: Int, seed: Long,
+  private def fitCodebooks(vecs: DataFrame, m: Int, k: Int,
       maxIter: Int, sampleFrac: Double): PqModel = {
-    // codes are stored as tinyint and ADC tables are indexed s·k+code —
-    // both silently corrupt past these bounds, so fail loudly here
-    require(k >= 2 && k <= 127, s"k=$k must be in [2, 127] (codes are tinyint)")
-    val unit = vecs
+    // hash-partitioned by vec_id, so each round's per-(vec_id, s)
+    // argmin aggregates in place and only the M-step shuffles
+    val unit = vecs.repartition(col("vec_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the deterministic sample is `vec_id % round(1/sampleFrac) == 0` —
-    // a sparse or offset vec_id space (e.g. a pre-filtered corpus where
-    // no id hits the modulus) can make it EMPTY, which would otherwise
-    // surface as a bare NoSuchElementException from the dimension probe
-    // below instead of the documented loud refusal
-    val nSample = unit.count()
-    require(nSample >= k,
-      s"PQ training sample holds $nSample vectors (need ≥ k=$k): sampleFrac=$sampleFrac " +
-        "samples rows with vec_id % round(1/sampleFrac) == 0 — raise sampleFrac or " +
-        "re-densify vec_id if the id space is sparse")
-    val d = unit.select(size(col("nv"))).head().getInt(0)
-    require(d % m == 0, s"m=$m must divide dim=$d")
-    val dSub = d / m
-    // compact the (bounded, sampled) training frame so each KMeans job
-    // is a handful of tasks, not one per input partition: every Lloyd
-    // iteration of every subspace fit is a full job over this frame,
-    // so at `p` partitions the fit pays m·maxIter·p task launches on
-    // data that is tiny BY DESIGN (it is the sample). Scale-adaptive —
-    // sized from the measured sample count (~64k vectors/partition),
-    // never widened, shuffle-free (coalesce over the cached blocks);
-    // a 10M-vector production sample still trains ~160-way parallel.
-    val fitParts = math.max(1L, math.min(unit.rdd.getNumPartitions.toLong,
-      nSample / 65536L + 1L)).toInt
-    val fitFrame =
-      if (fitParts < unit.rdd.getNumPartitions) unit.coalesce(fitParts)
-      else unit
-    // the m subspace fits are independent — submit them CONCURRENTLY
-    // (the scheduler interleaves their jobs across cores; sequential
-    // fits measured 6.9 s warm at sf0.1 vs ~2 s concurrent, pure
-    // per-job overhead × m × iterations). Seeded random init instead
-    // of kmeans||: the parallel init spends ~5 extra jobs per subspace
-    // optimizing a clustering objective a quantization grid doesn't
-    // need.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fits = (0 until m).map { s =>
-      Future {
-        val sub = fitFrame.select(org.apache.spark.ml.functions.array_to_vector(
-          slice(col("nv"), s * dSub + 1, dSub)).as("features"))
-        new KMeans().setK(k).setSeed(seed + s).setMaxIter(maxIter)
-          .setInitMode("random").setFeaturesCol("features")
-          .fit(sub).clusterCenters.map(_.toArray.map(_.toFloat))
+    try {
+      val init = unit.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
+        .select(col("nv")).collect().map(_.getSeq[Double](0).toArray)
+      // a sparse or offset vec_id space can leave the modulus sample
+      // short or empty, and a short codebook would silently mis-index
+      // every ADC slot (tab[s·k + code]) — refuse instead
+      require(init.length >= k,
+        s"PQ training sample holds ${init.length} vectors (need ≥ k=$k): " +
+          s"sampleFrac=$sampleFrac samples rows with vec_id % round(1/sampleFrac) == 0 — " +
+          "raise sampleFrac or re-densify vec_id if the id space is sparse")
+      val d = init.head.length
+      require(d % m == 0, s"m=$m must divide dim=$d")
+      val dSub = d / m
+      var model = PqModel(m, k, dSub, Array.tabulate(m, k) { (s, c) =>
+        init(c).slice(s * dSub, (s + 1) * dSub).map(_.toFloat)
+      })
+      var (round, moved) = (0, true)
+      while (moved && round < maxIter) {
+        val next = model.codebooks.map(_.map(_.clone))
+        Centroids.labelMeans(nearestCodes(unit, model, Seq("vec_id"), col("sub"))
+            .select((col("s") * k + col("a.code")).as("label"),
+              col("a.sub").as("embedding")))
+          .collect().foreach { r =>
+            val slot = r.getAs[Long]("label").toInt
+            next(slot / k)(slot % k)(r.getAs[Long]("i").toInt) =
+              r.getAs[Double]("centroid").toFloat
+          }
+        moved = next.indices.exists(s => next(s).indices.exists(c =>
+          !java.util.Arrays.equals(next(s)(c), model.codebooks(s)(c))))
+        model = PqModel(m, k, dSub, next)
+        round += 1
       }
-    }
-    val codebooks = fits.map(Await.result(_, Duration.Inf)).toArray
-    unit.unpersist(false)
-    // a training sample smaller than k makes KMeans return fewer
-    // centroids than k; with PqModel.k trusted by the ADC slot
-    // arithmetic (tab[s·k + code]), a short codebook would silently
-    // mis-index EVERY score — refuse instead
-    codebooks.zipWithIndex.foreach { case (cb, s) =>
-      require(cb.length == k,
-        s"subspace $s fitted ${cb.length} centroids (< k=$k) — train on ≥ k vectors")
-    }
-    PqModel(m, k, dSub, codebooks)
+      model
+    } finally unit.unpersist(false)
   }
 
   /** Persist the trained codebooks as a catalog table (the fifth
@@ -224,17 +208,17 @@ object Pq {
   }
 
   /** Squared-L2 between two float arrays — built-in HOF (codegen). */
-  private def l2sq(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def l2sq(a: Column, b: Column) =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
   /** Dot product of two float arrays — built-in HOF (codegen). */
-  private def dotc(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def dotc(a: Column, b: Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   /** Encode each vector as its per-subspace nearest-codebook codes:
-    * (vec_id, codes array<tinyint>, length m). Broadcast codebook
-    * cross join → per-(vector, subspace) `min(struct(dist, code))`
-    * argmin partial aggregate → positional reassembly.
+    * (vec_id, codes array<tinyint>, length m). [[nearestCodes]]'s
+    * per-(vector, subspace) `min(struct(dist, code))` argmin partial
+    * aggregate → positional reassembly.
     */
   def encode(emb: DataFrame, model: PqModel): DataFrame =
     encodeNv(
@@ -247,24 +231,37 @@ object Pq {
     * `(vec_id, cell)` for per-cell residuals (residual
     * [[encodeInCells]], where a multi-assigned vector has a DIFFERENT
     * residual — and so different codes — in each of its cells). Same
-    * shape either way: broadcast codebook join → per-(key, subspace)
-    * `min(struct(dist, code))` argmin partial aggregate → positional
-    * reassembly, never a window.
+    * shape either way: [[nearestCodes]] → positional reassembly, never
+    * a window.
     */
   private def encodeNv(vecs: DataFrame, model: PqModel,
       keyCols: Seq[String]): DataFrame = {
-    val cb = broadcast(model.frame(vecs.sparkSession))
     val keys = keyCols.map(col)
+    nearestCodes(vecs, model, keyCols)
+      .groupBy(keys: _*)
+      .agg(sort_array(collect_list(struct(col("s"), col("a.code").as("code")))).as("cs"))
+      .select(keys :+ expr("transform(cs, x -> cast(x.code as tinyint))").as("codes"): _*)
+  }
+
+  /** The one nearest-code argmin, behind [[encode]] and the codebook
+    * fit: each (key, subspace) row explodes its k centroids from the
+    * plan-literal codebook into a `min(struct(dist, code, carry…))`
+    * partial aggregate per (key, subspace); a distance tie goes to the
+    * lower code. `carry` columns ride in `a` next to the winning code.
+    */
+  private def nearestCodes(vecs: DataFrame, model: PqModel,
+      keyCols: Seq[String], carry: Column*): DataFrame = {
+    val keys = keyCols.map(col)
+    val codebooks = typedlit(model.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     vecs
       .select(keys :+ posexplode(expr(
         s"transform(sequence(0, ${model.m - 1}), s -> slice(nv, s * ${model.dSub} + 1, ${model.dSub}))"))
         .as(Seq("s", "sub")): _*)
-      .join(cb, Seq("s"))
+      .select(keys ++ Seq(col("s"), col("sub"), posexplode(element_at(codebooks, col("s") + 1))
+        .as(Seq("code", "centroid"))): _*)
       .groupBy(keys :+ col("s"): _*)
-      .agg(min(struct(l2sq(col("sub"), col("centroid")).as("dist"), col("code"))).as("a"))
-      .groupBy(keys: _*)
-      .agg(sort_array(collect_list(struct(col("s"), col("a.code").as("code")))).as("cs"))
-      .select(keys :+ expr("transform(cs, x -> cast(x.code as tinyint))").as("codes"): _*)
+      .agg(min(struct(Seq(l2sq(col("sub"), col("centroid")).as("dist"), col("code")) ++
+        carry: _*)).as("a"))
   }
 
   /** ADC top-k serving over FRESHLY ENCODED corpus codes — the
@@ -493,35 +490,25 @@ object Pq {
   def saveCellIndex(model: PqModel, corpus: DataFrame, centroids: DataFrame,
       table: String, nBuckets: Int = 32, path: Option[String] = None,
       residual: Boolean = false, nProbe: Int = 1): Unit = {
-    // the three tables are independent — submit the writes as
-    // concurrent jobs (the SearchIndex.save / train() submission
-    // pattern) so the tiny codebook/centroid writes ride along with
-    // the corpus-sized cells encode instead of serializing after it
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val spark = corpus.sparkSession
-    val fModel = Future(save(model, spark, table, path))
-    val fCells = Future {
-      graft.ops.Compaction.saveBucketed(
-        encodeInCells(corpus, model, centroids, residual = residual, nProbe = nProbe),
-        s"${table}_cells", nBuckets, path.map(loc => s"${loc}_cells"), "cell")
-      // the encoding flags ride on the cells table: a residual index
-      // served without the bias term (or vice versa) scores silently
-      // wrong, so the flag must live WITH the index, not in caller lore
-      graft.ops.TableProps.set(spark, s"${table}_cells",
-        "graft.pq.cells_params",
-        s"""{"residual":${if (residual) 1 else 0},"n_probe":$nProbe}""")
-    }
-    val fCents = Future {
-      val wct = centroids.select(col("vec_id"), col("embedding"))
-        .write.mode("overwrite").format("parquet")
-      path.foreach(loc => wct.option("path", s"${loc}_centroids"))
-      wct.saveAsTable(s"${table}_centroids")
-    }
-    Await.result(fModel, Duration.Inf)
-    Await.result(fCells, Duration.Inf)
-    Await.result(fCents, Duration.Inf)
+    graft.ops.Concurrency.all(() => save(model, spark, table, path),
+      () => {
+        graft.ops.Compaction.saveBucketed(
+          encodeInCells(corpus, model, centroids, residual = residual, nProbe = nProbe),
+          s"${table}_cells", nBuckets, path.map(loc => s"${loc}_cells"), "cell")
+        // the encoding flags ride on the cells table: a residual index
+        // served without the bias term (or vice versa) scores silently
+        // wrong, so the flag must live WITH the index, not in caller lore
+        graft.ops.TableProps.set(spark, s"${table}_cells",
+          "graft.pq.cells_params",
+          s"""{"residual":${if (residual) 1 else 0},"n_probe":$nProbe}""")
+      },
+      () => {
+        val wct = centroids.select(col("vec_id"), col("embedding"))
+          .write.mode("overwrite").format("parquet")
+        path.foreach(loc => wct.option("path", s"${loc}_centroids"))
+        wct.saveAsTable(s"${table}_centroids")
+      })
   }
 
   /** Restore (model, cells, centroids) from a [[saveCellIndex]] table

@@ -4,10 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration._
-import scala.concurrent.ExecutionContext.Implicits.global
-
 import graft.GraftFunctions.{fingerprintOfTokens, hex64, tokens}
 import graft.ops.Caching
 import graft.ops.Caching.{materialized, releaseCheckpoint}
@@ -561,18 +557,15 @@ object Dedup {
   /** The signature-store writer behind [[saveSignatures]] and
     * [[addSignatures]]: `write(df, suffix, keys)` stores `df` as table
     * `table + suffix` keyed on `keys`. One cached tokenize pass feeds
-    * two CONCURRENT writes (the Pq.train pattern) with no warm-up
-    * count: block-level cache locks build each partition once (the
-    * SearchIndex.save precedent).
+    * two concurrent writes with no warm-up count.
     */
   private def writeSignatures(docs: DataFrame, table: String,
       write: (DataFrame, String, Seq[String]) => Unit): Unit = {
     val tok = withToks(docs).select(col("doc_id"), col("toks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    try Seq(
-        Future(write(fingerprintsOf(tok), "_fp", Seq("fingerprint"))),
-        Future(write(bandsOf(shingleSet(tok)), "", Seq("band", "band_hash"))))
-      .foreach(Await.result(_, Duration.Inf))
+    try graft.ops.Concurrency.all(
+        () => write(fingerprintsOf(tok), "_fp", Seq("fingerprint")),
+        () => write(bandsOf(shingleSet(tok)), "", Seq("band", "band_hash")))
     finally tok.unpersist(false)
   }
 

@@ -80,12 +80,8 @@ object SearchIndex {
       path: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     // ONE cached tokenize pass feeds the build (withToks trusts the
-    // precomputed column), and the three independent jobs — postings
-    // write, doclen write, stats aggregate — run CONCURRENTLY, the same
-    // submission pattern as Pq.train's subspace fits
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // precomputed column), and the three independent jobs — stats
+    // aggregate, postings write, doclen write — run concurrently
     val tokD = TextAnalysis.withToks(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // no separate warm-up count: the CacheManager's block-level locks
@@ -96,13 +92,10 @@ object SearchIndex {
     // `add` still re-derives from the table, where it is a correctness
     // property.
     val st = withBuild(tokD, maxDf) { ix =>
-      val fIdx = Future(
-        graft.ops.Compaction.saveBucketed(ix.postings, table, nBuckets, path, "token"))
-      val fDl = Future(graft.ops.Compaction.saveBucketed(ix.docLens,
-        s"${table}_doclen", nBuckets, path.map(loc => s"${loc}_doclen"), "doc_id"))
-      val fStats = Future(ix.stats.head())
-      Await.result(fIdx, Duration.Inf); Await.result(fDl, Duration.Inf)
-      Await.result(fStats, Duration.Inf)
+      graft.ops.Concurrency.all(() => ix.stats.head(),
+        () => graft.ops.Compaction.saveBucketed(ix.postings, table, nBuckets, path, "token"),
+        () => graft.ops.Compaction.saveBucketed(ix.docLens,
+          s"${table}_doclen", nBuckets, path.map(loc => s"${loc}_doclen"), "doc_id"))
     }
     tokD.unpersist(false)
     graft.ops.TableProps.set(spark, table, "graft.search.stats",

@@ -148,7 +148,7 @@ class BpeSpec extends SparkSpec {
 
   test("bpe: save/load round trip preserves the merge list and the counts query") {
     val d = spark.read.parquet(s"$sfDir/documents.parquet").limit(60)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_spec").toString
+    val tmp = tempDir("graft_bpe_spec").toString
     val model = Bpe.train(d, numMerges = 16)
     Bpe.saveModel(model, spark, "graft_bpe_spec_model", path = Some(s"$tmp/m"))
     val loaded = Bpe.loadModel(spark, "graft_bpe_spec_model")

@@ -451,7 +451,7 @@ class CurationSpec extends SparkSpec {
 
   test("quota ledger: batch admissions respect earlier batches' slots; full domains admit none") {
     import graft.ops.Curation
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ledger_spec").toString
+    val tmp = tempDir("graft_ledger_spec").toString
     Curation.initQuotaLedger(spark, "graft_ledger_spec_rt", Some(s"$tmp/tbl"))
     // batch 1: domain A has 3 candidates for quota 2 → 2 admitted
     val b1 = Seq((1L, "a.com"), (2L, "a.com"), (3L, "a.com"), (10L, "b.org"))

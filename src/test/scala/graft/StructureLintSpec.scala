@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps each at-rest decision behind its one module: the bucketed
   * layout (bucket/sort spec, clustering, the not-bucketed refusal) in
   * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`,
-  * every lineage cut in `ops/Caching.scala`; and keeps the library
-  * packages off `System.err`. Comment lines are skipped — prose may
-  * name any of them.
+  * every lineage cut in `ops/Caching.scala`; keeps MLlib clustering in
+  * its one comparator (`ann/MlLsh.scala`) and concurrent job submission
+  * in `ops/Concurrency.scala`; and keeps the library packages off
+  * `System.err`. Comment lines are skipped — prose may name any of
+  * them.
   */
 class StructureLintSpec extends AnyFunSuite {
 
@@ -63,6 +65,18 @@ class StructureLintSpec extends AnyFunSuite {
     assert(sources(mainRoot).exists(_.getName == "Caching.scala"))
     val hits = offenders("ops/Caching.scala", Seq(".localCheckpoint(", ".checkpoint("))
     if (hits.nonEmpty) fail(s"lineage cut outside Caching:\n${hits.mkString("\n")}")
+  }
+
+  test("MLlib clustering is used only by ann/MlLsh.scala") {
+    assert(sources(mainRoot).exists(_.getName == "MlLsh.scala"))
+    val hits = offenders("ann/MlLsh.scala", Seq("org.apache.spark.ml.clustering"))
+    if (hits.nonEmpty) fail(s"MLlib clustering outside MlLsh:\n${hits.mkString("\n")}")
+  }
+
+  test("Futures are submitted only by ops/Concurrency.scala") {
+    assert(sources(mainRoot).exists(_.getName == "Concurrency.scala"))
+    val hits = offenders("ops/Concurrency.scala", Seq("Future"))
+    if (hits.nonEmpty) fail(s"Future outside Concurrency:\n${hits.mkString("\n")}")
   }
 
   test("library packages never write to System.err") {

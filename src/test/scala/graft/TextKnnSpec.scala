@@ -775,6 +775,49 @@ class TextKnnSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_ivfpq_res_spec_centroids")
   }
 
+  test("Pq codebooks are bit-identical across input partitionings and row order") {
+    import graft.ann.Pq
+    val cents = emb.filter(col("vec_id") < 8)
+    def bits(model: Pq.PqModel): Seq[Int] =
+      model.codebooks.flatten.flatten.map(java.lang.Float.floatToIntBits).toSeq
+    val layouts = Seq(emb.coalesce(1), emb.repartition(4), emb.repartition(4).orderBy(rand(7)))
+    val raw = layouts.map(e => bits(Pq.train(e, m = 8, k = 16)))
+    val res = layouts.map(e => bits(Pq.trainResidual(e, cents, m = 8, k = 16)))
+    assert(raw.forall(_ == raw.head), "Pq.train codebooks depend on the input layout")
+    assert(res.forall(_ == res.head), "Pq.trainResidual codebooks depend on the input layout")
+  }
+
+  test("Pq.train submits no more jobs at m=8 than at m=2") {
+    import graft.ann.Pq
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val fence = "graft.spec.fence"
+    // jobs `body` submits; a marker job fences the asynchronous listener
+    // bus, which delivers one listener's events in submission order
+    def jobsOf(body: => Unit): Int = {
+      val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          seen.put(Option(e.properties).exists(_.getProperty(fence) != null))
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        sc.setLocalProperty(fence, "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
+        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .map(e => if (e == null) fail("listener bus did not deliver the fence") else e)
+          .takeWhile(!_.booleanValue).size
+      } finally sc.removeSparkListener(listener)
+    }
+    // maxIter = 1: no fit can stop early, so every run pays its full
+    // round count
+    val (j2, j8) = (jobsOf(Pq.train(emb, m = 2, k = 16, maxIter = 1)),
+      jobsOf(Pq.train(emb, m = 8, k = 16, maxIter = 1)))
+    info(s"Pq.train jobs at maxIter=1: m=2 $j2, m=8 $j8")
+    assert(j2 > 0 && j8 <= j2, s"m=8 submitted $j8 jobs, m=2 $j2")
+  }
+
   test("binaryTopK: sign codes pack correctly; planted copies recalled at hamming 0; decent brute recall") {
     import graft.ann.Quantize
     // code words reproduce the sign pattern (hand-check on a planted vector)
