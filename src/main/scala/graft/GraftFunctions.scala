@@ -158,6 +158,14 @@ object GraftFunctions {
     GraftColumnBridge.column(
       graft.expressions.WordShingles(GraftColumnBridge.expression(toks), w, distinct))
 
+  /** The `k` MinHash values of a shingle-set array column, or null
+    * for an empty set; native single-pass expression
+    * ([[graft.expressions.MinhashSignature]]).
+    */
+  def minhashSignature(shingles: Column, k: Int): Column =
+    GraftColumnBridge.column(
+      graft.expressions.MinhashSignature(GraftColumnBridge.expression(shingles), k))
+
   /** Content fingerprint of a tokenized document: [[hex64]] of its
     * tokens joined with single spaces — the exact-dedup key every
     * fingerprint column in the engine shares (the DuckDB oracle mirrors

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.GraftFunctions.{fingerprintOfTokens, hex64, tokens}
+import graft.GraftFunctions.{fingerprintOfTokens, hex64, minhashSignature, shinglesOfTokens,
+  tokens}
 import graft.ops.Caching
 import graft.ops.Caching.{materialized, releaseCheckpoint}
 
@@ -19,15 +20,22 @@ import graft.ops.Caching.{materialized, releaseCheckpoint}
   * instantiation.
   *
   * Scale notes (100 TB):
-  *  - minhash signatures are computed with map-side partial aggregation
-  *    — the shuffle carries k longs per doc, never the shingles;
+  *  - a document's shingle set is one row, `(doc_id, sh: array<string>)`
+  *    ([[shingleArrays]]); doc_id is a key of every input frame;
+  *  - minhash signatures are a per-row projection
+  *    ([[graft.expressions.MinhashSignature]]: one md5 per shingle, k
+  *    longs out) — no shingle explode, no aggregate, no shuffle, like
+  *    the reference hashing each item to its bands on its own;
   *  - candidate generation joins on (band, band_hash): hash-partition
   *    co-location, hot buckets handled by AQE skew join;
   *  - exact-Jaccard verification only touches candidate pairs (like the
-  *    reference's cosine rerank of bucket candidates);
+  *    reference's cosine rerank of bucket candidates): each pair joins
+  *    its two shingle arrays and intersects them in the row
+  *    ([[jaccardOf]]), so no shingle rows are joined or counted;
   *  - the raw shingle-join variant (ngramJaccardPairs) is the exact
-  *    baseline; at scale prefer minhashLshPairs which bounds join
-  *    fan-out by band width.
+  *    baseline and the one operator that explodes the shingle set
+  *    ([[shingleSet]]); at scale prefer minhashLshPairs which bounds
+  *    join fan-out by band width.
   */
 object Dedup {
 
@@ -54,17 +62,27 @@ object Dedup {
     if (docs.columns.contains("toks")) docs
     else docs.withColumn("toks", tokens(col("text")))
 
-  /** Distinct (doc_id, shingle) pairs. The shingle expression already
-    * dedupes within each document (array_distinct), so no extra
-    * shuffle is needed to get set semantics; shingling runs over the
-    * (possibly precomputed+cached) `toks` column so one tokenize pass
-    * serves both the token and shingle pipelines.
+  /** Distinct (doc_id, shingle) pairs of `width`-token shingles, for
+    * shingle-keyed joins. The shingle expression already dedupes within
+    * each document, so no extra shuffle is needed to get set semantics;
+    * shingling runs over the (possibly precomputed+cached) `toks`
+    * column so one tokenize pass serves both the token and shingle
+    * pipelines.
     */
-  def shingleSet(docs: DataFrame): DataFrame =
-    withToks(docs)
-      .select(col("doc_id"),
-        explode(graft.GraftFunctions.shinglesOfTokens(col("toks"), ShingleWidth)).as("s"))
-      // (shinglesOfTokens(toks) ≡ shingles(text) — toks is tokens(text))
+  def shingleSet(docs: DataFrame, width: Int = ShingleWidth): DataFrame =
+    withToks(docs).select(col("doc_id"), explode(shinglesOfTokens(col("toks"), width)).as("s"))
+    // (shinglesOfTokens(toks) ≡ shingles(text) — toks is tokens(text))
+
+  /** The MinHash shingle sets, one row per document: `(doc_id, sh)`,
+    * its distinct shingles in first-occurrence order, for every
+    * document [[shingleSet]] has rows for. The emptiness test reads
+    * `toks`, not `sh`: Catalyst pushes a filter below the projection it
+    * reads, and a filter on `sh` would shingle every document twice
+    * (on a cached `toks` the test is free).
+    */
+  private def shingleArrays(docs: DataFrame): DataFrame =
+    withToks(docs).filter(size(col("toks")) >= ShingleWidth)
+      .select(col("doc_id"), shinglesOfTokens(col("toks"), ShingleWidth).as("sh"))
 
   /** Exact dedup on the normalized token stream: fingerprint, group
     * size, and a keep flag on the minimum doc_id of each group.
@@ -131,29 +149,21 @@ object Dedup {
       .withColumn("keep", col("doc_id") === col("keeper_id"))
   }
 
-  /** MinHash aggregation over a (doc_id, s) shingle table. */
-  private def minhashOf(sh: DataFrame): DataFrame = {
-    val hashed = sh
-      .withColumn("h", hex64(concat(lit("mh|"), col("s"))))
-      .withColumn("hi", shiftright(col("h"), 30))
-      .withColumn("lo", col("h").bitwiseAND(lit(MinhashFamily.LoMask)))
-    val cs = MinhashFamily.coefs(MinhashK)
-    val aggs = (0 until MinhashK).map { i =>
-      val c = cs(i)
-      min((col("hi") * c.a + col("lo") * c.b + lit(c.c)) % MinhashFamily.Prime)
-        .as(f"mh_$i%02d")
-    }
-    hashed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
+  /** (doc_id, mh_00..mh_15) over a [[shingleArrays]] table, whose rows
+    * all have a shingle — so no document gets a null signature.
+    */
+  private def minhashOf(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), minhashSignature(col("sh"), MinhashK).as("mh"))
+      .select(col("doc_id") +: (0 until MinhashK).map(i => col("mh")(i).as(f"mh_$i%02d")): _*)
 
   /** MinHash signature per document: ONE md5 per shingle feeds a
     * k-wise Carter-Wegman family ([[MinhashFamily]]); min over the
-    * shingle set per function. One explode + one grouped aggregation
-    * with map-side partials — the shuffle carries k longs per doc.
+    * shingle set per function. One native projection per document
+    * ([[graft.expressions.MinhashSignature]]) — no explode, no shuffle.
     * Lazy (see [[jaccardOf]]).
     */
   def minhash(docs: DataFrame): DataFrame =
-    minhashOf(shingleSet(docs))
+    minhashOf(shingleArrays(docs))
 
   /** (doc_id, band, band_hash) — one row per band; band hash combines
     * the band's r minhash values. Lazy (see [[jaccardOf]]).
@@ -165,7 +175,7 @@ object Dedup {
     mh.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "band_hash")))
   }
 
-  /** The band signature of a (doc_id, s) shingle table. */
+  /** The band signature of a (doc_id, sh) shingle-array table. */
   private def bandsOf(sh: DataFrame): DataFrame = minhashBands(minhashOf(sh))
 
   /** Distinct band-collision pairs (a from `xBands`, b from `yBands`)
@@ -189,28 +199,16 @@ object Dedup {
     * [[jaccardOf]]).
     */
   def minhashLshPairs(docs: DataFrame): DataFrame = {
-    // the shingle set feeds both the signature branch and the exact
-    // verification branch — cache it instead of recomputing the
+    // the shingle arrays feed both the signature kernel and the
+    // verifier — cache them (one row per doc) instead of running the
     // tokenize/shingle pipeline twice
-    val sh = shingleSet(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    // the banded signatures feed BOTH sides of the collision self-join
-    // below; without this cache the 128-way min-aggregate runs twice
-    // (r15: the executed-plan metrics dump showed two full minhashOf
-    // subtrees off the shingle cache — the dominant cost of every
-    // near-dup row). Bands are Bands rows per doc — the lightweight
-    // proxy table, cheap to hold.
+    val sh = shingleArrays(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    // the banded signatures feed BOTH sides of the collision self-join —
+    // cache them so the kernel runs once. Bands are Bands rows per doc —
+    // the lightweight proxy table, cheap to hold.
     val bands = bandsOf(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    // cand is tiny but referenced three times downstream (the id prune
-    // and both verifier joins) — cache it so the signature/band subtree
-    // runs once
-    val cand = collisionPairs(bands, bands).filter(col("a") < col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // one pruned side serves as both verifier sides
-    val shc = onlyIds(sh, cand.select(explode(array(col("a"), col("b"))).as("doc_id")).distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    materialized(jaccardOf(cand, shc, shc)) {
-      cand.unpersist(false); bands.unpersist(false)
-      shc.unpersist(false); sh.unpersist(false)
+    materialized(jaccardOf(collisionPairs(bands, bands).filter(col("a") < col("b")), sh, sh)) {
+      bands.unpersist(false); sh.unpersist(false)
     }
   }
 
@@ -246,22 +244,24 @@ object Dedup {
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .agg(count(lit(1)).as("n_int"))
-    withJaccard(inter, sh, sh).filter(col("jaccard") >= minJaccard)
+    // sizes of the (capped) sets the intersection was counted over
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    inter
+      .join(sizes.select(col("doc_id").as("a"), col("n").as("n_a")), "a")
+      .join(sizes.select(col("doc_id").as("b"), col("n").as("n_b")), "b")
+      .select(jaccardCols: _*)
+      .filter(col("jaccard") >= minJaccard)
   }
 
-  /** The exact-Jaccard verifier: for candidate pairs `(a, b)`, the
-    * shingle intersection of a's rows in `shA` and b's rows in `shB`,
-    * both set sizes and the ratio — (a, b, n_int, n_a, n_b, jaccard)
-    * for pairs sharing ≥1 shingle. Every near-dup operator verifies
-    * here, so a pair scores bit-identically whichever operator finds
-    * it.
-    *
-    * Each side is read twice (its sizes and the intersection), so
-    * callers pass sides already narrowed to the candidate ids
-    * ([[onlyIds]]) and cached — otherwise the prune over the full
-    * shingle set runs once per reading branch. `minhashLshPairs` passes
-    * one pruned set as both sides; `incrementalFlags` prunes the batch
-    * side to the a-ids and the corpus side to the b-ids.
+  /** The exact-Jaccard verifier: for candidate pairs `(a, b)`, a's
+    * shingle array in `shA` and b's in `shB` (both `(doc_id, sh)`)
+    * joined onto the pair, intersected in the row — (a, b, n_int, n_a,
+    * n_b, jaccard) for pairs sharing ≥1 shingle. Every MinHash near-dup
+    * operator verifies here, so a pair scores bit-identically whichever
+    * operator finds it. `cand ⋈ shA(a) ⋈ shB(b)` is the whole plan: the
+    * candidate joins carry one row per pair, nothing is aggregated.
+    * The arrays are distinct per doc, so `size(array_intersect)` is
+    * the set intersection.
     *
     * Evaluation and cache contract of the public near-dup operators:
     *  - lazy, nothing cached: [[minhash]], [[minhashBands]],
@@ -276,24 +276,21 @@ object Dedup {
     *    [[saveSignatures]] and [[addSignatures]].
     */
   private def jaccardOf(cand: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame =
-    withJaccard(
-      cand
-        .join(shA.as("sa"), col("a") === col("sa.doc_id"))
-        .join(shB.as("sb"), col("b") === col("sb.doc_id") && col("sa.s") === col("sb.s"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_int")),
-      shA, shB)
+    cand.select(col("a"), col("b"))
+      .join(shA.select(col("doc_id").as("a"), col("sh").as("sa")), "a")
+      .join(shB.select(col("doc_id").as("b"), col("sh").as("sb")), "b")
+      .select(col("a"), col("b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("long").as("n_int"),
+        size(col("sa")).cast("long").as("n_a"), size(col("sb")).cast("long").as("n_b"))
+      .filter(col("n_int") >= 1)
+      .select(jaccardCols: _*)
 
-  /** The verifier's tail: a's and b's set sizes and the ratio. */
-  private def withJaccard(inter: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame = {
-    def sizes(sh: DataFrame) = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    inter
-      .join(sizes(shA).as("za"), col("a") === col("za.doc_id"))
-      .join(sizes(shB).as("zb"), col("b") === col("zb.doc_id"))
-      .select(
-        col("a"), col("b"), col("n_int"),
-        col("za.n").as("n_a"), col("zb.n").as("n_b"),
-        (col("n_int") / (col("za.n") + col("zb.n") - col("n_int"))).as("jaccard"))
-  }
+  /** The verifier's output columns over (a, b, n_int, n_a, n_b): the
+    * ratio is long÷long, one definition for both verifiers.
+    */
+  private def jaccardCols: Seq[org.apache.spark.sql.Column] =
+    Seq(col("a"), col("b"), col("n_int"), col("n_a"), col("n_b"),
+      (col("n_int") / (col("n_a") + col("n_b") - col("n_int"))).as("jaccard"))
 
   /** Connected components over an undirected pair graph `(a, b)` by
     * alternating large-star/small-star contraction (Kiveris et al.,
@@ -490,16 +487,13 @@ object Dedup {
     */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
       minJaccard: Double = 0.7): DataFrame = {
-    // ONE tokenization pass on the corpus side feeds both the exact-
-    // fingerprint and shingle stages (withToks trusts precomputed toks)
+    // ONE tokenization pass on the corpus side feeds the exact
+    // fingerprints, the band signatures and the candidates' shingle
+    // arrays (withToks trusts precomputed toks)
     val tokC = withToks(corpus).select(col("doc_id"), col("toks"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE corpus shingle pass feeds both the band signatures and the
-    // exact-Jaccard verify (tokC caching alone would still run the
-    // WordShingles explode twice)
-    val shC = shingleSet(tokC).persist(StorageLevel.MEMORY_AND_DISK)
-    incrementalFlags(batch, fingerprintsOf(tokC), bandsOf(shC),
-      onlyIds(shC, _), minJaccard) { shC.unpersist(false); tokC.unpersist(false) }
+    incrementalFlags(batch, fingerprintsOf(tokC), bandsOf(shingleArrays(tokC)),
+      ids => shingleArrays(onlyIds(tokC, ids)), minJaccard) { tokC.unpersist(false) }
   }
 
   /** Distinct content fingerprints of a (doc_id, toks) frame. */
@@ -510,9 +504,10 @@ object Dedup {
     * recomputed in-plan) and [[incrementalDedupOnSignatures]] (corpus
     * signatures read from a persisted [[saveSignatures]] table — the
     * production shape): one definition, so the two tiers cannot drift.
-    * `corpusShinglesFor(candidateIds)` supplies the corpus shingle rows
-    * of the band-collided docs for the exact-Jaccard verify; the
-    * persisted path uses it to tokenize ONLY those docs.
+    * `corpusShinglesFor(candidateIds)` supplies the corpus shingle
+    * arrays of the band-collided docs for the exact-Jaccard verify, so
+    * both paths shingle (and the persisted one tokenizes) ONLY those
+    * docs.
     */
   private def incrementalFlags(batch: DataFrame, corpusFp: DataFrame,
       corpusBands: DataFrame, corpusShinglesFor: DataFrame => DataFrame,
@@ -523,17 +518,13 @@ object Dedup {
       .select(col("doc_id"), fingerprintOfTokens(col("toks")).as("fingerprint"))
       .join(corpusFp, Seq("fingerprint"), "left_semi")
       .select(col("doc_id"), lit(true).as("exact_dup"))
-    val shB = shingleSet(tokB).persist(StorageLevel.MEMORY_AND_DISK)
+    val shB = shingleArrays(tokB)
     val cand = collisionPairs(bandsOf(shB), corpusBands)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // each verifier side narrowed to its candidate ids ONCE and cached
-    // (the verifier reads each side twice); both sides stay narrowed —
-    // decontaminateFuzzy's "batch" is the training set, the large side
-    val sa = onlyIds(shB, cand.select(col("a").as("doc_id")).distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sb = corpusShinglesFor(cand.select(col("b").as("doc_id")).distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val near = jaccardOf(cand, sa, sb)
+    // cand has two readers, the corpus-id prune and the verifier: its
+    // batch-sized subtree reruns, which measured cheaper than a cache
+    // (one more stage and job per call)
+    val near = jaccardOf(cand, shB,
+        corpusShinglesFor(cand.select(col("b").as("doc_id")).distinct()))
       .filter(col("jaccard") >= minJaccard)
       .groupBy(col("a"))
       .agg(max(struct(col("jaccard"), (-col("b")).as("neg_b"), col("b"))).as("m"))
@@ -548,10 +539,7 @@ object Dedup {
         col("best_match"), col("best_jaccard"),
         (!(coalesce(col("exact_dup"), lit(false)) ||
           coalesce(col("near_dup"), lit(false)))).as("keep"))
-    materialized(out) {
-      cand.unpersist(false); sa.unpersist(false); sb.unpersist(false)
-      shB.unpersist(false); tokB.unpersist(false); releaseCorpus
-    }
+    materialized(out) { tokB.unpersist(false); releaseCorpus }
   }
 
   /** The signature-store writer behind [[saveSignatures]] and
@@ -565,7 +553,7 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try graft.ops.Concurrency.all(
         () => write(fingerprintsOf(tok), "_fp", Seq("fingerprint")),
-        () => write(bandsOf(shingleSet(tok)), "", Seq("band", "band_hash")))
+        () => write(bandsOf(shingleArrays(tok)), "", Seq("band", "band_hash")))
     finally tok.unpersist(false)
   }
 
@@ -633,7 +621,7 @@ object Dedup {
   def incrementalDedupOnSignatures(corpusFp: DataFrame, corpusBands: DataFrame,
       corpus: DataFrame, batch: DataFrame, minJaccard: Double = 0.7): DataFrame =
     incrementalFlags(batch, corpusFp.select(col("fingerprint")), corpusBands,
-      ids => shingleSet(withToks(onlyIds(corpus, ids))), minJaccard)(())
+      ids => shingleArrays(onlyIds(corpus, ids)), minJaccard)(())
 
   /** Bloom-gated incremental exact dedup: flag new-batch docs whose
     * normalized-text fingerprint already exists in the corpus, with a
@@ -767,12 +755,9 @@ object Dedup {
     */
   def decontaminate(train: DataFrame, eval: DataFrame,
       n: Int = DecontaminationN): DataFrame = {
-    def grams(docs: DataFrame): DataFrame =
-      withToks(docs).select(col("doc_id"),
-        explode(graft.GraftFunctions.shinglesOfTokens(col("toks"), n)).as("s"))
     val h = hex64(concat(lit("dc|"), col("s")))
-    val trGrams = grams(train).select(col("doc_id"), h.as("g"))
-    val evGrams = grams(eval).select(h.as("g")).distinct()
+    val trGrams = shingleSet(train, n).select(col("doc_id"), h.as("g"))
+    val evGrams = shingleSet(eval, n).select(h.as("g")).distinct()
     val perDoc = withToks(train).select(col("doc_id"),
       size(graft.GraftFunctions.shinglesOfTokens(col("toks"), n)).cast("long").as("n_shingles"))
     // shinglesOfTokens is distinct per doc, so count(*) = distinct hits

@@ -49,9 +49,11 @@ object Caching {
     else df.localCheckpoint(true)
 
   /** Release a [[cut]] (every checkpointed leaf of `df`'s plan). Its
-    * local-checkpoint blocks are dropped, so without a checkpoint dir
-    * a frame read through it no longer recomputes — call this once
-    * nothing reads it again, or once every reader is materialized.
+    * local-checkpoint blocks are dropped (without the WARN
+    * `RDD.unpersist` logs for each local checkpoint), so without a
+    * checkpoint dir a frame read through it no longer recomputes —
+    * call this once nothing reads it again, or once every reader is
+    * materialized.
     * Under a checkpoint dir a cut's files stay, because a materialized
     * result recomputes from them after a lost block; `superseded`
     * deletes them too, for a cut nothing will read again (an earlier
@@ -60,7 +62,7 @@ object Caching {
   def releaseCheckpoint(df: DataFrame, superseded: Boolean = false): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        org.apache.spark.GraftRddBridge.dropBlocks(lr.rdd)
         if (superseded) lr.rdd.getCheckpointFile.foreach { f =>
           val p = new Path(f)
           p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)

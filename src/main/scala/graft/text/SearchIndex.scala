@@ -154,14 +154,20 @@ object SearchIndex {
 
   /** [[scoreTopK]] over a loaded index: segment-merged postings, the
     * stored doc lengths, and the stored (n_docs, Σdl) as a 1-row
-    * literal frame — the corpus is never touched.
+    * literal frame — the corpus is never touched. The postings are
+    * narrowed to the query tokens (a broadcast semi-join) BEFORE the
+    * segment merge, so the merge's collect/flatten/sort touches only
+    * the queried tokens' segment rows; the merge is per token, so the
+    * narrowed merge equals the narrowed full merge.
     */
   private[text] def serve(idx: TextIndex, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val stats = idx.postings.sparkSession.range(1).select(
       lit(idx.nDocs).cast("long").as("n_docs"),
       lit(idx.sumDl).cast("long").as("sum_dl"))
-    scoreTopK(Built(mergeSegments(idx.postings, idx.maxDf), idx.docLens, stats),
+    val queried = idx.postings
+      .join(broadcast(queries.select(col("token")).distinct()), Seq("token"), "left_semi")
+    scoreTopK(Built(mergeSegments(queried, idx.maxDf), idx.docLens, stats),
       queries, k, k1, b)
   }
 

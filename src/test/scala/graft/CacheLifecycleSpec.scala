@@ -203,6 +203,47 @@ class CacheLifecycleSpec extends SparkSpec {
     res.unpersist(blocking = true)
   }
 
+  test("releasing local cuts logs no 'locally checkpointed' WARN (clustersFromPairs)") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val name = "graft-spec-cut-warn"
+    val appender = new AbstractAppender(name, null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("was locally checkpointed"))
+          seen.incrementAndGet()
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    def warnsOf(body: => Unit): Int = { seen.set(0); body; seen.get }
+    try {
+      // control: Spark's own unpersist of a local checkpoint logs the line
+      val control = warnsOf {
+        val r = spark.sparkContext.parallelize(1 to 10, 2)
+        r.localCheckpoint()
+        r.count()
+        r.unpersist(blocking = true)
+      }
+      assert(control >= 1, "the capture saw no WARN from RDD.unpersist")
+      // a chain needs several contraction rounds, each a released cut
+      val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+      val warns = warnsOf {
+        val res = Dedup.clustersFromPairs((0L to 40L).toDF("doc_id"), chain)
+        res.unpersist(blocking = true)
+      }
+      assert(warns === 0, s"$warns 'locally checkpointed' WARN lines over clustersFromPairs")
+    } finally {
+      root.removeAppender(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   test("unconverged contraction still yields one row per document") {
     // maxIters=1 cannot finish a diameter-50 chain; labels may split,
     // but the one-row-per-doc_id contract must hold for downstream joins

@@ -156,6 +156,69 @@ class DedupSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_dedup_sig_spec_fp")
   }
 
+  test("incrementalDedupOnSignatures: one call stays within its job budget") {
+    // no shingle explode, aggregate or shingle join under the call:
+    // signatures are one projection and the verifier intersects arrays
+    val corpus = docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("text"))
+    val local = corpus.orderBy("doc_id").limit(5).collect()
+      .map(r => (r.getLong(0) + 5000000L, r.getString(1).split(" ").drop(2).mkString(" "))) ++
+      docs.filter(col("doc_id") % 2 === 1).orderBy("doc_id").limit(40)
+        .select(col("doc_id"), col("text")).collect().map(r => (r.getLong(0), r.getString(1)))
+    val batch = local.toSeq.toDF("doc_id", "text")
+    val tmp = tempDir("graft_dedup_jobs").toString
+    Dedup.saveSignatures(corpus, "graft_dedup_jobs_spec", path = Some(s"$tmp/tbl"))
+    val (fp, bands) = Dedup.loadSignatures(spark, "graft_dedup_jobs_spec")
+    var nearDups = 0L
+    val jobs = jobsOf {
+      val flags = Dedup.incrementalDedupOnSignatures(fp, bands, corpus, batch)
+      nearDups = flags.filter(col("near_dup")).count()
+      flags.unpersist()
+    }
+    info(s"incrementalDedupOnSignatures: $jobs jobs, $nearDups near-dups")
+    assert(nearDups >= 5, "the planted near-copies must reach the verifier")
+    // 21 here; the exploded form (shingle-row signature aggregate,
+    // shingle join and size aggregates in the verifier) submitted 26
+    assert(jobs <= 22, s"incrementalDedupOnSignatures submitted $jobs jobs")
+    spark.sql("DROP TABLE IF EXISTS graft_dedup_jobs_spec")
+    spark.sql("DROP TABLE IF EXISTS graft_dedup_jobs_spec_fp")
+  }
+
+  test("MinhashSignature ≡ the Catalyst formula hex64('mh|' || s) → family → min") {
+    import graft.dedup.MinhashFamily
+    val rnd = new scala.util.Random(101)
+    def str(): String = Seq.fill(rnd.nextInt(24))(rnd.nextInt(6) match {
+      case 0 => rnd.nextPrintableChar().toString
+      case 1 => (0x4E00 + rnd.nextInt(0x5000)).toChar.toString          // Han
+      case 2 => new String(Character.toChars(0x1F300 + rnd.nextInt(0x300))) // astral
+      case 3 => (0xD800 + rnd.nextInt(0x800)).toChar.toString          // lone surrogate
+      case 4 => " "
+      case _ => (0xC0 + rnd.nextInt(0x100)).toChar.toString            // Latin-1/Extended
+    }).mkString
+    val sets = (0L until 300L).map(i => (i, Seq.fill(rnd.nextInt(40))(str()).distinct)) :+
+      ((300L, Seq.empty[String]))
+    val df = sets.toDF("id", "sh")
+    def kernel(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), GraftFunctions.minhashSignature(col("sh"), Dedup.MinhashK))
+        .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
+    // the local relation is folded by the interpreter; the repartitioned
+    // frame runs the generated code
+    val (interpreted, generated) = (kernel(df), kernel(df.repartition(3)))
+    assert(interpreted === generated)
+    val h = GraftFunctions.hex64(concat(lit("mh|"), col("s")))
+    val mins = MinhashFamily.coefs(Dedup.MinhashK).map { c =>
+      min((shiftright(h, 30) * c.a + h.bitwiseAND(lit(MinhashFamily.LoMask)) * c.b + lit(c.c)) %
+        MinhashFamily.Prime)
+    }
+    val formula = df.select(col("id"), explode(col("sh")).as("s"))
+      .groupBy(col("id")).agg(mins.head, mins.tail: _*)
+      .collect().map(r => r.getLong(0) -> (1 to Dedup.MinhashK).map(r.getLong)).toMap
+    assert(generated.keySet === sets.map(_._1).toSet)
+    assert(formula.keySet === sets.filter(_._2.nonEmpty).map(_._1).toSet)
+    sets.foreach { case (id, s) =>
+      assert(generated(id) === (if (s.isEmpty) None else Some(formula(id))), s"set $id")
+    }
+  }
+
   test("signature-store ingest loop: add survivors, next batch sees them; compact to one file per bucket") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -494,4 +494,33 @@ class KernelFuzzSpec extends SparkSpec {
     val triaged = graft.multimodal.Binary.triage(df).collect()
     assert(triaged.length == 240)
   }
+
+  test("MinhashSignature never throws on null, empty, null-element, surrogate or long shingle sets") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = graft.dedup.Dedup.MinhashK
+    val kernel = graft.expressions.MinhashSignature(
+      BoundReference(0, ArrayType(StringType, containsNull = true), nullable = true), k)
+    val genShingle: Gen[String] = Gen.oneOf(
+      Gen.asciiPrintableStr,
+      Gen.listOf(Gen.choose('\uD800', '\uDFFF')).map(_.mkString), // lone/paired surrogates
+      Gen.listOf(Gen.choose(Char.MinValue, Char.MaxValue)).map(_.mkString),
+      Gen.choose(1000, 20000).map(n => "x" * n))
+    val genSet: Gen[Seq[Option[String]]] =
+      Gen.listOf(Gen.frequency(8 -> genShingle.map(Some(_)), 1 -> Gen.const(None)))
+    checkProp(Prop.forAllNoShrink(genSet) { set =>
+      val arr = new GenericArrayData(
+        set.map(_.map(UTF8String.fromString).orNull).toArray[Any])
+      val out = kernel.eval(InternalRow(arr))
+      // a signature of k values exactly when some shingle is non-null
+      if (set.exists(_.isDefined))
+        out.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() == k
+      else out == null
+    })
+    assert(kernel.eval(InternalRow(null)) == null)
+    assert(kernel.eval(InternalRow(new GenericArrayData(Array.empty[Any]))) == null)
+  }
 }

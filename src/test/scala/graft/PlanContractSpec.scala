@@ -1,9 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, InputAdapter,
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, GenerateExec, InputAdapter,
   SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** SURVEY §5's scale contract, asserted on real plans (round-1 verdict
   * item #7) so a future refactor can't silently regress pushdown,
@@ -22,6 +27,13 @@ class PlanContractSpec extends SparkSpec {
 
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every operator of `p`, pre-order, adaptive query stages unwrapped. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    case s: QueryStageExec => operators(s.plan)
+    case op => op +: op.children.flatMap(operators)
+  }
 
   /** Every operator of `p` paired with whether it runs inside a
     * WholeStageCodegenExec — adaptive query stages unwrapped, and an
@@ -436,14 +448,39 @@ class PlanContractSpec extends SparkSpec {
       s"decontamination probe does not broadcast the eval grams:\n$phys")
   }
 
-  test("dedup_minhash: the shuffle carries k longs per doc, never shingles") {
-    val phys = physical(q("dedup_minhash"))
-    // partial aggregation before the exchange = map-side min-combine
-    val firstAgg = phys.indexOf("HashAggregate")
-    val firstEx = phys.indexOf("Exchange")
-    assert(firstAgg >= 0 && firstEx >= 0)
-    assert(phys.contains("partial_min") || phys.contains("min("),
-      s"no map-side partial min:\n$phys")
+  test("dedup_minhash: signatures are one projection; no Generate or Exchange below") {
+    // the kernel hashes each document's shingle array in place: no
+    // shingle explode and no grouped min aggregate feed it (the loader's
+    // round-robin input spread, Tables.spread, is the one exchange
+    // allowed below, as for lsh_signatures)
+    val sig = operators(q("dedup_minhash").queryExecution.executedPlan)
+      .filter(_.expressions.exists(_.exists(_.isInstanceOf[graft.expressions.MinhashSignature])))
+    assert(sig.nonEmpty, "dedup_minhash lost the minhash_signature projection")
+    sig.foreach { p =>
+      val below = operators(p).tail
+      assert(!below.exists(_.isInstanceOf[GenerateExec]), s"Generate under the signature:\n$p")
+      assert(!below.exists {
+        case e: ShuffleExchangeExec => !e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }, s"Exchange under the signature:\n$p")
+    }
+  }
+
+  test("BM25 serve: the query-token semi-join sits below the segment-merge aggregate") {
+    // the merge (collect/flatten/sort per token) must only see the
+    // queried tokens' segment rows, not every token of the index
+    val merges = operators(q("text_search_topk_persisted").queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec
+          if a.groupingExpressions.map(_.toString).exists(_.startsWith("token#")) &&
+            a.aggregateExpressions.exists(_.toString.contains("collect_list")) => a
+    }
+    assert(merges.nonEmpty, "no segment-merge aggregate in the serve plan")
+    merges.foreach { m =>
+      assert(operators(m).exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, s"segment merge runs before the query-token semi-join:\n$m")
+    }
   }
 
   test("Partitions.widened: many-partition input passes through with NO added Exchange") {

@@ -27,6 +27,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** The number of jobs `body` submits. A marker job fences the
+    * asynchronous listener bus, which delivers one listener's events
+    * in submission order.
+    */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val fence = "graft.spec.fence"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).exists(_.getProperty(fence) != null))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(fence, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(e => if (e == null) fail("listener bus did not deliver the fence") else e)
+        .takeWhile(!_.booleanValue).size
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit =
     try synchronized {
       tempDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))

@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`,
   * every lineage cut in `ops/Caching.scala`; keeps MLlib clustering in
   * its one comparator (`ann/MlLsh.scala`) and concurrent job submission
-  * in `ops/Concurrency.scala`; and keeps the library packages off
-  * `System.err`. Comment lines are skipped — prose may name any of
-  * them.
+  * in `ops/Concurrency.scala`; keeps the MinHash signature's one
+  * definition in its kernel (`expressions/MinhashSignature.scala`) and
+  * the shingle explode in `Dedup.shingleSet`; and keeps the library
+  * packages off `System.err`. Comment lines are skipped — prose may
+  * name any of them.
   */
 class StructureLintSpec extends AnyFunSuite {
 
@@ -77,6 +79,36 @@ class StructureLintSpec extends AnyFunSuite {
     assert(sources(mainRoot).exists(_.getName == "Concurrency.scala"))
     val hits = offenders("ops/Concurrency.scala", Seq("Future"))
     if (hits.nonEmpty) fail(s"Future outside Concurrency:\n${hits.mkString("\n")}")
+  }
+
+  test("the MinHash shingle hash lives only in expressions/MinhashSignature.scala") {
+    assert(sources(mainRoot).exists(_.getName == "MinhashSignature.scala"))
+    val hits = offenders("expressions/MinhashSignature.scala", Seq("\"mh|\""))
+    if (hits.nonEmpty) fail(s"MinHash shingle hash outside the kernel:\n${hits.mkString("\n")}")
+  }
+
+  test("Dedup explodes a shingle set only in shingleSet and ngramJaccardPairs") {
+    // every other explode in Dedup is of something else: the band rows
+    // of a signature, SimHash's token votes, ExactSubstr's positional
+    // gram sequence
+    val allowed = Set("shingleSet", "ngramJaccardPairs",
+      "minhashBands", "simhash", "simhashPairs", "dupGramStarts")
+    val file = new File(mainRoot, "graft/dedup/Dedup.scala")
+    val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
+    val src = scala.io.Source.fromFile(file, "UTF-8")
+    val hits = try {
+      var current = ""
+      src.getLines().zipWithIndex.flatMap { case (line, i) =>
+        line match {
+          case defLine(name) if !isComment(line) => current = name
+          case _ => ()
+        }
+        if (!isComment(line) && line.contains("explode(") && !allowed(current))
+          Some(s"dedup/Dedup.scala:${i + 1} (in $current): ${line.trim}")
+        else None
+      }.toList
+    } finally src.close()
+    if (hits.nonEmpty) fail(s"shingle explode outside shingleSet:\n${hits.mkString("\n")}")
   }
 
   test("library packages never write to System.err") {

@@ -789,27 +789,6 @@ class TextKnnSpec extends SparkSpec {
 
   test("Pq.train submits no more jobs at m=8 than at m=2") {
     import graft.ann.Pq
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val fence = "graft.spec.fence"
-    // jobs `body` submits; a marker job fences the asynchronous listener
-    // bus, which delivers one listener's events in submission order
-    def jobsOf(body: => Unit): Int = {
-      val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          seen.put(Option(e.properties).exists(_.getProperty(fence) != null))
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        sc.setLocalProperty(fence, "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
-        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-          .map(e => if (e == null) fail("listener bus did not deliver the fence") else e)
-          .takeWhile(!_.booleanValue).size
-      } finally sc.removeSparkListener(listener)
-    }
     // maxIter = 1: no fit can stop early, so every run pays its full
     // round count
     val (j2, j8) = (jobsOf(Pq.train(emb, m = 2, k = 16, maxIter = 1)),
