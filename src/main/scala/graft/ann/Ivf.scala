@@ -15,8 +15,9 @@ import graft.GraftFunctions.{cosine_sim, top_k_by_score}
   * aggregation — the corpus × nCells scored rows never enter a
   * shuffle; only one (vec_id, cell) row per vector per map partition
   * does. At 100 TB the assignment pass is embarrassingly parallel and
-  * the probe join touches only nProbe/nCells of the data — the classic
-  * IVF pruning win.
+  * only nProbe/nCells of the vectors survive the probe join into the
+  * cosine rerank — the classic IVF pruning win (the scan under the
+  * join still reads every cell).
   */
 object Ivf {
 
@@ -82,10 +83,14 @@ object Ivf {
 
   /** [[probeTopK]] against a prebuilt (e.g. [[loadIndex]]ed) cell
     * table `(vec_id, cell, embedding)` — the serving path for an IVF
-    * index at rest: the probe join reads a bucketed-by-cell table
-    * bucket-local (no index-side exchange post-load, spec-asserted),
-    * and the candidate embeddings ride OUT OF THE INDEX itself — no
-    * separate corpus fetch join at serving time.
+    * index at rest. A broadcast batch (`broadcastQueries`, or a batch
+    * that fits the broadcast threshold) broadcasts its probes and
+    * streams the cell table by file splits; a shuffled batch reads the
+    * bucketed-by-cell table bucket-local (no index-side exchange
+    * post-load, spec-asserted). Either way the scan reads every cell's
+    * rows and the probe join keeps the probed cells' ones; the
+    * candidate embeddings ride OUT OF THE INDEX itself — no separate
+    * corpus fetch join at serving time.
     */
   def probeTopKOnIndex(cells: DataFrame, centroids: DataFrame,
       queries: DataFrame, nProbe: Int, k: Int,
@@ -103,13 +108,22 @@ object Ivf {
       queries: DataFrame, nProbe: Int,
       broadcastQueries: Option[Boolean] = None): DataFrame = {
     val c = centroids.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
-    val probes = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    // one decision for the whole batch side: a batch that broadcasts
+    // its vectors broadcasts its probes (nProbe (q_id, cell) rows per
+    // query, smaller than the vectors beside them) and streams the
+    // cells by file splits; a shuffled batch meets the cells
+    // bucket-local (the read rule on graft.ops.Compaction)
+    val bc = broadcastQueries.getOrElse(graft.ops.Broadcasting.fitsBroadcast(q))
+    val probes0 = q
       .crossJoin(graft.ops.Broadcasting.maybeBroadcast(c))
       .select(col("q_id"), col("c_id"),
         cosine_sim(col("q_emb"), col("c_emb")).as("c_sim"))
       .groupBy(col("q_id"))
       .agg(top_k_by_score(col("c_sim"), col("c_id"), nProbe).as("top"))
       .select(col("q_id"), explode(col("top.id")).as("cell"))
+    val (probes, index) =
+      if (bc) (broadcast(probes0), graft.ops.Compaction.streamed(cells)) else (probes0, cells)
     // an [[assign]]-built cell table holds one cell per vector, making
     // (q_id, cand_id) pairs unique — but this is a PUBLIC serving API
     // over any loaded table, and an [[assignProbes]]-built table (the
@@ -123,15 +137,14 @@ object Ivf {
     // the identity). Same shuffle shape, still partial-aggregated,
     // bounded by the probe selectivity.
     val cand = probes
-      .join(cells.select(col("cell"), col("vec_id"),
+      .join(index.select(col("cell"), col("vec_id"),
         col("embedding").as("cand_emb")), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"), col("cand_emb"))
       .groupBy(col("q_id"), col("cand_id"))
       .agg(min(col("cand_emb")).as("cand_emb"))
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     cand
-      .join(graft.ops.Broadcasting.maybeBroadcast(q, broadcastQueries), Seq("q_id"))
+      .join(graft.ops.Broadcasting.maybeBroadcast(q, Some(bc)), Seq("q_id"))
       .select(col("q_id"), col("cand_id"),
         cosine_sim(col("q_emb"), col("cand_emb")).as("sim"))
   }
@@ -160,8 +173,9 @@ object Ivf {
   /** Persist the IVF index at rest — the cells-and-centroids twin of
     * [[graft.lsh.LshIndex.saveBucketed]] / [[graft.text.SearchIndex]]:
     * the assigned corpus `(vec_id, cell, embedding)` as a catalog table
-    * bucketed + sorted by cell (a probe prunes to its cells' file
-    * buckets and serves the join exchange-free), the centroid table as
+    * bucketed + sorted by cell (a shuffled probe join reads it
+    * exchange-free; a broadcast one streams it — [[probeTopKOnIndex]]),
+    * the centroid table as
     * a `<table>_centroids` sibling. `nBuckets` should keep one cell
     * bucket within an executor core's working memory at target scale.
     *

@@ -397,9 +397,10 @@ object Pq {
     * (the [[Ivf.probeTopKOnIndex]] probe shape), score ADC only over
     * code rows in probed cells — an equi-join on cell against the
     * (bucketed-at-rest) cell table, never a codes × queries cross
-    * join — then exact-cosine rerank of the prefilterK survivors
-    * against the full-precision corpus (the only step touching full
-    * vectors, prefilterK × queries rows).
+    * join; broadcast probes stream that table by file splits,
+    * shuffled ones read it bucket-local — then exact-cosine rerank of
+    * the prefilterK survivors against the full-precision corpus (the
+    * only step touching full vectors, prefilterK × queries rows).
     *
     * `cells` is an [[encodeInCells]] / [[loadCellIndex]] frame
     * (vec_id, cell, codes). A multi-assigned cells table (vectors
@@ -457,8 +458,11 @@ object Pq {
         model.m.toLong * model.k * 8 + 32L))
     val qtab = adcTables(queries, model)
     val adc = graft.GraftFunctions.adc_score(col("codes"), col("tab"))
+    // broadcast probes stream the code table by file splits; shuffled
+    // ones meet it bucket-local (the read rule on graft.ops.Compaction)
+    val index = if (bcProbes.contains(true)) graft.ops.Compaction.streamed(cells) else cells
     val survivors = graft.ops.Broadcasting.maybeBroadcast(probes, bcProbes)
-      .join(cells.select(col("cell"), col("vec_id").as("cand_id"), col("codes")),
+      .join(index.select(col("cell"), col("vec_id").as("cand_id"), col("codes")),
         Seq("cell"))
       .filter(col("cand_id") =!= col("q_id"))
       .join(graft.ops.Broadcasting.maybeBroadcast(qtab, bcQtab), Seq("q_id"))
@@ -481,8 +485,8 @@ object Pq {
 
   /** Persist the full IVFADC index at rest: `<table>` = the codebook
     * ([[save]]), `<table>_cells` = (vec_id, cell, codes) bucketed +
-    * sorted by cell (a probe prunes to its cells' file buckets and the
-    * serving equi-join runs exchange-free on the index side — the
+    * sorted by cell (a shuffled probe join runs exchange-free on the
+    * index side, a broadcast one streams it by file splits — the
     * [[Ivf.saveIndex]] layout with m-byte codes instead of
     * full-precision embeddings riding in the index), `<table>_centroids`
     * = the coarse quantizer.

@@ -49,8 +49,9 @@ case class LshParams(
   *  - delete/clear → anti-join rebuild ([[delete]]); persistence →
   *    parquet + JSON params sidecar ([[save]]/[[load]]).
   *
-  * Scale: the index is hash-partitioned by (band, sig) when persisted;
-  * query batches are broadcast against it (typical serving case) while
+  * Scale: the index is bucketed by (band, sig) when persisted; query
+  * batches are broadcast against it as a file-split scan (typical
+  * serving case) while
   * corpus-×-corpus candidate generation shuffles both sides on
   * (band, sig) with AQE skew handling. Hot buckets (the reference's
   * "monitor bucket sizes" guidance, README §Performance) can be capped
@@ -161,12 +162,18 @@ object LshIndex {
     topKOnIndex(build(corpus, p), queries, p, k, broadcastQueries)
 
   /** [[topK]] against a prebuilt (e.g. loaded) index — the serving path
-    * for a persisted index: a [[loadBucketed]] table joins bucket-local
-    * here, with no exchange on the index side.
+    * for a persisted index. With `broadcastQueries` (the serving
+    * batch) the query signatures broadcast and a [[loadBucketed]]
+    * table streams past them as a plain file scan
+    * ([[graft.ops.Compaction.streamed]]): nothing above the join uses
+    * the bucket layout. With `broadcastQueries = false` the query side
+    * shuffles on (band, sig) and the table joins bucket-local, with no
+    * exchange on the index side.
     */
   def topKOnIndex(index: DataFrame, queries: DataFrame, p: LshParams, k: Int,
       broadcastQueries: Boolean = true): DataFrame = {
-    val collisions = queryCollisions(index, queries, p, broadcastQueries)
+    val idx = if (broadcastQueries) graft.ops.Compaction.streamed(index) else index
+    val collisions = queryCollisions(idx, queries, p, broadcastQueries)
       .groupBy(col("q_id"), col("vec_id"))
       .agg(count(lit(1)).as("n_collisions"))
     // bounded TopKByScore aggregate, not a rank window (the idiom shared
@@ -354,8 +361,9 @@ object LshIndex {
 
   /** Persist the index as a catalog table bucketed + sorted on
     * (band, sig) — the at-rest analogue of the reference's Redis bucket
-    * store (storage/redis.py:40): a reloaded index's collision join
-    * reads bucket-local with NO exchange and no sort on the index side.
+    * store (storage/redis.py:40): a reloaded index's shuffled collision
+    * join reads bucket-local with NO exchange and no sort on the index
+    * side; a broadcast serve streams it by file splits ([[topKOnIndex]]).
     * Params ride along as a table property, so the catalog entry is
     * self-contained. `nBuckets` should be sized so one bucket's rows fit
     * an executor core's working memory at the target scale.

@@ -30,8 +30,24 @@ import org.apache.spark.sql.functions.col
   *    folds the debris back to one file per bucket through a staging
   *    table and a catalog rename: one data rewrite, no window where
   *    the table name is unserveable except the metadata swap itself.
+  *
+  * The read rule: a join that SHUFFLES its other side (the corpus-scale
+  * forms, or broadcasts disabled) reads the table bucketed, and its
+  * index side plans no exchange. A serve that BROADCASTS its query
+  * side reads the table through [[streamed]]: no operator above that
+  * scan uses the bucket layout, and a bucketed scan is one task per
+  * bucket (32 tasks on a 4-core box; at scale, `nBuckets` tasks each
+  * reading 1/`nBuckets` of the index however many cores there are).
   */
 object Compaction {
+
+  /** `df` with every bucketed table under it read as a plain file
+    * scan, split by size rather than by bucket — for the index side of
+    * an explicitly broadcast serving join (the read rule above). Rows
+    * and columns are those of `df`; only the plan's scan changes.
+    */
+  def streamed(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftPlanBridge.withoutBucketSpec(df)
 
   /** Overwrite `table` with `df` in the layout: bucketed into
     * `nBuckets` and sorted on `keys`, clustered first so every bucket

@@ -10,14 +10,15 @@ import org.apache.spark.sql.functions._
   * touched at serving time.
   *
   * Layout: the [[TextAnalysis.invertedIndex]] postings as a catalog
-  * table bucketed + sorted by token (a query term's postings prune to
-  * one file bucket); per-document lengths as a sibling
-  * `<table>_doclen` table bucketed by doc_id (the candidate join reads
-  * bucket-local); the corpus stats (n_docs, Σdl) — the only other
-  * serving input — computed once at save time and stored in
-  * TBLPROPERTIES, so [[searchTopK]] does not re-aggregate the corpus
-  * per query (the round-3 gap: TextAnalysis.scala recomputed N and Σdl
-  * on every search).
+  * table bucketed + sorted by token (a serve streams it by file splits
+  * past the broadcast query tokens and keeps only their rows — the
+  * scan reads the whole table; see [[serve]]); per-document lengths as
+  * a sibling `<table>_doclen` table bucketed by doc_id (the candidate
+  * join reads bucket-local); the corpus stats (n_docs, Σdl) — the
+  * only other serving input — computed once at save time and stored
+  * in TBLPROPERTIES, so [[searchTopK]] does not re-aggregate the
+  * corpus per query (the round-3 gap: TextAnalysis.scala recomputed N
+  * and Σdl on every search).
   */
 object SearchIndex {
 
@@ -153,39 +154,43 @@ object SearchIndex {
   }
 
   /** [[scoreTopK]] over a loaded index: segment-merged postings, the
-    * stored doc lengths, and the stored (n_docs, Σdl) as a 1-row
-    * literal frame — the corpus is never touched. The postings are
-    * narrowed to the query tokens (a broadcast semi-join) BEFORE the
+    * stored doc lengths, and the stored (n_docs, Σdl) as literals — the
+    * corpus is never touched. The postings table streams as a file-split
+    * scan ([[graft.ops.Compaction.streamed]]) past the broadcast batch
+    * and is narrowed to the query tokens (a semi-join) BEFORE the
     * segment merge, so the merge's collect/flatten/sort touches only
-    * the queried tokens' segment rows; the merge is per token, so the
-    * narrowed merge equals the narrowed full merge.
+    * the queried tokens' segment rows (one exchange of those rows on
+    * token); the merge is per token, so the narrowed merge equals the
+    * narrowed full merge. The doc-length table keeps its bucketed read:
+    * its join is not a broadcast.
     */
   private[text] def serve(idx: TextIndex, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val stats = idx.postings.sparkSession.range(1).select(
-      lit(idx.nDocs).cast("long").as("n_docs"),
-      lit(idx.sumDl).cast("long").as("sum_dl"))
-    val queried = idx.postings
-      .join(broadcast(queries.select(col("token")).distinct()), Seq("token"), "left_semi")
-    scoreTopK(Built(mergeSegments(queried, idx.maxDf), idx.docLens, stats),
-      queries, k, k1, b)
+    val q = broadcast(queryRows(queries))
+    val queried = graft.ops.Compaction.streamed(idx.postings)
+      .join(q, Seq("token"), "left_semi")
+    rank(mergeSegments(queried, idx.maxDf), idx.docLens, q, k, k1, b)(
+      _.withColumn("n_docs", lit(idx.nDocs)).withColumn("sum_dl", lit(idx.sumDl)))
   }
 
   /** THE BM25 scorer — every lexical and hybrid entry point ranks
     * through it. `queries` is `(query_id, token, ord)`; each (query,
     * doc) score folds its matched terms' scores in `(ord, token)`
-    * order (`aggregate` over `array_sort(collect_list(struct))` — a
+    * order (`aggregate` over `array_sort(collect_set(struct))` — a
     * groupBy-sum of doubles would be partition-order-dependent; the
     * [[TextAnalysis.ngramLmScore]] determinism discipline), so every
     * ranking is cross-engine hash-exact: ord = 0 is the batch's token
     * order, ord = term position the single query's term-list order.
-    * Plan shape: the distinct query tokens broadcast-semi-join the
-    * postings (the index side touches only Σ df(query tokens) entries
-    * regardless of corpus size), ONE explode to (token, doc, tf),
-    * candidates join doc lengths on doc_id (bucket-local on a saved
-    * index), the stats ride in as a 1-row broadcast, per-query top-k
-    * via the bounded TopKByScore aggregate ((score desc, doc_id)
-    * tie-break). Output: (query_id, rn, doc_id, score).
+    * A query row repeated in the batch counts once (the set).
+    * Plan shape: the query rows broadcast once and inner-join the
+    * postings on token (every posting row of a token not queried is
+    * dropped there; the scan itself still reads the whole postings
+    * table), ONE explode to (query, token, doc, tf), candidates join
+    * doc lengths on doc_id (bucket-local on a saved index), the stats
+    * ride in as literals (a loaded index, [[serve]]) or a 1-row
+    * broadcast (a fresh build), per-query top-k via the bounded
+    * TopKByScore aggregate ((score desc, doc_id) tie-break). Output:
+    * (query_id, rn, doc_id, score).
     *
     * Eager/lazy and cache-scope contract of the entry points built on
     * this core:
@@ -202,18 +207,24 @@ object SearchIndex {
     *    set a checkpoint dir and the result recomputes.
     */
   private[text] def scoreTopK(ix: Built, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val q = queries.select(col("query_id"), col("token"), col("ord")).distinct()
-    val posts = ix.postings
-      .join(broadcast(q.select(col("token")).distinct()), Seq("token"), "left_semi")
-      .select(col("token"), col("df"),
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    rank(ix.postings, ix.docLens, broadcast(queryRows(queries)), k, k1, b)(
+      _.crossJoin(broadcast(ix.stats)))
+
+  private def queryRows(queries: DataFrame): DataFrame =
+    queries.select(col("query_id"), col("token"), col("ord"))
+
+  /** The [[scoreTopK]] body over broadcast query rows `q`; `withStats`
+    * adds the `n_docs` and `sum_dl` columns to the candidate rows.
+    */
+  private def rank(postings: DataFrame, docLens: DataFrame, q: DataFrame,
+      k: Int, k1: Double, b: Double)(withStats: DataFrame => DataFrame): DataFrame = {
+    val hits = postings.join(q, Seq("token"))
+      .select(col("query_id"), col("ord"), col("token"), col("df"),
         explode(arrays_zip(col("doc_ids"), col("tfs"))).as("p"))
-      .select(col("token"), col("df"),
+      .select(col("query_id"), col("ord"), col("token"), col("df"),
         col("p.doc_ids").as("doc_id"), col("p.tfs").as("tf"))
-    val withDl = posts
-      .join(ix.docLens, Seq("doc_id"))
-      .join(broadcast(q), Seq("token"))
-      .crossJoin(broadcast(ix.stats))
+    val withDl = withStats(hits.join(docLens, Seq("doc_id")))
     val idf = graft.GraftFunctions.det_ln(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     // association order mirrors bm25 and the oracle SQL term-for-term
@@ -224,7 +235,7 @@ object SearchIndex {
       .select(col("query_id"), col("doc_id"), col("ord"), col("token"), termScore.as("s"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(
-        array_sort(collect_list(struct(col("ord"), col("token"), col("s")))),
+        array_sort(collect_set(struct(col("ord"), col("token"), col("s")))),
         lit(0.0), (a, x) => a + x.getField("s")).as("score"))
     graft.ops.TopK.rankByScore(
         perDoc.select(col("query_id").as("q_id"), col("doc_id").as("cand_id"),

@@ -1037,8 +1037,10 @@ object TextAnalysis {
     * document frequency, corpus frequency, and the posting list
     * (doc_ids sorted ascending, parallel per-doc term frequencies).
     * Index once, serve many queries from postings
-    * ([[SearchIndex.scoreTopK]]) — each query touches Σ df(term)
-    * posting entries instead of every document.
+    * ([[SearchIndex.scoreTopK]]) — each query scores Σ df(term)
+    * posting entries instead of every document (the serve's scan still
+    * reads the whole postings table; the query-token join drops the
+    * rest).
     *
     * Scale shape: (token, doc) term counts partial-aggregate map-side;
     * hot tokens (df > maxDf) are identified from the SMALL df relation
@@ -1295,9 +1297,10 @@ object TextAnalysis {
   /** [[hybridSearchTopK]] with the LEXICAL side served from a
     * persisted [[SearchIndex]] — the production hybrid shape: the
     * postings index is built once ("index once, serve many"), each
-    * query touches only its terms' postings there, and the semantic
-    * side stays the one linear hash-embed pass over the corpus. The
-    * fusion core is shared, so the two forms cannot drift.
+    * query scores only its terms' postings there (the serve scans the
+    * postings table and keeps those rows), and the semantic side stays
+    * the one linear hash-embed pass over the corpus. The fusion core
+    * is shared, so the two forms cannot drift.
     *
     * Eager, materialized; the result's lineage runs through a released
     * [[graft.ops.Caching.cut]]: set a checkpoint dir and the result
@@ -1381,8 +1384,10 @@ object TextAnalysis {
     * [[SearchIndex.scoreTopK]] core, token-order folds), its semantic
     * sides in one cell-confined pass over a persisted IVF index over
     * the [[hashEmbedVectors]] corpus ([[graft.ann.Ivf.probeTopKOnIndex]]
-    * takes a query FRAME — a serve touches nProbe cells' vectors, never
-    * the corpus), and the shared [[fuseRankListsBatch]] tail fuses per
+    * takes a query FRAME — a serve reads the IVF table, not the corpus,
+    * and scores only the nProbe probed cells' vectors: the scan reads
+    * every cell by file splits and the probe join keeps the probed
+    * ones), and the shared [[fuseRankListsBatch]] tail fuses per
     * query. Query pseudo-docs hash-embed corpus-free (hashEmbed is
     * per-doc pure, sign sums are token-order-free); query vec_ids are
     * negated (−query_id−1) so they can never collide with corpus

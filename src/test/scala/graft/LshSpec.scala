@@ -150,6 +150,22 @@ class LshSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS lsh_idx_spec")
   }
 
+  test("bucketed broadcast serve: the index scan stage runs fewer tasks than buckets") {
+    val dir = tempDir("lshstream").toString
+    LshIndex.saveBucketed(LshIndex.build(emb, p), p, "lsh_stream_spec", nBuckets = 8,
+      path = Some(dir))
+    val (loaded, lp) = LshIndex.loadBucketed(spark, "lsh_stream_spec", validate = false)
+    // an in-memory batch, so the one file scan in the serve is the index
+    val qRows = emb.filter(col("vec_id") < 5).collect()
+    val queries = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), emb.schema)
+    val scans = stagesOf(LshIndex.topKOnIndex(loaded, queries, lp, 10).collect())
+      .filter(_.rddInfos.exists(_.name == "FileScanRDD"))
+    assert(scans.nonEmpty, "no index scan stage observed")
+    assert(scans.forall(_.numTasks < 8),
+      s"index scan runs one task per bucket: ${scans.map(_.numTasks)}")
+    spark.sql("DROP TABLE IF EXISTS lsh_stream_spec")
+  }
+
   test("bucketed lifecycle: add appends under stored params; compact ≡ rebuild, one file per bucket") {
     import graft.ops.Compaction
     val thirds = (0 to 2).map(i => emb.filter(col("vec_id") % 3 === i))

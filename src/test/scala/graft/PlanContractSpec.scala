@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, GenerateExec, InputAdapter,
-  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, FormattedMode,
+  GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -481,6 +481,64 @@ class PlanContractSpec extends SparkSpec {
         case _ => false
       }, s"segment merge runs before the query-token semi-join:\n$m")
     }
+  }
+
+  /** `bucketedScan` of every scan of catalog table `table` in `df`'s
+    * final plan (`df` runs first, so adaptive stages are settled).
+    */
+  private def indexScans(df: DataFrame, table: String): Seq[Boolean] = {
+    df.collect()
+    operators(df.queryExecution.executedPlan).collect {
+      case s: FileSourceScanExec if s.tableIdentifier.exists(_.table == table) => s.bucketedScan
+    }
+  }
+
+  test("broadcast serves stream the bucketed index; shuffle forms keep the bucketed scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.ann.{Ivf, Pq}
+    import graft.lsh.{LshIndex, LshParams}
+    import graft.text.{SearchIndex, TextAnalysis}
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val queries = emb.filter(col("vec_id") < 5)
+    val cents = emb.filter(col("vec_id") < 8)
+    val p = LshParams(dim = 64, numPerm = 32, numBands = Some(8), rowsPerBand = Some(4))
+    val dir = tempDir("graft_streamed").toString
+    val tables = Seq("pc_lsh", "pc_bm25", "pc_bm25_doclen", "pc_ivf", "pc_ivf_centroids",
+      "pc_pq", "pc_pq_cells", "pc_pq_centroids")
+    LshIndex.saveBucketed(LshIndex.build(emb, p), p, "pc_lsh", nBuckets = 8,
+      path = Some(s"$dir/lsh"))
+    SearchIndex.save(Tables.load(spark, sfDir, "documents"), "pc_bm25", nBuckets = 8,
+      path = Some(s"$dir/bm25"))
+    Ivf.saveIndex(emb, cents, "pc_ivf", nBuckets = 8, path = Some(s"$dir/ivf"))
+    Pq.saveCellIndex(Pq.train(emb, m = 8, k = 16), emb, cents, "pc_pq", nBuckets = 8,
+      path = Some(s"$dir/pq"))
+    try {
+      val (lsh, lp) = LshIndex.loadBucketed(spark, "pc_lsh", validate = false)
+      val (cells, ivfCents) = Ivf.loadIndex(spark, "pc_ivf")
+      val (model, codes, pqCents) = Pq.loadCellIndex(spark, "pc_pq")
+      def streamed(df: DataFrame, table: String): Unit = {
+        val scans = indexScans(df, table)
+        assert(scans.nonEmpty && !scans.contains(true), s"$table scans bucketed: $scans")
+      }
+      def bucketed(df: DataFrame, table: String): Unit = {
+        val scans = indexScans(df, table)
+        assert(scans.nonEmpty && !scans.contains(false), s"$table scans unbucketed: $scans")
+      }
+      streamed(LshIndex.topKOnIndex(lsh, queries, lp, 10), "pc_lsh")
+      streamed(SearchIndex.searchTopKBatch(SearchIndex.load(spark, "pc_bm25"),
+        TextAnalysis.BatchQueries.toDF("query_id", "token"), k = 10), "pc_bm25")
+      streamed(Ivf.probeTopKOnIndex(cells, ivfCents, queries, 2, 5), "pc_ivf")
+      streamed(Pq.pqTopKOnCells(codes, emb, pqCents, queries, model, 2, 3, 10), "pc_pq_cells")
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, "-1")
+      try {
+        bucketed(LshIndex.topKOnIndex(lsh, queries, lp, 10, broadcastQueries = false), "pc_lsh")
+        bucketed(Ivf.probeTopKOnIndex(cells, ivfCents, queries, 2, 5), "pc_ivf")
+        bucketed(Pq.pqTopKOnCells(codes, emb, pqCents, queries, model, 2, 3, 10), "pc_pq_cells")
+      } finally spark.conf.set(key, old)
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("Partitions.widened: many-partition input passes through with NO added Exchange") {

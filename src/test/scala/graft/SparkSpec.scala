@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,19 +29,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
-  /** The number of jobs `body` submits. A marker job fences the
-    * asynchronous listener bus, which delivers one listener's events
-    * in submission order.
+  /** The number of jobs `body` submits. */
+  def jobsOf(body: => Unit): Int =
+    fenced[Unit](body)(put => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = put(e.properties, ())
+    }).size
+
+  /** The stages `body` submits, in submission order. */
+  def stagesOf(body: => Unit): Seq[StageInfo] =
+    fenced[StageInfo](body)(put => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        put(e.properties, e.stageInfo)
+    })
+
+  /** The events `body` causes, as the listener built from `listen`
+    * reports them through its `put(properties, event)`. A marker job
+    * fences the asynchronous listener bus, which delivers one
+    * listener's events in submission order.
     */
-  def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def fenced[T](body: => Unit)(
+      listen: ((java.util.Properties, T) => Unit) => SparkListener): Seq[T] = {
     val sc = spark.sparkContext
     val fence = "graft.spec.fence"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties).exists(_.getProperty(fence) != null))
-    }
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Option[T]]
+    val listener = listen((props, e) =>
+      seen.put(if (Option(props).exists(_.getProperty(fence) != null)) None else Some(e)))
     sc.addSparkListener(listener)
     try {
       body
@@ -47,7 +61,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(fence, null)
       Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
         .map(e => if (e == null) fail("listener bus did not deliver the fence") else e)
-        .takeWhile(!_.booleanValue).size
+        .takeWhile(_.isDefined).flatten.toVector
     } finally sc.removeSparkListener(listener)
   }
 

@@ -5,7 +5,8 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each at-rest decision behind its one module: the bucketed
-  * layout (bucket/sort spec, clustering, the not-bucketed refusal) in
+  * layout (bucket/sort spec, clustering, the not-bucketed refusal, the
+  * streamed read that drops the spec — through its Spark bridge) in
   * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`,
   * every lineage cut in `ops/Caching.scala`; keeps MLlib clustering in
   * its one comparator (`ann/MlLsh.scala`) and concurrent job submission
@@ -56,6 +57,16 @@ class StructureLintSpec extends AnyFunSuite {
     assert(sources(mainRoot).exists(_.getName == "Compaction.scala"))
     val hits = offenders("ops/Compaction.scala", Seq(".bucketBy(", "bucketSpec.getOrElse"))
     if (hits.nonEmpty) fail(s"bucket layout decided outside Compaction:\n${hits.mkString("\n")}")
+  }
+
+  test("the bucket-spec drop lives only in its bridge and ops/Compaction.scala") {
+    // Compaction.streamed is the one caller: it owns the read rule
+    val bridge = new File(mainRoot, "org/apache/spark/sql/GraftPlanBridge.scala")
+    assert(bridge.isFile, s"missing $bridge")
+    val owners = Set(bridge, new File(mainRoot, "graft/ops/Compaction.scala")).map(_.getCanonicalFile)
+    val hits = matches(sources(mainRoot).filterNot(f => owners(f.getCanonicalFile)),
+      Seq("bucketSpec = None", "HadoopFsRelation", "withoutBucketSpec"))
+    if (hits.nonEmpty) fail(s"bucket spec dropped outside Compaction:\n${hits.mkString("\n")}")
   }
 
   test("table-property DDL lives only in ops/TableProps.scala") {

@@ -1394,6 +1394,23 @@ class TextKnnSpec extends SparkSpec {
     }
   }
 
+  test("searchTopKBatch: repeated (query_id, token) rows score as the deduplicated batch, bit for bit") {
+    import graft.text.SearchIndex
+    val tmp = tempDir("graft_bm25_dup").toString
+    SearchIndex.save(docs, "graft_bm25_dup_spec", nBuckets = 4, path = Some(s"$tmp/tbl"))
+    val idx = SearchIndex.load(spark, "graft_bm25_dup_spec")
+    val rows = TextAnalysis.BatchQueries
+    def served(qs: Seq[(Long, String)]) =
+      SearchIndex.searchTopKBatch(idx, qs.toDF("query_id", "token"), k = 10).collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rn"), r.getAs[Long]("doc_id"),
+          java.lang.Double.doubleToLongBits(r.getAs[Double]("score")))).toSeq
+    val once = served(rows)
+    assert(once.nonEmpty)
+    assert(served(rows ++ rows.reverse ++ rows.take(2)) === once)
+    spark.sql("DROP TABLE IF EXISTS graft_bm25_dup_spec")
+    spark.sql("DROP TABLE IF EXISTS graft_bm25_dup_spec_doclen")
+  }
+
   test("hybridSearchTopKOnIndexes: probe-every-cell ≡ independently fused exact ranks") {
     import graft.text.SearchIndex
     val terms = TextAnalysis.Bm25Terms
