@@ -196,12 +196,8 @@ object Ivf {
         Seq("vec_id"))
     graft.ops.Concurrency.all(
       () => graft.ops.Compaction.saveBucketed(cells, table, nBuckets, path, "cell"),
-      () => {
-        val wc = centroids.select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite").format("parquet")
-        path.foreach(loc => wc.option("path", s"${loc}_centroids"))
-        wc.saveAsTable(s"${table}_centroids")
-      })
+      () => graft.ops.Compaction.saveTable(centroids.select(col("vec_id"), col("embedding")),
+        s"${table}_centroids", path.map(loc => s"${loc}_centroids")))
   }
 
   /** Restore (cells, centroids) from a [[saveIndex]] table pair. */

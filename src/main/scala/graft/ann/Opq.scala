@@ -107,10 +107,7 @@ object Opq {
     */
   def train(emb: DataFrame, m: Int = 8, k: Int = 16,
       maxIter: Int = 10, sampleFrac: Double = 0.1): OpqModel = {
-    val fitSrc =
-      if (sampleFrac >= 1.0) emb
-      else emb.filter(col("vec_id") % math.round(1.0 / sampleFrac) === 0)
-    val rotation = fitRotation(fitSrc, m)
+    val rotation = fitRotation(graft.ops.Sampling.idGate(emb, "vec_id", sampleFrac), m)
     OpqModel(rotation.length, rotation,
       Pq.train(rotate(emb, rotation), m, k, maxIter, sampleFrac))
   }
@@ -127,7 +124,7 @@ object Opq {
       model.pq, k, prefilterK, broadcastQueries)
 
   /** Persist the rotation as a (r, dim, value) long table with d in
-    * TBLPROPERTIES — the [[Pca.saveModel]] model-at-rest layout.
+    * TBLPROPERTIES, written by [[graft.ops.Compaction.saveTable]].
     */
   def saveRotation(rotation: Array[Array[Double]], spark: SparkSession,
       table: String, path: Option[String] = None): Unit = {
@@ -136,12 +133,8 @@ object Opq {
       r <- rotation.indices
       j <- rotation(r).indices
     } yield (r, j, rotation(r)(j))
-    val w = rows.toDF("r", "dim", "value")
-      .coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.opq.params",
-      s"""{"d":${rotation.length}}""")
+    graft.ops.Compaction.saveTable(rows.toDF("r", "dim", "value").coalesce(1), table, path,
+      "graft.opq.params" -> s"""{"d":${rotation.length}}""")
   }
 
   /** Restore a [[saveRotation]]ed matrix (d² rows — kilobytes). */

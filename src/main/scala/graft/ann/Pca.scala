@@ -185,8 +185,9 @@ object Pca {
       projector = v => projectCol(v, model))
 
   /** Persist the fitted model as a (kind, idx, dim, value) long table
-    * with shape params in TBLPROPERTIES (the QualityClassifier
-    * model-at-rest layout — the artifact travels WITH its params).
+    * with shape params in TBLPROPERTIES, written by
+    * [[graft.ops.Compaction.saveTable]] — the artifact travels WITH
+    * its params.
     */
   def saveModel(model: PcaModel, spark: SparkSession, table: String,
       path: Option[String] = None): Unit = {
@@ -196,12 +197,9 @@ object Pca {
       model.eigenvalues.zipWithIndex.map { case (v, c) => ("eigenvalue", c, 0, v) } ++
       model.components.zipWithIndex.flatMap { case (w, c) =>
         w.zipWithIndex.map { case (v, i) => ("component", c, i, v) } }
-    val w = rows.toSeq.toDF("kind", "idx", "dim", "value")
-      .coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.pca.params",
-      s"""{"d":${model.d},"k":${model.k}}""")
+    graft.ops.Compaction.saveTable(
+      rows.toSeq.toDF("kind", "idx", "dim", "value").coalesce(1), table, path,
+      "graft.pca.params" -> s"""{"d":${model.d},"k":${model.k}}""")
   }
 
   /** Restore a [[saveModel]]ed model (k·d + k + d rows — kilobytes,

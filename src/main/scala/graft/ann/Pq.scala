@@ -111,13 +111,10 @@ object Pq {
       .filter(col("nv").isNotNull)
   }
 
-  /** Deterministic training sample: `vec_id % round(1/frac) == 0`. */
+  /** Deterministic training sample ([[graft.ops.Sampling.idGate]]). */
   private def sample(emb: DataFrame, sampleFrac: Double, k: Int): DataFrame = {
     require(k >= 2 && k <= 127, s"k=$k must be in [2, 127] (codes are tinyint)")
-    require(sampleFrac > 0.0 && sampleFrac <= 1.0,
-      s"sampleFrac=$sampleFrac must be in (0, 1]")
-    if (sampleFrac >= 1.0) emb
-    else emb.filter(col("vec_id") % math.round(1.0 / sampleFrac) === 0)
+    graft.ops.Sampling.idGate(emb, "vec_id", sampleFrac)
   }
 
   /** The one codebook fit: Lloyd over all m subspaces at once on a
@@ -183,11 +180,8 @@ object Pq {
     */
   def save(model: PqModel, spark: SparkSession, table: String,
       path: Option[String] = None): Unit = {
-    val w = model.frame(spark).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.pq.params",
-      s"""{"m":${model.m},"k":${model.k},"d_sub":${model.dSub}}""")
+    graft.ops.Compaction.saveTable(model.frame(spark), table, path,
+      "graft.pq.params" -> s"""{"m":${model.m},"k":${model.k},"d_sub":${model.dSub}}""")
   }
 
   /** Restore a [[PqModel]] from a [[save]]d table. The collect is the
@@ -285,9 +279,8 @@ object Pq {
   def saveIndex(model: PqModel, corpus: DataFrame, table: String,
       path: Option[String] = None): Unit = {
     save(model, corpus.sparkSession, table, path)
-    val wc = encode(corpus, model).write.mode("overwrite").format("parquet")
-    path.foreach(loc => wc.option("path", s"${loc}_codes"))
-    wc.saveAsTable(s"${table}_codes")
+    graft.ops.Compaction.saveTable(encode(corpus, model), s"${table}_codes",
+      path.map(loc => s"${loc}_codes"))
   }
 
   /** Restore (model, codes) from a [[saveIndex]] table pair. */
@@ -507,12 +500,8 @@ object Pq {
           "graft.pq.cells_params",
           s"""{"residual":${if (residual) 1 else 0},"n_probe":$nProbe}""")
       },
-      () => {
-        val wct = centroids.select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite").format("parquet")
-        path.foreach(loc => wct.option("path", s"${loc}_centroids"))
-        wct.saveAsTable(s"${table}_centroids")
-      })
+      () => graft.ops.Compaction.saveTable(centroids.select(col("vec_id"), col("embedding")),
+        s"${table}_centroids", path.map(loc => s"${loc}_centroids")))
   }
 
   /** Restore (model, cells, centroids) from a [[saveCellIndex]] table

@@ -38,6 +38,13 @@ import org.apache.spark.sql.functions.col
   * scan uses the bucket layout, and a bucketed scan is one task per
   * bucket (32 tasks on a 4-core box; at scale, `nBuckets` tasks each
   * reading 1/`nBuckets` of the index however many cores there are).
+  *
+  * Every UNBUCKETED table — model tables (PQ codebooks, OPQ rotation,
+  * PCA, BPE merges, DSIR llr, topic centroids, the linear classifiers),
+  * the PQ code and centroid siblings, the quota ledger — is written by
+  * [[saveTable]]: overwrite as parquet, external at the given path,
+  * parameters set as table properties after the write. It writes the
+  * frame as given; a caller that wants one file coalesces first.
   */
 object Compaction {
 
@@ -60,6 +67,18 @@ object Compaction {
       .format("parquet")
     path.foreach(loc => w.option("path", loc))
     w.saveAsTable(table)
+  }
+
+  /** Overwrite unbucketed `table` with `df` as parquet, external at
+    * `path` when given, then set each of `props` as a table property.
+    * No repartition or coalesce: the write plans `df`'s own job.
+    */
+  private[graft] def saveTable(df: DataFrame, table: String, path: Option[String],
+      props: (String, String)*): Unit = {
+    val w = df.write.mode("overwrite").format("parquet")
+    path.foreach(loc => w.option("path", loc))
+    w.saveAsTable(table)
+    props.foreach { case (k, v) => TableProps.set(df.sparkSession, table, k, v) }
   }
 
   /** Append `df` to a [[saveBucketed]] table under the bucket count,

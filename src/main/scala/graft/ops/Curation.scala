@@ -640,13 +640,10 @@ object Curation {
   def initQuotaLedger(spark: org.apache.spark.sql.SparkSession,
       table: String, path: Option[String] = None): Unit = {
     import org.apache.spark.sql.types._
-    val w = spark.createDataFrame(
+    Compaction.saveTable(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("domain", StringType),
-        StructField("n_admitted", LongType))))
-      .write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
+        StructField("n_admitted", LongType)))), table, path)
   }
 
   /** Admit a batch against the ledger: each domain's additions rank

@@ -37,6 +37,17 @@ object Sampling {
       salt: String = "sample"): DataFrame =
     df.filter(hashBucket(key, salt) < lit((rate * Granularity).toLong))
 
+  /** The deterministic training gate of the model fits (PQ/OPQ
+    * codebooks, the linear classifiers): rows whose integer `id` is a
+    * multiple of `round(1/frac)` — no hash, no RNG state, the same
+    * rows on every run and engine. `frac` outside (0, 1] is refused
+    * here, before any caller builds a plan on the gated rows.
+    */
+  private[graft] def idGate(df: DataFrame, id: String, frac: Double): DataFrame = {
+    require(frac > 0.0 && frac <= 1.0, s"sampleFrac=$frac must be in (0, 1]")
+    if (frac >= 1.0) df else df.filter(col(id) % math.round(1.0 / frac) === 0)
+  }
+
   /** Weighted sample WITHOUT replacement (Efraimidis & Spirakis 2006,
     * algorithm A-Res): each row draws a key `ln(u)/w` from its own
     * hash-derived uniform `u` and weight `w > 0`; the k LARGEST keys

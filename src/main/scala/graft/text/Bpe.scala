@@ -277,20 +277,17 @@ object Bpe {
           col("n_bpe_tokens").cast("double") / col("n_words").cast("double")))
 
   /** Persist a learned merge list as a (rank, a, b) table with the
-    * merge count in TBLPROPERTIES — the model-at-rest layout shared
-    * with [[QualityClassifier.saveModel]] / [[Dsir.saveLlr]].
+    * merge count in TBLPROPERTIES, written by
+    * [[graft.ops.Compaction.saveTable]] like every model table.
     */
   def saveModel(model: BpeModel, spark: SparkSession, table: String,
       path: Option[String] = None): Unit = {
     import spark.implicits._
-    val w = model.merges.zipWithIndex
+    val rows = model.merges.zipWithIndex
       .map { case ((a, b), i) => (i, a, b) }
       .toDF("rank", "a", "b")
-      .coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.bpe.params",
-      s"""{"n_merges":${model.merges.size}}""")
+    graft.ops.Compaction.saveTable(rows.coalesce(1), table, path,
+      "graft.bpe.params" -> s"""{"n_merges":${model.merges.size}}""")
   }
 
   /** Restore a [[saveModel]]ed merge list in rank order (the collect

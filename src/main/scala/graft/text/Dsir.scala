@@ -163,19 +163,14 @@ object Dsir {
   }
 
   /** Persist a fitted llr table with its hashing parameters in
-    * TBLPROPERTIES — the model-at-rest layout shared with
-    * [[QualityClassifier.saveModel]] / [[graft.ann.Pq]]: the artifact
-    * carries B and the fixed-point scale, so a loader can refuse a
-    * mismatched serving configuration instead of silently mis-hashing.
+    * TBLPROPERTIES, written by [[graft.ops.Compaction.saveTable]] like
+    * every model table: the artifact carries B and the fixed-point
+    * scale, so a loader can refuse a mismatched serving configuration
+    * instead of silently mis-hashing.
     */
-  def saveLlr(llr: DataFrame, table: String, path: Option[String] = None): Unit = {
-    val spark = llr.sparkSession
-    val w = llr.coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.dsir.params",
-      s"""{"num_buckets":$NumBuckets,"scale":$Scale}""")
-  }
+  def saveLlr(llr: DataFrame, table: String, path: Option[String] = None): Unit =
+    graft.ops.Compaction.saveTable(llr.coalesce(1), table, path,
+      "graft.dsir.params" -> s"""{"num_buckets":$NumBuckets,"scale":$Scale}""")
 
   /** Restore a [[saveLlr]]ed table, validating the hashing params. */
   def loadLlr(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame = {

@@ -1,12 +1,8 @@
 package graft.text
 
-import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-
-import graft.GraftFunctions
 
 /** Learned language ID — the [[QualityClassifier]] loop (weak labels →
   * multinomial LR on hash-embed features → codegen dot-product
@@ -20,12 +16,12 @@ import graft.GraftFunctions
   * (Joulin et al. 2016: averaged hashed n-gram embeddings + linear
   * softmax), built from the engine's own pieces.
   *
-  * Train/serve split is the [[QualityClassifier]] one: MLlib fit over
-  * a deterministic `doc_id`-gated sample; serving = per-class
-  * `w_c·x + b_c` with the weights as plan literals in the shared
-  * codegen [[graft.expressions.DotProduct]] kernel, argmax via one
-  * `array_max` over (score, −class) structs — no UDF, no Window, no
-  * model object at scoring time. At 100 TB the scoring pass is a
+  * Train/serve split is the [[QualityClassifier]] one, through the
+  * same [[Linear]] core: MLlib fit over a deterministic `doc_id`-gated
+  * sample; serving = per-class `w_c·x + b_c` with the weights as plan
+  * literals in the shared codegen [[graft.expressions.DotProduct]]
+  * kernel, argmax via one `array_max` over (score, −class) structs —
+  * no UDF, no Window, no model object at scoring time. At 100 TB the scoring pass is a
   * narrow map: |langs|·d multiplies per doc.
   */
 object LangClassifier {
@@ -103,53 +99,29 @@ object LangClassifier {
       .select(col("doc_id"),
         (array_position(typedlit(langs), col("pred_lang")) - 1).as("label"))
 
-  /** Fit multinomial LR on hash-embed features against weak labels,
-    * sampled by the deterministic `doc_id % round(1/frac)` gate (the
-    * [[graft.ann.Pq.train]] idiom). Every class must appear in the
-    * sampled labels — a missing class would silently shrink the
-    * coefficient matrix and misalign [[langs]].
+  /** Fit on hash-embed features against the weak labels through the
+    * shared [[Linear.train]]: `doc_id`-gated sample, multinomial over
+    * the |[[langs]]| classes. Every language must appear in the sampled
+    * labels — a missing class would fit weight rows that no longer
+    * line up with [[langs]].
     */
   def train(docs: DataFrame, d: Int = 256, maxIter: Int = 50,
       regParam: Double = 1e-3, sampleFrac: Double = 1.0): LangModel = {
-    require(sampleFrac > 0.0 && sampleFrac <= 1.0,
-      s"sampleFrac=$sampleFrac must be in (0, 1]")
-    val lab0 = weakLabels(docs)
-    val lab =
-      if (sampleFrac >= 1.0) lab0
-      else lab0.filter(col("doc_id") % math.round(1.0 / sampleFrac) === 0)
-    // features only for the sampled subset: the semi-join runs BEFORE
-    // the O(tokens) feature build
-    val sub = docs.join(lab.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val tr = QualityClassifier.features(sub, d).join(lab, Seq("doc_id"))
-      .select(array_to_vector(col("embedding")).as("features"),
-        col("label").cast("double").as("label"))
-      .coalesce(8)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = new LogisticRegression()
-      .setMaxIter(maxIter).setRegParam(regParam).setFamily("multinomial")
-      .fit(tr)
-    tr.unpersist(false)
-    require(m.numClasses == langs.length,
-      s"sampled labels cover ${m.numClasses} of ${langs.length} languages — " +
-        "widen sampleFrac or the corpus")
-    val w = Array.tabulate(langs.length, d)((c, j) =>
-      m.coefficientMatrix(c, j).toFloat)
-    LangModel(langs, w, m.interceptVector.toArray, d)
+    val w = Linear.train(docs, weakLabels(docs), d, langs.length, maxIter,
+      regParam, sampleFrac)
+    LangModel(langs, w.rows, w.intercepts, d)
   }
 
-  private def classScore(model: LangModel, c: Int): Column =
-    GraftFunctions.dot_product(col("embedding"), typedlit(model.weights(c))) +
-      lit(model.intercepts(c))
-
-  /** Score a feature frame: argmax over per-class linear scores, ties
-    * to the earlier language (the heuristic's priority order) via
-    * `array_max` over (score, −class) structs. Pure codegen
-    * projection — no UDF, no Window (plan-asserted in
+  /** Score a feature frame: argmax over the per-class
+    * [[Linear.score]]s, ties to the earlier language (the heuristic's
+    * priority order) via `array_max` over (score, −class) structs.
+    * Pure codegen projection — no UDF, no Window (plan-asserted in
     * LangClassifierSpec).
     */
   def scoreFeatures(feats: DataFrame, model: LangModel): DataFrame = {
     val packed = array(model.langs.indices.map(c =>
-      struct(classScore(model, c).as("z"), lit(-c).as("ni"))): _*)
+      struct(Linear.score(model.weights(c), model.intercepts(c)).as("z"),
+        lit(-c).as("ni"))): _*)
     feats
       .withColumn("best", array_max(packed))
       .select(col("doc_id"),
@@ -161,47 +133,24 @@ object LangClassifier {
   def score(docs: DataFrame, model: LangModel): DataFrame =
     scoreFeatures(QualityClassifier.features(docs, model.d), model)
 
-  /** Persist: (lang_idx, dim, weight) rows — dim −1 carries the
-    * intercept at full double width — with d/langs in TBLPROPERTIES
-    * (the [[QualityClassifier.saveModel]] layout, one table for the
-    * whole per-class matrix).
+  /** Persist in the [[Linear.save]] layout — one weight row per
+    * language, intercepts at dim −1 — with d/langs in the
+    * `graft.langid.params` property.
     */
   def saveModel(model: LangModel, spark: SparkSession, table: String,
-      path: Option[String] = None): Unit = {
-    import spark.implicits._
-    val rows = model.langs.indices.flatMap { c =>
-      (-1 +: (0 until model.d)).map { j =>
-        (c, j, if (j < 0) model.intercepts(c) else model.weights(c)(j).toDouble)
-      }
-    }
-    val w = rows.toDF("lang_idx", "dim", "weight")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.langid.params",
-      s"""{"d":${model.d},"langs":"${model.langs.mkString(",")}"}""")
-  }
+      path: Option[String] = None): Unit =
+    Linear.save(spark, table, path, Linear.Weights(model.weights, model.intercepts),
+      "graft.langid.params" -> s"""{"d":${model.d},"langs":"${model.langs.mkString(",")}"}""")
 
-  /** Restore a [[saveModel]]ed model (|langs|·(d+1) rows — kilobytes,
-    * driver-sized by construction).
+  /** Restore a [[saveModel]]ed model; a table without
+    * `graft.langid.params` is refused by that name.
     */
   def loadModel(spark: SparkSession, table: String): LangModel = {
-    val json = graft.ops.TableProps.get(spark, table, "graft.langid.params")
-    val d = graft.ops.TableProps.longField(json, "d").toInt
+    val (json, w) = Linear.load(spark, table, "graft.langid.params")
     val ls = graft.ops.TableProps.stringField(json, "langs").split(",").toSeq
-    val w = Array.ofDim[Float](ls.length, d)
-    val b = new Array[Double](ls.length)
-    var seen = 0
-    spark.table(table).collect().foreach { r =>
-      val c = r.getAs[Int]("lang_idx"); val j = r.getAs[Int]("dim")
-      if (j < 0) b(c) = r.getAs[Double]("weight")
-      else w(c)(j) = r.getAs[Double]("weight").toFloat
-      seen += 1
-    }
-    require(seen == ls.length * (d + 1),
-      s"table $table has $seen weight rows, expected ${ls.length * (d + 1)}")
-    LangModel(ls, w, b, d)
+    require(w.rows.length == ls.length,
+      s"table $table has ${w.rows.length} weight rows for ${ls.length} languages")
+    LangModel(ls, w.rows, w.intercepts, w.rows.head.length)
   }
 
   /** The driver row: plant the multilingual corpus, train on the
@@ -213,7 +162,7 @@ object LangClassifier {
     * recall bounds are pinned in LangClassifierSpec.
     */
   def trainScoreQuery(docs: DataFrame, d: Int = 256,
-      sampleFrac: Double = 0.25,
+      sampleFrac: Double = QualityClassifier.DefaultTrainSampleFrac,
       maxIter: Int = QualityClassifier.DriverRowMaxIter): DataFrame = {
     val planted = plantedCorpus(docs).persist(StorageLevel.MEMORY_AND_DISK)
     val model = train(planted, d, maxIter = maxIter, sampleFrac = sampleFrac)
@@ -236,7 +185,7 @@ object LangClassifier {
     */
   def trainSaveScoreQuery(docs: DataFrame, table: String,
       path: Option[String] = None, d: Int = 256,
-      sampleFrac: Double = 0.25,
+      sampleFrac: Double = QualityClassifier.DefaultTrainSampleFrac,
       maxIter: Int = QualityClassifier.DriverRowMaxIter): DataFrame = {
     val spark = docs.sparkSession
     val planted = plantedCorpus(docs).persist(StorageLevel.MEMORY_AND_DISK)

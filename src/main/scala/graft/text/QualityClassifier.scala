@@ -1,12 +1,8 @@
 package graft.text
 
-import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-
-import graft.GraftFunctions
 
 /** Learned quality filter — the fasttext-style classifier tier real
   * pipelines layer over rule batteries (GPT-3 §A trained LR against a
@@ -19,7 +15,8 @@ import graft.GraftFunctions
   *   hash-embed features → serve scores with a codegen dot product.
   *
   * Train/serve split mirrors the ANN family: TRAINING is an MLlib fit
-  * (distributed L-BFGS treeAggregate — the one place a Vector UDF
+  * ([[Linear.fit]], shared with [[LangClassifier]]; distributed L-BFGS
+  * treeAggregate — the one place a Vector UDF
   * conversion is unavoidable, same boundary as [[graft.ann.MlLsh]])
   * over a deterministic `doc_id`-gated SAMPLE of the corpus (the
   * [[graft.ann.Pq.train]] precedent: at 100 TB nobody fits 50 L-BFGS
@@ -32,9 +29,9 @@ import graft.GraftFunctions
   * after the O(tokens) sparse feature build.
   *
   * The fitted model joins the index-at-rest family
-  * ([[saveModel]]/[[loadModel]] — weight rows + params in
-  * TBLPROPERTIES, the [[graft.ann.Pq.save]] layout): train once,
-  * score many, across sessions.
+  * ([[saveModel]]/[[loadModel]] — the [[Linear]] (row, dim, weight)
+  * layout, `d` in TBLPROPERTIES): train once, score many, across
+  * sessions.
   *
   * Separation on planted good/bad corpora, the sigmoid recount, the
   * no-UDF/no-Window serving-plan contract, sampled-vs-full parity,
@@ -80,72 +77,39 @@ object QualityClassifier {
   def features(docs: DataFrame, d: Int = 256): DataFrame =
     TextAnalysis.hashEmbedVectors(docs, d)
 
-  /** Deterministic training gate — `doc_id % round(1/frac) == 0`, the
-    * [[graft.ann.Pq]] sampling idiom (reproducible across runs and
-    * engines, no RNG state to thread).
-    */
-  private def sampleLabels(labels: DataFrame, sampleFrac: Double): DataFrame = {
-    require(sampleFrac > 0.0 && sampleFrac <= 1.0,
-      s"sampleFrac=$sampleFrac must be in (0, 1]")
-    if (sampleFrac >= 1.0) labels
-    else labels.filter(col("doc_id") % math.round(1.0 / sampleFrac) === 0)
-  }
-
-  /** Fit LR against an ALREADY-BUILT feature frame (so a caller that
+  /** Fit against an ALREADY-BUILT feature frame (so a caller that
     * scores the same corpus — [[trainScoreQuery]] — builds features
-    * once). Deterministic given the data (seeded by being seedless:
-    * L-BFGS from a zero start; float-sum order across partitions
-    * makes the last ulps run-dependent, which is why the driver rows
-    * are declared rows-only).
+    * once): the shared [[Linear.fit]], binomial on labels {0, 1}, both
+    * of which the `doc_id`-gated sample must hold. Deterministic given
+    * the data (seedless L-BFGS from a zero start; float-sum order
+    * across partitions makes the last ulps run-dependent, which is why
+    * the driver rows are declared rows-only).
     */
   def trainOnFeatures(feats: DataFrame, labels: DataFrame, d: Int,
       maxIter: Int = 50, regParam: Double = 1e-3,
-      sampleFrac: Double = 1.0): QualityModel = {
-    // the sampled training set is batch-bounded — compact it to a few
-    // partitions so each of the maxIter treeAggregate passes is a
-    // handful of tasks, not a full grid of near-empty ones (at 100 TB
-    // the sample is the only thing the iterations ever touch)
-    val tr = feats.join(sampleLabels(labels, sampleFrac), Seq("doc_id"))
-      .select(array_to_vector(col("embedding")).as("features"),
-        col("label").cast("double").as("label"))
-      .coalesce(8)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m = new LogisticRegression()
-      .setMaxIter(maxIter).setRegParam(regParam)
-      .fit(tr)
-    tr.unpersist(false)
-    // a single-class training set fits a degenerate ±∞ intercept that
-    // only explodes later (unparseable at saveModel/JSON time) — fail
-    // at the fit with the actionable cause instead
-    require(!m.intercept.isInfinity && !m.intercept.isNaN,
-      "training labels cover a single class — the fitted intercept is " +
-        s"${m.intercept}; widen the corpus or the label rule")
-    QualityModel(m.coefficients.toArray.map(_.toFloat), m.intercept, d)
-  }
+      sampleFrac: Double = 1.0): QualityModel =
+    fromWeights(Linear.fit(feats, labels, 2, maxIter, regParam, sampleFrac), d)
 
-  /** Fit LR on hash-embed features joined to `labels` (doc_id,
+  /** Fit on hash-embed features joined to `labels` (doc_id,
     * label∈{0,1}). Features are built only for the sampled subset —
     * the semi-join runs BEFORE the O(tokens) feature build.
     */
   def train(docs: DataFrame, labels: DataFrame, d: Int = 256,
       maxIter: Int = 50, regParam: Double = 1e-3,
-      sampleFrac: Double = 1.0): QualityModel = {
-    val lab = sampleLabels(labels, sampleFrac)
-    val sub =
-      if (sampleFrac >= 1.0) docs
-      else docs.join(lab.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    trainOnFeatures(features(sub, d), lab, d, maxIter, regParam)
-  }
+      sampleFrac: Double = 1.0): QualityModel =
+    fromWeights(Linear.train(docs, labels, d, 2, maxIter, regParam, sampleFrac), d)
+
+  private def fromWeights(w: Linear.Weights, d: Int): QualityModel =
+    QualityModel(w.rows.head, w.intercepts.head, d)
 
   /** Score an already-built feature frame: (doc_id, quality_prob,
-    * quality_pred). The weights array is a plan literal — no UDF, no
-    * model broadcast machinery, the dot product is the codegen kernel
-    * shared with the ANN scan tiers (plan-asserted: no UDF, no
-    * Window).
+    * quality_pred), `quality_prob = sigmoid(`[[Linear.score]]`)`. The
+    * weights array is a plan literal — no UDF, no model broadcast
+    * machinery, the dot product is the codegen kernel shared with the
+    * ANN scan tiers (plan-asserted: no UDF, no Window).
     */
   def scoreFeatures(feats: DataFrame, model: QualityModel): DataFrame = {
-    val z = GraftFunctions.dot_product(col("embedding"), typedlit(model.weights)) +
-      lit(model.intercept)
+    val z = Linear.score(model.weights, model.intercept)
     feats
       .select(col("doc_id"),
         (lit(1.0) / (lit(1.0) + exp(-z))).as("quality_prob"))
@@ -156,39 +120,24 @@ object QualityClassifier {
   def score(docs: DataFrame, model: QualityModel): DataFrame =
     scoreFeatures(features(docs, model.d), model)
 
-  /** Persist a fitted model as a (dim, weight) table with
-    * d/intercept in TBLPROPERTIES — the [[graft.ann.Pq.save]] layout:
-    * the artifact lives WITH its parameters, not in caller lore.
+  /** Persist a fitted model in the [[Linear.save]] layout — one weight
+    * row, its intercept at dim −1 — with `d` in the
+    * `graft.quality.params` property: the artifact lives WITH its
+    * parameters, not in caller lore.
     */
   def saveModel(model: QualityModel, spark: SparkSession, table: String,
-      path: Option[String] = None): Unit = {
-    import spark.implicits._
-    val w = model.weights.toSeq.zipWithIndex.map { case (wt, i) => (i, wt) }
-      .toDF("dim", "weight")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-    path.foreach(loc => w.option("path", loc))
-    w.saveAsTable(table)
-    graft.ops.TableProps.set(spark, table, "graft.quality.params",
-      s"""{"d":${model.d},"intercept":${model.intercept}}""")
-  }
+      path: Option[String] = None): Unit =
+    Linear.save(spark, table, path,
+      Linear.Weights(Array(model.weights), Array(model.intercept)),
+      "graft.quality.params" -> s"""{"d":${model.d}}""")
 
-  /** Restore a [[saveModel]]ed model. The collect is the weight
-    * vector itself (d rows, kilobytes) — driver-sized by
-    * construction, like the PQ codebook load.
+  /** Restore a [[saveModel]]ed model; a table without
+    * `graft.quality.params` is refused by that name.
     */
   def loadModel(spark: SparkSession, table: String): QualityModel = {
-    val json = graft.ops.TableProps.get(spark, table, "graft.quality.params")
-    val d = graft.ops.TableProps.longField(json, "d").toInt
-    val intercept = graft.ops.TableProps.doubleField(json, "intercept")
-    val w = new Array[Float](d)
-    val seen = new Array[Boolean](d)
-    spark.table(table).collect().foreach { r =>
-      val i = r.getAs[Int]("dim")
-      w(i) = r.getAs[Float]("weight"); seen(i) = true
-    }
-    require(seen.forall(identity), s"table $table has missing weight dims")
-    QualityModel(w, intercept, d)
+    val (_, w) = Linear.load(spark, table, "graft.quality.params")
+    require(w.rows.length == 1, s"table $table has ${w.rows.length} weight rows, expected 1")
+    fromWeights(w, w.rows.head.length)
   }
 
   /** The driver row: weak-label → train (sampled) → score the same

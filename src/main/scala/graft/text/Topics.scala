@@ -86,19 +86,14 @@ object Topics {
     */
   def saveTopics(docs: DataFrame, table: String, nCentroids: Int = 8,
       topTerms: Int = 5, d: Int = 64, path: Option[String] = None): Unit = {
-    val spark = docs.sparkSession
     val cw = TextAnalysis.hashEmbedSparse(docs, d)
       .filter(col("doc_id") < nCentroids)
       .select(col("doc_id").as("c_id"), col("dim"), col("w"))
-    val w0 = cw.coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w0.option("path", s"$loc/centroids"))
-    w0.saveAsTable(table)
-    val w1 = topics(docs, nCentroids, topTerms, d)
-      .coalesce(1).write.mode("overwrite").format("parquet")
-    path.foreach(loc => w1.option("path", s"$loc/terms"))
-    w1.saveAsTable(s"${table}_terms")
-    graft.ops.TableProps.set(spark, table, "graft.topics.params",
-      s"""{"nCentroids":$nCentroids,"topTerms":$topTerms,"d":$d}""")
+    // terms first: the centroid table's property marks a complete save
+    graft.ops.Compaction.saveTable(topics(docs, nCentroids, topTerms, d).coalesce(1),
+      s"${table}_terms", path.map(loc => s"$loc/terms"))
+    graft.ops.Compaction.saveTable(cw.coalesce(1), table, path.map(loc => s"$loc/centroids"),
+      "graft.topics.params" -> s"""{"nCentroids":$nCentroids,"topTerms":$topTerms,"d":$d}""")
   }
 
   /** Assign a corpus to the PERSISTED cluster space: sparse cosine of

@@ -90,4 +90,38 @@ class LangClassifierSpec extends SparkSpec {
       assert(served.toSeq === fresh.toSeq)
     } finally spark.sql("DROP TABLE IF EXISTS graft_langid_model_spec")
   }
+
+  test("labels with no row of one language are refused at the fit") {
+    // drop every doc the heuristic labels `de` (class 1): the top class
+    // still appears, so the label count alone would look complete
+    val noDe = planted.join(TextAnalysis.langId(planted)
+      .filter(col("pred_lang") === "de").select(col("doc_id")), Seq("doc_id"), "left_anti")
+    val e = intercept[IllegalArgumentException](LangClassifier.train(noDe, d = 64))
+    assert(e.getMessage.contains("classes 0..3"), e.getMessage)
+  }
+
+  test("a quality table does not load as a language model, nor the reverse") {
+    val lm = LangClassifier.LangModel(LangClassifier.langs,
+      Array.fill(LangClassifier.langs.length, 16)(0.5f),
+      Array.fill(LangClassifier.langs.length)(0.25), 16)
+    val qm = graft.text.QualityClassifier.QualityModel(Array.fill(16)(0.5f), 0.25, 16)
+    LangClassifier.saveModel(lm, spark, "graft_langid_cross_spec")
+    graft.text.QualityClassifier.saveModel(qm, spark, "graft_quality_cross_spec")
+    try {
+      val asQuality = intercept[RuntimeException](
+        graft.text.QualityClassifier.loadModel(spark, "graft_langid_cross_spec"))
+      assert(asQuality.getMessage.contains("has no graft.quality.params property"),
+        asQuality.getMessage)
+      val asLang = intercept[RuntimeException](
+        LangClassifier.loadModel(spark, "graft_quality_cross_spec"))
+      assert(asLang.getMessage.contains("has no graft.langid.params property"),
+        asLang.getMessage)
+      val back = LangClassifier.loadModel(spark, "graft_langid_cross_spec")
+      assert(back.weights.map(_.toSeq).toSeq === lm.weights.map(_.toSeq).toSeq)
+      assert(back.intercepts.toSeq === lm.intercepts.toSeq)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_langid_cross_spec")
+      spark.sql("DROP TABLE IF EXISTS graft_quality_cross_spec")
+    }
+  }
 }

@@ -157,4 +157,13 @@ class OpqSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_opq_spec_rt_codes")
     spark.sql("DROP TABLE IF EXISTS graft_opq_spec_rt_rot")
   }
+
+  test("sampleFrac outside (0, 1] is refused before the rotation fit runs a job") {
+    var err: Option[IllegalArgumentException] = None
+    val jobs = jobsOf {
+      err = Some(intercept[IllegalArgumentException](Opq.train(planted, m = 4, sampleFrac = 0.0)))
+    }
+    assert(err.get.getMessage.contains("sampleFrac=0.0"))
+    assert(jobs === 0)
+  }
 }

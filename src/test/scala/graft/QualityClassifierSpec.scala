@@ -122,4 +122,38 @@ class QualityClassifierSpec extends SparkSpec {
       val p = r.getAs[Double]("quality_prob"); p >= 0.0 && p <= 1.0
     })
   }
+
+  test("single-class labels are refused at the fit") {
+    val feats = QualityClassifier.features(docs, d = 64)
+    val allGood = QualityClassifier.weakLabels(docs).withColumn("label", lit(1))
+    val e = intercept[IllegalArgumentException](
+      QualityClassifier.trainOnFeatures(feats, allGood, d = 64))
+    assert(e.getMessage.contains("classes 0..1"), e.getMessage)
+  }
+
+  test("at-rest layout: one (row, dim, weight) row per dim, the intercept at dim -1") {
+    val model = QualityClassifier.QualityModel(Array.tabulate(64)(i => i / 7f), -0.3125, 64)
+    QualityClassifier.saveModel(model, spark, "graft_quality_spec_layout")
+    try {
+      val t = spark.table("graft_quality_spec_layout")
+      assert(t.columns.toSeq === Seq("row", "dim", "weight"))
+      val rows = t.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      assert(rows.size === 65)
+      assert(rows((0, -1)) === -0.3125)
+      assert((0 until 64).forall(j => rows((0, j)) === (j / 7f).toDouble))
+    } finally spark.sql("DROP TABLE IF EXISTS graft_quality_spec_layout")
+  }
+
+  test("saving twice to one external path leaves one copy of the rows") {
+    val model = QualityClassifier.QualityModel(Array.fill(64)(0.01f), -0.5, 64)
+    val path = Some(s"${tempDir("graft_qmodel_twice")}/tbl")
+    try {
+      QualityClassifier.saveModel(model, spark, "graft_quality_spec_twice", path)
+      QualityClassifier.saveModel(model.copy(intercept = 0.25), spark,
+        "graft_quality_spec_twice", path)
+      assert(spark.table("graft_quality_spec_twice").count() === 65)
+      assert(spark.read.parquet(path.get).count() === 65)
+      assert(QualityClassifier.loadModel(spark, "graft_quality_spec_twice").intercept === 0.25)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_quality_spec_twice")
+  }
 }

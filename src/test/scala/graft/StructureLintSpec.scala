@@ -6,10 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps each at-rest decision behind its one module: the bucketed
   * layout (bucket/sort spec, clustering, the not-bucketed refusal, the
-  * streamed read that drops the spec — through its Spark bridge) in
-  * `ops/Compaction.scala`, table-property DDL in `ops/TableProps.scala`,
-  * every lineage cut in `ops/Caching.scala`; keeps MLlib clustering in
-  * its one comparator (`ann/MlLsh.scala`) and concurrent job submission
+  * streamed read that drops the spec — through its Spark bridge) and
+  * every table write in `ops/Compaction.scala`, table-property DDL in
+  * `ops/TableProps.scala`, every lineage cut in `ops/Caching.scala`;
+  * keeps MLlib clustering in its one comparator (`ann/MlLsh.scala`),
+  * the logistic-regression fit in `text/Linear.scala`, the id-modulus
+  * training gate in `ops/Sampling.scala` and concurrent job submission
   * in `ops/Concurrency.scala`; keeps the MinHash signature's one
   * definition in its kernel (`expressions/MinhashSignature.scala`) and
   * the shingle explode in `Dedup.shingleSet`; and keeps the library
@@ -128,5 +130,21 @@ class StructureLintSpec extends AnyFunSuite {
     assert(dirs.forall(_.isDirectory), s"missing library package: ${dirs.filterNot(_.isDirectory)}")
     val hits = matches(dirs.flatMap(sources), Seq("System.err"))
     if (hits.nonEmpty) fail(s"System.err in library code:\n${hits.mkString("\n")}")
+  }
+
+  test("every table write goes through ops/Compaction.scala") {
+    val hits = offenders("ops/Compaction.scala", Seq(".saveAsTable("))
+    if (hits.nonEmpty) fail(s"saveAsTable outside Compaction:\n${hits.mkString("\n")}")
+  }
+
+  test("MLlib logistic regression is fitted only by text/Linear.scala") {
+    assert(sources(mainRoot).exists(_.getName == "Linear.scala"))
+    val hits = offenders("text/Linear.scala", Seq("LogisticRegression"))
+    if (hits.nonEmpty) fail(s"LogisticRegression outside Linear:\n${hits.mkString("\n")}")
+  }
+
+  test("the id-modulus training gate lives only in ops/Sampling.scala") {
+    val hits = offenders("ops/Sampling.scala", Seq("% math.round(1.0 /"))
+    if (hits.nonEmpty) fail(s"id gate outside Sampling:\n${hits.mkString("\n")}")
   }
 }
